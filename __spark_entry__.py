@@ -689,7 +689,7 @@ def queries() -> dict[str, Query]:
     return {
         # -- (b) the 16 entries whose reachable functions the r12
         #    optimization round edited (advice fixes: bm25_scores query
-        #    dedupe, PPJoin relative slack, opt_checkpoint env parsing,
+        #    dedupe, PPJoin relative slack, checkpoint env-switch parsing,
         #    legacy A/B shape removal) — re-windowed regardless of cohort
         "dedup_incremental_indexed": _dedup_incremental_indexed,
         "index_validate": _index_validate,

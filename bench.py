@@ -36,6 +36,9 @@ def main() -> None:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.driver.memory", "8g")
         .config("spark.sql.session.timeZone", "UTC")
+        # executors import resin_spark whatever the driver's cwd
+        .config("spark.executorEnv.PYTHONPATH",
+                os.path.dirname(os.path.abspath(__file__)))
         # no console progress bars: the driver captures a bounded tail
         # of output, and r4's progress noise truncated the JSON line
         .config("spark.ui.showConsoleProgress", "false")

@@ -33,7 +33,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
-from resin_spark.functions.ckpt import opt_checkpoint
 from resin_spark.functions import text as T
 from resin_spark.functions import vectors as V
 
@@ -463,8 +462,7 @@ def simhash(docs: DataFrame, text_col: str = "text",
     order-independent, so the fingerprint is bit-identical (A/B at
     sf0.1: exceptAll 0 both ways; 0.83 s → 0.35 s min, 2.4×).
     (The RESIN_NOROWLOCAL legacy-explode A/B shape was removed after
-    the r11 measurement round; evidence in OPTIMIZATION_r11.md and
-    tools/exp_simhash_rowlocal.py.)
+    the r11 measurement round; evidence in OPTIMIZATION_r11.md.)
     """
     powers = F.array(*[F.lit(1 << j).cast("long") for j in range(N_BITS)])
     if base is not None:

@@ -29,7 +29,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from resin_spark.functions.ckpt import opt_checkpoint
 from resin_spark.functions import text as T
 
 Tables = dict[str, DataFrame]
@@ -241,7 +240,7 @@ def source_overlap_matrix(docs: DataFrame,
     # feeds the per-source sizes AND both sides of the overlap
     # self-join — three branches that would each re-run the shingle
     # explode + distinct. Materialises the deduped shingle keys only.
-    sh = opt_checkpoint(_source_shingles(docs, n), "overlap")
+    sh = _source_shingles(docs, n).localCheckpoint(eager=False)
     sizes = (
         docs.select("source").distinct()
         .join(sh.groupBy("source").agg(F.count(F.lit(1)).alias("n_sh")),
@@ -566,7 +565,7 @@ def vocab_coverage(docs: DataFrame, v: int = COVERAGE_V) -> DataFrame:
         .groupBy("source", "term")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    st = opt_checkpoint(st, "vocab")
+    st = st.localCheckpoint(eager=False)
     vocab = (
         st.groupBy("term").agg(F.sum("cnt").alias("tot"))
         .orderBy(F.col("tot").desc(), "term").limit(v)

@@ -12,7 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from resin_spark.functions.ckpt import opt_checkpoint
 from resin_spark.functions import text as T
 import os
 
@@ -1085,9 +1084,10 @@ def source_divergence(docs: DataFrame,
     # per-source totals, the corpus marginals AND the final KL join —
     # three independent branches that would each re-run the token
     # explode + count shuffle. Vocabulary-sized materialisation.
-    st = opt_checkpoint(
-        toks.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("c_st")),
-        "div")
+    st = (
+        toks.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("c_st"))
+        .localCheckpoint(eager=False)
+    )
     s_tot = st.groupBy("source").agg(
         F.sum("c_st").alias("n_s"),
         F.count(F.lit(1)).alias("n_distinct"))

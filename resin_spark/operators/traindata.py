@@ -43,7 +43,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from resin_spark.functions.ckpt import opt_checkpoint
 from resin_spark.functions import exact, text as T
 from resin_spark.functions import vectors as V
 from resin_spark.operators.dedup import _token_hash60, _token_hash60_sql
@@ -953,9 +952,10 @@ def nb_model_frames(docs: DataFrame, with_counts: bool = False,
     # localCheckpoint (r11): priors feeds both the total aggregate and
     # the cand join — each branch would otherwise re-run the corpus
     # tokenize behind it. |langs| rows materialised.
-    priors = opt_checkpoint(
-        base.groupBy("lang").agg(F.count(F.lit(1)).alias("docs_lang")),
-        "priors")
+    priors = (
+        base.groupBy("lang").agg(F.count(F.lit(1)).alias("docs_lang"))
+        .localCheckpoint(eager=False)
+    )
     total = priors.agg(F.sum("docs_lang").alias("docs_total"))
     cand = (
         priors.join(broadcast(total)).join(n_lang, "lang")
@@ -1532,7 +1532,7 @@ def corpus_stats(t: Tables, base: DataFrame | None = None) -> DataFrame:
         # each re-run the corpus tokenize. Two scalar columns per doc.
         # (With a shared base the recompute is a cheap map over cached
         # blocks — no checkpoint needed.)
-        lens = opt_checkpoint(lens, "lens")
+        lens = lens.localCheckpoint(eager=False)
     toks = arrays.select(F.explode("tk").alias("tok"))
     tok_agg = toks.agg(
         F.count(F.lit(1)).alias("n_tokens"),
@@ -1692,13 +1692,13 @@ def lang_stats(t: Tables, base: DataFrame | None = None) -> DataFrame:
     # checkpoint in both modes — it saves a real aggregation.)
     lens = b.select("lang", F.size("tk").cast("long").alias("n_tok"))
     if base is None:
-        lens = opt_checkpoint(lens, "langlens")
+        lens = lens.localCheckpoint(eager=False)
     toks = b.select("lang", F.explode("tk").alias("tok"))
     tok_agg = toks.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.countDistinct("tok").alias("vocab"),
     )
-    tok_agg = opt_checkpoint(tok_agg, "langtok")
+    tok_agg = tok_agg.localCheckpoint(eager=False)
     hist = lens.groupBy("lang", "n_tok").agg(F.count(F.lit(1)).alias("c"))
     wcum = Window.partitionBy("lang").orderBy("n_tok").rowsBetween(
         Window.unboundedPreceding, Window.currentRow)
@@ -1965,7 +1965,7 @@ def lang_confusion(t: Tables, base: DataFrame | None = None) -> DataFrame:
         .groupBy("true_lang", "pred_lang")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
-    per = opt_checkpoint(per, "conf")
+    per = per.localCheckpoint(eager=False)
     tot = per.groupBy("true_lang").agg(F.sum("n_docs").alias("n_true"))
     return (
         per.join(tot, "true_lang")

@@ -12,9 +12,14 @@ import os
 
 from pyspark.sql import SparkSession
 
+# The directory holding the resin_spark package: Python workers get it on
+# their PYTHONPATH, so the UDFs' module imports resolve whatever the
+# driver's cwd is.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-def get_spark(app_name: str = "resin_spark", master: str | None = None,
-              shuffle_partitions: int | None = None) -> SparkSession:
+
+def get_spark(app_name: str = "resin_spark",
+              master: str | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
@@ -23,8 +28,6 @@ def get_spark(app_name: str = "resin_spark", master: str | None = None,
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("RESIN_SPARK_SHUFFLE_PARTITIONS", "32"))
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -33,7 +36,7 @@ def get_spark(app_name: str = "resin_spark", master: str | None = None,
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", "32")
         # Arrow for every pandas_udf / mapInPandas exchange.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
@@ -46,5 +49,6 @@ def get_spark(app_name: str = "resin_spark", master: str | None = None,
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("RESIN_SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     return builder.getOrCreate()

@@ -9,7 +9,7 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 entry_mod = importlib.import_module("__spark_entry__")
 
 from tests.oracle_util import compare  # noqa: E402

@@ -1,10 +1,12 @@
 """Mechanical sf1 regression gate (r10 — the BASELINE.md two-tier
 methodology's cost-leader half, as ONE command).
 
-Re-measures every standing sf1 row (the decade-step readings from
-tools/sweep_sf1_r8/r9/r10.py, consolidated here with the same corpora
-axes and min-of-2-after-warm methodology) and compares each against
-the committed expectation in BASELINE_SF1.json at the 1.5x gate.
+Re-measures every standing sf1 row (the r8-r10 decade-step readings
+in SCALING.md, consolidated here with the same corpora axes and
+min-of-2-after-warm methodology) and compares each against the
+committed expectation in BASELINE_SF1.json at the 1.5x gate. The 10x
+corpus builders below are the ones those sweeps used, so the gate
+keeps measuring the same corpora.
 
 Usage:
   python tools/check_sf1_gate.py            # measure, compare, exit 1 on breach
@@ -14,7 +16,7 @@ Usage:
 Don't run concurrently with bench.py or another Spark job — both grab
 local[32] and the point of the sf1 tier is session-stable numbers.
 index_validate is not gated here by design (I/O-dominated scratch
-writes; tools/sweep_validate.py r5). dedup_embedding's expectation
+writes; SCALING.md's r5 validator sweep). dedup_embedding's expectation
 carries the pair-volume adjudication (SCALING.md r10) — its gate
 compares wall like every other row; the axis is fixed so the pair
 volume is too.
@@ -30,22 +32,110 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
-from resin_spark.io import load_tables, read_warc
+from resin_spark.io import load_tables, read_warc, warc_segment_bytes
 from resin_spark.operators import (dedup, extract, health, kv, pipeline,
                                    retrieval, similarity, textindex as ti,
                                    textops, traindata)
 from resin_spark.plans import tpch
 from resin_spark.session import get_spark
-from sweep_sf1_r8 import docs_10x, emb_10x, noop, timed  # noqa: E402
-from sweep_sf1_r10 import _crawl, rep10  # noqa: E402
 
 GATE = 1.5
 EXPECT_PATH = os.path.join(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))), "BASELINE_SF1.json")
+
+M = 10
+DOC_OFFSET = 10_000_000
+VEC_OFFSET = 10_000_000
+KEY_OFFSET = 100_000_000
+
+
+def docs_10x(docs):
+    out = docs
+    for r in range(1, M):
+        out = out.unionByName(
+            docs.withColumn("doc_id", F.col("doc_id") + r * DOC_OFFSET)
+            .withColumn("text", F.concat_ws(" ", "text",
+                                            F.lit(f"replica{r}"))))
+    return out.localCheckpoint(eager=True)
+
+
+def emb_10x(emb, dims: int = 64):
+    """Replica r's vectors shift along basis direction (r mod dims) by
+    2.0 (the testdata vectors are ~unit scale), so cross-replica cosine
+    falls well below the semantic thresholds while within-replica
+    neighborhoods survive."""
+    out = emb
+    for r in range(1, M):
+        j = r % dims
+        out = out.unionByName(
+            emb.withColumn("vec_id", F.col("vec_id") + r * VEC_OFFSET)
+            .withColumn(
+                "embedding",
+                F.transform(
+                    "embedding",
+                    lambda x, i: (x + F.when(i == F.lit(j), F.lit(2.0))
+                                  .otherwise(F.lit(0.0))).cast("float"),
+                )))
+    return out.localCheckpoint(eager=True)
+
+
+def rep10(df, *key_cols):
+    """10x replication with coherent key offsets: every replica's keys
+    shift together, so join/semi/anti match structure per replica is
+    identical to the 1x corpus (pair volume grows linearly)."""
+    out = df
+    for r in range(1, M):
+        rep = df
+        for k in key_cols:
+            rep = rep.withColumn(k, F.col(k) + r * KEY_OFFSET)
+        out = out.unionByName(rep)
+    return out.localCheckpoint(eager=True)
+
+
+def _crawl(root: str, n_segments: int, pages_per_seg: int) -> str:
+    """Synthetic member-gzip crawl (shared nav/footer chrome +
+    page-unique prose)."""
+    chrome = ("<nav>" + " | ".join(f'<a href="/s{k}">Section {k}</a>'
+                                   for k in range(8)) + "</nav>")
+    footer = ('<footer>All rights reserved - <a href="/p">Privacy</a>'
+              "</footer>")
+    para = ("the quick brown fox jumps over the lazy dog while a "
+            "crawler collects paragraphs of visible text ")
+    os.makedirs(root, exist_ok=True)
+    for seg in range(n_segments):
+        recs = []
+        for i in range(pages_per_seg):
+            body = ("<html><head><title>P%d-%d</title></head><body>%s%s%s"
+                    "</body></html>" % (
+                        seg, i, chrome,
+                        "".join(f"<p>{para * 3} #{seg}-{i}-{k}</p>"
+                                for k in range(8)),
+                        footer)).encode()
+            recs.append((f"https://host{seg}.example/p{i}",
+                         b"HTTP/1.1 200 OK\r\nContent-Type: text/html; "
+                         b"charset=utf-8\r\n\r\n" + body))
+        with open(os.path.join(root, f"seg-{seg:05d}.warc.gz"), "wb") as fh:
+            fh.write(warc_segment_bytes(recs))
+    return os.path.join(root, "*.warc.gz")
+
+
+def timed(fn):
+    """min-of-2 after a discarded warm run (bench.py methodology)."""
+    fn()
+    best = None
+    for _ in range(2):
+        t0 = time.monotonic()
+        fn()
+        el = time.monotonic() - t0
+        best = el if best is None else min(best, el)
+    return best
+
+
+def noop(df):
+    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:

@@ -17,14 +17,16 @@ Usage: python tools/deep_fuzz_driver.py [n_corpora] [seed0]
 from __future__ import annotations
 
 import math
+import os
 import random
 import sys
 import tempfile
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests"))
 
 from resin_spark.session import get_spark  # noqa: E402
 

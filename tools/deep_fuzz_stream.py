@@ -41,13 +41,15 @@ from __future__ import annotations
 
 import datetime as dt
 import math
+import os
 import random
 import shutil
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests"))
 
 from pyspark.sql import functions as F  # noqa: E402
 
