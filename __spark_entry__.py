@@ -741,7 +741,6 @@ def queries() -> dict[str, Query]:
         "cms_heavy_hitters": _mk_text(sketch.cms_heavy_hitters),
         "agg_rollup": _rollup,
         "q1_pricing_summary": _q1,
-        "session_overlap": _mk_text(timeseries.session_overlap),
         # -- (b, second r12 session) the two persisted-ANN entries whose
         #    reachable _probe_dims gained the per-plan memo (742bd74):
         #    swapped INTO the window for re-verification; the two
@@ -749,8 +748,15 @@ def queries() -> dict[str, Query]:
         #    block below (16 -> 18, same written exception)
         "ann_topk_lsh_indexed": _ann_topk_lsh_indexed,
         "ann_topk_ivf_indexed": _ann_topk_ivf_indexed,
-        "kmv_distinct": _mk_text(sketch.kmv_distinct),
+        # -- (b) the two entries reaching dedup.exact_dedup, which lost
+        #    its unused text_col/id_col knobs: swapped INTO the window;
+        #    the two r12-checked entries they displaced open the tail
+        "dedup_exact": _dedup_exact,
+        "pipeline_curate": _mk_text(textops.pipeline_curate),
         # ---- tail: past the 50-entry window from here down ----
+        # green in CORRECTNESS_r12, AST-identical to that checked form
+        "session_overlap": _mk_text(timeseries.session_overlap),
+        "kmv_distinct": _mk_text(sketch.kmv_distinct),
         # r12 DELIBERATE CONTRACT EXCEPTION (plan_window 210aee4 read
         # INFEASIBLE: 16 edited + 50 due = 66 > 50; +2 in the second
         # session when the _probe_dims memo re-windowed the two
@@ -780,7 +786,6 @@ def queries() -> dict[str, Query]:
         "synthesize_tokens": _synthesize_tokens,
         "string_compare": _string_compare,
         "unicode_range": _mk_text(textops.unicode_range),
-        "dedup_exact": _dedup_exact,
         # -- the r11-checked cohort (green in CORRECTNESS_r11, reachable
         #    functions AST-identical to that checked form — audit_window
         #    adjudicated)
@@ -803,7 +808,6 @@ def queries() -> dict[str, Query]:
         "events_retention": _mk_text(timeseries.retention),
         "text_quality_score": _mk_text(textops.quality_score),
         "quality_repetition": _mk_text(pipeline.quality_repetition),
-        "pipeline_curate": _mk_text(textops.pipeline_curate),
         "tfidf_topterms": _mk_text(textops.tfidf_topterms),
         "q3_shipping_priority": _q3,
         "q5_local_supplier": _q5,

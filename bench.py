@@ -65,8 +65,8 @@ def main() -> None:
         spark.range(0, 10000, 1, int(cpus)).select(
             _warm(col("id").cast("double"))
         ).write.format("noop").mode("overwrite").save()
-    except Exception:
-        pass
+    except Exception as e:
+        sys.stderr.write(f"warm-up FAILED: {e}\n")
 
     import gc
 
@@ -90,11 +90,21 @@ def main() -> None:
 
     CONTROL_EVERY = 10
     control_samples: list[float] = []
-    try:
-        _control_sample()  # one discarded warm run, same as queries
-        control_samples.append(_control_sample())
-    except Exception:
-        pass
+    control_failed = 0
+
+    def _control(keep: bool = True) -> None:
+        nonlocal control_failed
+        try:
+            el = _control_sample()
+        except Exception as e:
+            control_failed += 1
+            sys.stderr.write(f"control probe FAILED: {e}\n")
+            return
+        if keep:
+            control_samples.append(el)
+
+    _control(keep=False)  # one discarded warm run, same as queries
+    _control()
 
     RUNS = 2  # min-of-N AFTER one discarded warm run: per-query steady
     # state, independent of dict position. Round 3 measured the warm-up
@@ -110,10 +120,7 @@ def main() -> None:
     timed_runs: dict[str, int] = {}
     for qi, (name, fn) in enumerate(queries.items()):
         if qi and qi % CONTROL_EVERY == 0:
-            try:
-                control_samples.append(_control_sample())
-            except Exception:
-                pass
+            _control()
         # Release the previous query's lineage before timing this one:
         # localCheckpoint RDDs (dedup loops, PPJoin index) stay pinned in
         # executor memory until their Python DataFrames are collected, and
@@ -141,18 +148,16 @@ def main() -> None:
             run += 1
         timings[name] = round(best, 3)
 
-    try:
-        control_samples.append(_control_sample())
-    except Exception:
-        pass
+    _control()
     control = None
-    if control_samples:
+    if control_samples or control_failed:
         cs = sorted(control_samples)
         control = {
             "n": len(cs),
-            "min": round(cs[0], 3),
-            "med": round(cs[len(cs) // 2], 3),
-            "max": round(cs[-1], 3),
+            "min": round(cs[0], 3) if cs else None,
+            "med": round(cs[len(cs) // 2], 3) if cs else None,
+            "max": round(cs[-1], 3) if cs else None,
+            "failed": control_failed,
         }
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)

@@ -15,7 +15,7 @@ reference's Unicode-category SplitWords rule.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
@@ -40,6 +40,25 @@ def tokens(col: Column | str) -> Column:
     """Token array: lowercase, split on non-alphanumeric runs, no empties."""
     c = F.col(col) if isinstance(col, str) else col
     return F.filter(F.split(F.lower(c), TOKEN_SPLIT_RE), lambda x: x != "")
+
+
+def prepare_documents(docs: DataFrame) -> DataFrame:
+    """The one tokenized-documents shape every text operator reads: the
+    input columns plus ``has_text`` (text is not NULL), ``h``
+    (md5(text)) and ``tk`` (:func:`tokens`). A frame that already
+    carries ``tk`` passes through unchanged, so a caller can prepare
+    (and cache) the corpus once and hand it to several operators —
+    the release cards do, with ``text`` dropped. Standalone, the
+    projection is lazy and each operator's plan prunes the columns it
+    does not read."""
+    if "tk" in docs.columns:
+        return docs
+    return docs.select(
+        "*",
+        F.col("text").isNotNull().alias("has_text"),
+        F.md5("text").alias("h"),
+        tokens("text").alias("tk"),
+    )
 
 
 def tokens_sql(expr: str) -> str:

@@ -137,12 +137,3 @@ def nonzero_overlap_sql(a: str, b: str) -> str:
         f" i -> CASE WHEN {a}[i] <> 0 AND {b}[i] <> 0 THEN 1 ELSE 0 END),"
         " (acc, x) -> acc + x) AS BIGINT)"
     )
-
-
-def nonzero_jaccard_sql(a: str, b: str) -> str:
-    union = (
-        f"list_reduce(list_transform(range(1, len({a}) + 1),"
-        f" i -> CASE WHEN {a}[i] <> 0 OR {b}[i] <> 0 THEN 1 ELSE 0 END),"
-        " (acc, x) -> acc + x)"
-    )
-    return f"({nonzero_overlap_sql(a, b)} / {union})"

@@ -115,14 +115,6 @@ def load_tables(spark: SparkSession, sf_dir: str,
     return LazyTables(spark, sf_dir, names)
 
 
-def register_views(spark: SparkSession, sf_dir: str,
-                   names: tuple[str, ...] = TABLE_NAMES) -> None:
-    """Register each table as a temp view for spark.sql usage."""
-    tables = load_tables(spark, sf_dir, names)
-    for name in names:
-        tables[name].createOrReplaceTempView(name)
-
-
 def read_cirrussearch(spark: SparkSession, path: str, fields: list[str],
                       url_format: str = "https://en.wikipedia.org/wiki/{}",
                       take: int | None = None) -> DataFrame:

@@ -42,14 +42,13 @@ HEX = "0123456789abcdef"
 
 # --- D1: exact ---------------------------------------------------------------
 
-def exact_dedup(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Keep the min-id row per md5(content); report group size."""
     return (
-        docs.select(F.col(id_col), F.md5(F.col(text_col)).alias("content_hash"))
+        docs.select("doc_id", F.md5("text").alias("content_hash"))
         .groupBy("content_hash")
         .agg(
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
         .orderBy("keep_id")
@@ -65,24 +64,14 @@ def exact_dedup_oracle() -> str:
 
 # --- shared shingles ---------------------------------------------------------
 
-def shingles(docs: DataFrame, n: int = 3, text_col: str = "text",
-             id_col: str = "doc_id",
-             base: DataFrame | None = None) -> DataFrame:
+def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, shingle) with distinct word-n-gram shingles per doc.
 
-    Tokenisation is projected once before the window transform so the
-    regex tokenizer isn't re-evaluated per reference in the filter and
-    gram expressions. ``base`` (r12) optionally reuses a caller-cached
-    (doc_id, tk) tokenize; only valid with the default columns."""
-    if base is not None:
-        assert text_col == "text" and id_col == "doc_id"
-        base = base.select("doc_id", "tk").filter(F.size("tk") >= n)
-    else:
-        base = (
-            docs.select(F.col(id_col).alias("doc_id"),
-                        T.tokens(text_col).alias("tk"))
-            .filter(F.size("tk") >= n)
-        )
+    Tokenisation is projected once (``T.prepare_documents``) before the
+    window transform so the regex tokenizer isn't re-evaluated per
+    reference in the filter and gram expressions."""
+    base = (T.prepare_documents(docs).select("doc_id", "tk")
+            .filter(F.size("tk") >= n))
     grams = F.transform(
         F.sequence(F.lit(0), F.size("tk") - n),
         lambda i: F.concat_ws(
@@ -105,8 +94,8 @@ def _shingles_sql(n: int = 3) -> str:
 
 # --- D2: exact n-gram jaccard ------------------------------------------------
 
-def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, tau: float = 0.5,
-                        base: DataFrame | None = None) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
+                        tau: float = 0.5) -> DataFrame:
     """All (i<j) pairs with exact shingle-set Jaccard ≥ tau.
 
     AllPairs/PPJoin-style prefix filtering keeps the result exact while
@@ -128,7 +117,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, tau: float = 0.5,
     # (p < 1e-10 at 10^9 distinct shingles). The canonical rarest-first
     # order is (df, hash) — any total order shared by all docs
     # satisfies the prefix lemma.
-    sh = shingles(docs, n, base=base).select(
+    sh = shingles(docs, n).select(
         "doc_id", F.xxhash64("shingle").alias("h"))
     dfreq = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     # One aggregate yields the rarity-ordered hash list, the prefix
@@ -200,7 +189,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, tau: float = 0.5,
     # (shingle_hash_sets): the per-doc hash set is a projection, so the
     # verify branches no longer re-run the shingle explode + a
     # collect_list aggregate at all.
-    sets = shingle_hash_sets(docs, n, base=base)
+    sets = shingle_hash_sets(docs, n)
     sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("hashes").alias("set_a"))
     sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("hashes").alias("set_b"))
     return (
@@ -300,9 +289,7 @@ def shingle_hashes_from_tokens(tk_col: str, n: int = 3):
     ).otherwise(F.array().cast("array<long>"))
 
 
-def shingle_hash_sets(docs: DataFrame, n: int = 3, text_col: str = "text",
-                      id_col: str = "doc_id",
-                      base: DataFrame | None = None) -> DataFrame:
+def shingle_hash_sets(docs: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, hashes array<long>) — each doc's DISTINCT hashed shingle
     set, computed ROW-LOCALLY (r11): the set is a function of the row's
     own token array (``shingle_hashes_from_tokens``), so the
@@ -318,15 +305,8 @@ def shingle_hash_sets(docs: DataFrame, n: int = 3, text_col: str = "text",
     the r11 measurement round — ADVICE r11: it silently changed
     null-doc_id semantics while claiming to be measurement-only; the
     A/B evidence lives in OPTIMIZATION_r11.md.)"""
-    if base is not None:
-        # shared card base (r12): cached (doc_id, tk), default columns.
-        assert text_col == "text" and id_col == "doc_id"
-        src = base.select("doc_id", "tk")
-    else:
-        src = docs.select(F.col(id_col).alias("doc_id"),
-                          T.tokens(text_col).alias("tk"))
     return (
-        src
+        T.prepare_documents(docs).select("doc_id", "tk")
         # pre-filter on the INPUT size — equivalent to the explode
         # path's drop (hashes is empty iff size(tk) < n) and crucially
         # NOT a filter on the computed array: size(hashes) > 0 would
@@ -448,9 +428,7 @@ def _token_hash60_sql(expr: str) -> str:
     )
 
 
-def simhash(docs: DataFrame, text_col: str = "text",
-            id_col: str = "doc_id",
-            base: DataFrame | None = None) -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """60-bit simhash over distinct tokens (weight 1 per token).
 
     Computed ROW-LOCALLY (r11): the fingerprint depends only on the
@@ -465,19 +443,11 @@ def simhash(docs: DataFrame, text_col: str = "text",
     the r11 measurement round; evidence in OPTIMIZATION_r11.md.)
     """
     powers = F.array(*[F.lit(1 << j).cast("long") for j in range(N_BITS)])
-    if base is not None:
-        # shared card_base (r12): same (doc_id, tokens(text)) columns,
-        # read from the card's cached tokenize instead of a fresh scan.
-        # Only valid with the default text/id columns.
-        assert text_col == "text" and id_col == "doc_id"
-        base = base.select("doc_id", "tk").filter(F.size("tk") >= 1)
-    else:
-        base = (
-            docs.select(F.col(id_col).alias("doc_id"),
-                        T.tokens(text_col).alias("tk"))
-            # explode-drop parity: zero-token docs carry no fingerprint
-            .filter(F.size("tk") >= 1)
-        )
+    base = (
+        T.prepare_documents(docs).select("doc_id", "tk")
+        # explode-drop parity: zero-token docs carry no fingerprint
+        .filter(F.size("tk") >= 1)
+    )
     hs = F.transform(F.array_distinct(F.col("tk")), _token_hash60)
     counts = F.aggregate(
         hs,
@@ -600,8 +570,8 @@ DEDUP_EDGE_COLLECT_CAP = 1_000_000
 
 def dedup_components(docs: DataFrame, max_hamming: int = 3,
                      max_iters: int = 25,
-                     edge_collect_cap: int = DEDUP_EDGE_COLLECT_CAP,
-                     base: DataFrame | None = None) -> DataFrame:
+                     edge_collect_cap: int = DEDUP_EDGE_COLLECT_CAP
+                     ) -> DataFrame:
     """Collapse pairwise near-dup hits into canonical clusters: every doc
     gets the min doc_id of its duplicate component (the keeper) — what a
     training-data pipeline actually consumes, since pairwise output
@@ -635,10 +605,8 @@ def dedup_components(docs: DataFrame, max_hamming: int = 3,
     # routing join) and its subtree ends in the wide 60-agg groupBy —
     # the checkpoint-worthy shape (SCALING.md rule; simhash_pairs does
     # the same): materialise once instead of re-fingerprinting the
-    # corpus. Measured 4.5 s → 3.6 s warm at sf0.1. ``base`` (r12) is
-    # the optional shared card tokenize (see card_base); rows are
-    # identical either way.
-    sims = simhash(docs, base=base).localCheckpoint(eager=False)
+    # corpus. Measured 4.5 s → 3.6 s warm at sf0.1.
+    sims = simhash(docs).localCheckpoint(eager=False)
     nodes = (
         sims.groupBy("simhash").agg(F.min("doc_id").alias("rep"))
         .localCheckpoint(eager=False)
@@ -776,9 +744,8 @@ def dedup_components(docs: DataFrame, max_hamming: int = 3,
     # the contract is one row per DOCUMENT (the oracle's walk seeds from
     # the documents table): re-join them as their own singleton
     # components (tests/test_edge_docs.py docs 1/2/5).
-    id_src = base if base is not None else docs
     return (
-        id_src.select("doc_id").join(comp, "doc_id", "left")
+        docs.select("doc_id").join(comp, "doc_id", "left")
         .select(
             "doc_id",
             F.coalesce("component", "doc_id").alias("component"),
@@ -1332,8 +1299,7 @@ def append_dedup_index(new_docs: DataFrame, path: str, n: int = 3,
         .partitionBy("band").parquet(f"{path}/bands")
 
 
-def dup_cluster_histogram(docs: DataFrame, max_hamming: int = 3,
-                          base: DataFrame | None = None) -> DataFrame:
+def dup_cluster_histogram(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Duplicate-cluster size distribution — the one-page corpus card
     over dedup_components (dedup.py:503): (cluster_size, n_clusters,
     n_docs, doc_share). cluster_size 1 = unique docs; the heavy tail
@@ -1345,7 +1311,7 @@ def dup_cluster_histogram(docs: DataFrame, max_hamming: int = 3,
     component relation's audited plan. The histogram itself is at most
     |distinct sizes| rows.
     """
-    comp = dedup_components(docs, max_hamming, base=base)
+    comp = dedup_components(docs, max_hamming)
     sizes = comp.groupBy("component").agg(
         F.count(F.lit(1)).alias("cluster_size"))
     hist = sizes.groupBy("cluster_size").agg(
@@ -1396,8 +1362,8 @@ CURVE_N = 3
 
 
 def dedup_threshold_curve(docs: DataFrame, n: int = CURVE_N,
-                          thresholds: tuple[float, ...] = CURVE_THRESHOLDS,
-                          base: DataFrame | None = None) -> DataFrame:
+                          thresholds: tuple[float, ...] = CURVE_THRESHOLDS
+                          ) -> DataFrame:
     """Duplicate-mass curve: for each Jaccard threshold t, how many
     exact shingle-Jaccard pairs reach t and how much of the corpus is
     entangled in them — (threshold, n_pairs, n_docs_in_pairs,
@@ -1425,7 +1391,7 @@ def dedup_threshold_curve(docs: DataFrame, n: int = CURVE_N,
     # card): AQE reuses the identical PPJoin exchange stages across the
     # two grid-aggregate branches at runtime, so a localCheckpoint here
     # only adds a materialisation barrier.
-    pairs = ngram_jaccard_pairs(docs, n, base_tau, base=base).select(
+    pairs = ngram_jaccard_pairs(docs, n, base_tau).select(
         "doc_a", "doc_b", "jaccard")
     th = spark.createDataFrame([(float(t),) for t in thresholds],
                                "threshold double")
@@ -1456,9 +1422,8 @@ def dedup_threshold_curve(docs: DataFrame, n: int = CURVE_N,
     )
 
 
-def dedup_threshold_curve_demo(t: dict,
-                               base: DataFrame | None = None) -> DataFrame:
-    return dedup_threshold_curve(t["documents"], base=base)
+def dedup_threshold_curve_demo(t: dict) -> DataFrame:
+    return dedup_threshold_curve(t["documents"])
 
 
 def dedup_threshold_curve_oracle(n: int = CURVE_N,

@@ -503,8 +503,8 @@ FUNNEL_MIN_DISTINCT_FRAC = 0.3
 
 
 def filter_funnel(t: Tables, min_tokens: int = FUNNEL_MIN_TOKENS,
-                  min_distinct_frac: float = FUNNEL_MIN_DISTINCT_FRAC,
-                  base: DataFrame | None = None) -> DataFrame:
+                  min_distinct_frac: float = FUNNEL_MIN_DISTINCT_FRAC
+                  ) -> DataFrame:
     """Per-stage attrition sheet for a five-stage curation stack — the
     "data card" table every released pretraining corpus publishes
     (Dolma/RefinedWeb style): how many docs and tokens survive each
@@ -530,24 +530,10 @@ def filter_funnel(t: Tables, min_tokens: int = FUNNEL_MIN_TOKENS,
     exactly how a real pipeline's attrition is reported.
     """
     langs = sorted(T.LANG_PROFILES)
-    if base is not None:
-        # shared card_base (r12): h = md5(text), tk = tokens(text) and
-        # the text-presence flag are carried by the cached base; the
-        # per-doc expressions below are unchanged.
-        d = base.select("doc_id", "has_text", "lang", "h", "tk").select(
-            "*",
-            F.coalesce(F.size("tk").cast("bigint"), F.lit(0)).alias("nt"),
-        )
-    else:
-        tk = T.tokens("text")
-        d = t["documents"].select(
-            "doc_id",
-            F.col("text").isNotNull().alias("has_text"),
-            "lang", tk.alias("tk"), F.md5("text").alias("h"),
-        ).select(
-            "*",
-            F.coalesce(F.size("tk").cast("bigint"), F.lit(0)).alias("nt"),
-        )
+    d = T.prepare_documents(t["documents"]).select(
+        "doc_id", "has_text", "lang", "h", "tk",
+        F.coalesce(F.size("tk").cast("bigint"), F.lit(0)).alias("nt"),
+    )
     for lang in langs:
         d = d.withColumn(f"m_{lang}",
                          T.stopword_count(F.col("tk"), T.LANG_PROFILES[lang]))
@@ -934,8 +920,7 @@ def corpus_delta_demo_oracle() -> str:
 MIX_BUDGET = 1_000_000
 
 
-def mixture_plan(docs: DataFrame, budget: int = MIX_BUDGET,
-                 base: DataFrame | None = None) -> DataFrame:
+def mixture_plan(docs: DataFrame, budget: int = MIX_BUDGET) -> DataFrame:
     """Per-source resampling plan for a token-budgeted training run —
     the step after domain_mix (pipeline.py:408): normalise the
     temperature weights, allocate the budget, and report how many
@@ -955,15 +940,9 @@ def mixture_plan(docs: DataFrame, budget: int = MIX_BUDGET,
     |sources| groups + a broadcast single-row total; the plan relation
     itself is |sources| rows.
     """
-    # shared card base (r12): size(tk) over the cached tokenize is the
-    # same nt the standalone tokenize computes; the caller pre-applies
-    # any row filter to ``base`` exactly as it would to ``docs``.
-    nt_src = (base.select("source", F.size("tk").cast("long").alias("nt"))
-              if base is not None else
-              docs.select("source",
-                          F.size(T.tokens("text")).cast("long").alias("nt")))
     per = (
-        nt_src
+        T.prepare_documents(docs)
+        .select("source", F.size("tk").cast("long").alias("nt"))
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("nt").alias("n_tokens"))
         .withColumn("w", F.round(F.sqrt("n_tokens"), 6).cast("decimal(28,6)"))
@@ -993,14 +972,11 @@ def mixture_plan(docs: DataFrame, budget: int = MIX_BUDGET,
     )
 
 
-def mixture_plan_demo(t: Tables, base: DataFrame | None = None) -> DataFrame:
+def mixture_plan_demo(t: Tables) -> DataFrame:
     """mixture_plan over the documents table at MIX_BUDGET — the
     driver-checkable form; the library API is mixture_plan(docs,
-    budget). ``base`` (r12) optionally reuses a cached card tokenize."""
-    return mixture_plan(
-        t["documents"].filter(F.col("doc_id").isNotNull()),
-        base=(base.filter(F.col("doc_id").isNotNull())
-              if base is not None else None))
+    budget)."""
+    return mixture_plan(t["documents"].filter(F.col("doc_id").isNotNull()))
 
 
 def mixture_plan_demo_oracle(budget: int = MIX_BUDGET) -> str:
@@ -1037,8 +1013,7 @@ def mixture_plan_demo_oracle(budget: int = MIX_BUDGET) -> str:
     """
 
 
-def source_divergence(docs: DataFrame,
-                      base: DataFrame | None = None) -> DataFrame:
+def source_divergence(docs: DataFrame) -> DataFrame:
     """Per-source unigram KL divergence from the corpus distribution —
     KL(source ‖ corpus) in bits: the quantitative "which source is the
     odd one out" card behind mixture decisions (a source whose token
@@ -1067,19 +1042,11 @@ def source_divergence(docs: DataFrame,
     marginals, one join back on tok (Zipf-skewed — AQE territory),
     |sources| output rows. The NB model-build shape.
     """
-    if base is not None:
-        # shared card base (r12): same filters via the precomputed
-        # has_text flag; tk is the cached tokens(text).
-        toks = (
-            base.filter(F.col("doc_id").isNotNull() & F.col("has_text"))
-            .select("source", F.explode("tk").alias("tok"))
-        )
-    else:
-        toks = (
-            docs.filter(F.col("doc_id").isNotNull()
-                        & F.col("text").isNotNull())
-            .select("source", F.explode(T.tokens("text")).alias("tok"))
-        )
+    toks = (
+        T.prepare_documents(docs)
+        .filter(F.col("doc_id").isNotNull() & F.col("has_text"))
+        .select("source", F.explode("tk").alias("tok"))
+    )
     # localCheckpoint (r11): the (source, tok) count frame feeds the
     # per-source totals, the corpus marginals AND the final KL join —
     # three independent branches that would each re-run the token
@@ -1169,8 +1136,7 @@ def mixture_copy_count(rate_col, salt: str = MIX_SALT):
 
 def apply_mixture(docs: DataFrame, budget: int = MIX_BUDGET,
                   salt: str = MIX_SALT,
-                  plan: DataFrame | None = None,
-                  base: DataFrame | None = None) -> DataFrame:
+                  plan: DataFrame | None = None) -> DataFrame:
     """Materialise mixture_plan deterministically: per document,
     (doc_id, source, n_copies) — how many epochs this doc appears in a
     training run that realises its source's sampling_rate. Every doc
@@ -1196,17 +1162,10 @@ def apply_mixture(docs: DataFrame, budget: int = MIX_BUDGET,
     # ``plan`` lets a caller reuse one mixture_plan across plan+execute.
     docs = docs.filter(F.col("doc_id").isNotNull())
     if plan is None:
-        plan = mixture_plan(docs, budget, base=(
-            base.filter(F.col("doc_id").isNotNull())
-            if base is not None else None))
+        plan = mixture_plan(docs, budget)
     plan = plan.select("source", "sampling_rate")
-    # the copy count needs only (doc_id, source): read them from the
-    # cached card base when given (r12), the docs scan otherwise
-    id_src = (base.filter(F.col("doc_id").isNotNull())
-              .select("doc_id", "source")
-              if base is not None else docs)
     return (
-        id_src
+        docs
         .join(F.broadcast(plan), "source", "left")
         .select(
             "doc_id", "source",
@@ -1217,26 +1176,20 @@ def apply_mixture(docs: DataFrame, budget: int = MIX_BUDGET,
 
 
 def apply_mixture_demo(t: Tables, budget: int = MIX_BUDGET,
-                       plan: DataFrame | None = None,
-                       base: DataFrame | None = None) -> DataFrame:
+                       plan: DataFrame | None = None) -> DataFrame:
     """Per-source realisation accounting of apply_mixture vs the plan:
     (source, n_docs, realized_docs, realized_tokens, planned_tokens,
     realization_ratio). The driver-checkable rollup — the per-doc
     relation is the library surface. ``plan`` (r11) optionally reuses a
     precomputed mixture_plan relation (the melt shares one plan across
     its mixture + mixture_applied sections); default self-contained."""
-    docs = t["documents"].filter(F.col("doc_id").isNotNull())
-    fbase = (base.filter(F.col("doc_id").isNotNull())
-             if base is not None else None)
+    docs = T.prepare_documents(
+        t["documents"].filter(F.col("doc_id").isNotNull()))
     # ONE mixture_plan serves both the executor and the accounting join
     # (it was computed twice before — two identical corpus scans)
-    full_plan = (mixture_plan(docs, budget, base=fbase)
-                 if plan is None else plan)
-    copies = apply_mixture(docs, budget, plan=full_plan, base=fbase)
-    toks = (fbase.select("doc_id", F.size("tk").cast("long").alias("nt"))
-            if fbase is not None else
-            docs.select("doc_id",
-                        F.size(T.tokens("text")).cast("long").alias("nt")))
+    full_plan = mixture_plan(docs, budget) if plan is None else plan
+    copies = apply_mixture(docs, budget, plan=full_plan)
+    toks = docs.select("doc_id", F.size("tk").cast("long").alias("nt"))
     plan = full_plan.select("source", "planned_tokens")
     per = (
         copies.join(toks, "doc_id")
@@ -1325,8 +1278,7 @@ CHUNK_OVERLAP = 16
 
 
 def chunk_documents(docs: DataFrame, chunk_tokens: int = CHUNK_TOKENS,
-                    overlap: int = CHUNK_OVERLAP,
-                    base: DataFrame | None = None) -> DataFrame:
+                    overlap: int = CHUNK_OVERLAP) -> DataFrame:
     """Sliding-window chunking WITHIN each document: (doc_id, chunk_id,
     start_pos, n_tokens, chunk_text) with chunks of ``chunk_tokens``
     tokens stepping by ``chunk_tokens − overlap`` — the
@@ -1351,10 +1303,9 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = CHUNK_TOKENS,
             f"overlap={overlap} must be smaller than "
             f"chunk_tokens={chunk_tokens} (the window must advance)")
     step = chunk_tokens - overlap
-    tokenized = (base.select("doc_id", "tk") if base is not None else
-                 docs.select("doc_id", T.tokens("text").alias("tk")))
     base = (
-        tokenized.filter(F.col("doc_id").isNotNull())
+        T.prepare_documents(docs).select("doc_id", "tk")
+        .filter(F.col("doc_id").isNotNull())
         .withColumn("n", F.size("tk"))
         .filter(F.col("n") > 0)
     )
@@ -1380,8 +1331,8 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = CHUNK_TOKENS,
     )
 
 
-def chunk_documents_demo(t: Tables, base: DataFrame | None = None) -> DataFrame:
-    return chunk_documents(t["documents"], base=base)
+def chunk_documents_demo(t: Tables) -> DataFrame:
+    return chunk_documents(t["documents"])
 
 
 def chunk_documents_oracle(chunk_tokens: int = CHUNK_TOKENS,
@@ -1470,8 +1421,7 @@ def _split_sql(id_expr: str) -> str:
             f"WHEN {coin} < '{hi}' THEN 'val' ELSE 'train' END")
 
 
-def dataset_split(docs: DataFrame,
-                  base: DataFrame | None = None) -> DataFrame:
+def dataset_split(docs: DataFrame) -> DataFrame:
     """Per-(source, split) accounting card for the deterministic
     train/val/test assignment: (source, split, n_docs, n_chars,
     doc_share, target_frac) — the sheet a pipeline signs off before
@@ -1486,8 +1436,7 @@ def dataset_split(docs: DataFrame,
     onto |sources|×3 groups; the share window partitions those bounded
     groups only — never the corpus.
     """
-    src = base if base is not None else docs
-    d = src.filter(F.col("doc_id").isNotNull()).select(
+    d = docs.filter(F.col("doc_id").isNotNull()).select(
         "source",
         split_of(F.col("doc_id")).alias("split"),
         F.coalesce(F.col("n_chars").cast("long"), F.lit(0)).alias("nc"),
@@ -2018,9 +1967,6 @@ def curation_tuning_card(t: Tables) -> DataFrame:
 
     from resin_spark.operators.textops import bm25_scores
 
-    from resin_spark.operators.traindata import card_base
-
-    docs = t["documents"]
     # Shared section inputs (r11, the split_governance_card pairs=
     # precedent): the mixture plan feeds BOTH the mixture and
     # mixture_applied sections, and ONE bm25 corpus-scoring relation
@@ -2028,25 +1974,21 @@ def curation_tuning_card(t: Tables) -> DataFrame:
     # bounded relation (|sources| rows / |hit docs| rows), built once
     # and localCheckpointed instead of re-planned per section. Row
     # identity is unchanged (section-equality pins stay the license).
-    #
-    # r12 (the dataset_card precedent, commit bd9d9f4): every section
-    # tokenized the corpus independently — nine scan+tokenize subtrees
-    # whose concurrent materialisation convoys on the same blocks. ONE
-    # eager card_base feeds all of them; each member applies its own
-    # filters on the unfiltered base, so section rows are identical.
-    base = card_base(docs).localCheckpoint(eager=True)
-    plan = mixture_plan_demo(t, base=base).localCheckpoint(eager=False)
-    scores = bm25_scores(t, base=base).localCheckpoint(eager=False)
+    # Every member reads the once-prepared corpus (r12, _card_documents).
+    docs = _card_documents(t)
+    pt = {"documents": docs}
+    plan = mixture_plan_demo(pt).localCheckpoint(eager=False)
+    scores = bm25_scores(pt).localCheckpoint(eager=False)
     sections = {
         "mixture": plan,
-        "mixture_applied": apply_mixture_demo(t, plan=plan, base=base),
-        "divergence": source_divergence(docs, base=base),
-        "lang_confusion": lang_confusion(t, base=base),
-        "cdc_chunks": cdc_chunk_stats(t, base=base),
-        "dedup_curve": dedup_threshold_curve_demo(t, base=base),
-        "snippets": search_snippets(t, scores=scores, base=base),
-        "facets": search_facets(t, scores=scores, base=base),
-        "chunks": chunk_documents_demo(t, base=base),
+        "mixture_applied": apply_mixture_demo(pt, plan=plan),
+        "divergence": source_divergence(docs),
+        "lang_confusion": lang_confusion(pt),
+        "cdc_chunks": cdc_chunk_stats(pt),
+        "dedup_curve": dedup_threshold_curve_demo(pt),
+        "snippets": search_snippets(pt, scores=scores),
+        "facets": search_facets(pt, scores=scores),
+        "chunks": chunk_documents_demo(pt),
     }
     parts = [_melt_typed(sections[name], name, keys)
              for name, keys, _, _ in TUNE_SECTIONS]
@@ -2111,6 +2053,18 @@ def _melt(df: DataFrame, section: str, key_cols: list[str]) -> DataFrame:
     )
 
 
+def _card_documents(t: Tables) -> DataFrame:
+    """The release cards' shared documents input: ONE scan + ONE
+    tokenize (T.prepare_documents without ``text``), materialised
+    EAGERLY so the card's many concurrent broadcast-subtree jobs read
+    cached blocks instead of racing to compute the same lazy lineage
+    (r12 stage profile: 32-task stages at ~95% blocked time,
+    executorRunTime 66 s vs 1.1 s CPU). Every section applies its own
+    filters, so section rows equal the standalone members'."""
+    return (T.prepare_documents(t["documents"]).drop("text")
+            .localCheckpoint(eager=True))
+
+
 def dataset_card(t: Tables) -> DataFrame:
     """The one-page data sheet a release ships next to its shards —
     (section, metric, value) strings melting the audited cards into a
@@ -2125,19 +2079,17 @@ def dataset_card(t: Tables) -> DataFrame:
     adds a trivial row-local explode and a union of five small frames.
     """
     from resin_spark.operators.dedup import dup_cluster_histogram
-    from resin_spark.operators.traindata import (card_base, corpus_stats,
-                                                 lang_stats)
+    from resin_spark.operators.traindata import corpus_stats, lang_stats
 
-    docs = t["documents"]
-    # shared eager tokenize base — see dataset_card_typed (r12)
-    base = card_base(docs).localCheckpoint(eager=True)
+    # shared eager tokenize — see _card_documents (r12)
+    docs = _card_documents(t)
+    pt = {"documents": docs}
     parts = [
-        _melt(corpus_stats(t, base=base), "corpus", []),
-        _melt(lang_stats(t, base=base), "languages", ["lang"]),
-        _melt(filter_funnel(t, base=base), "funnel", ["stage", "stage_name"]),
-        _melt(dup_cluster_histogram(docs, base=base), "duplication",
-              ["cluster_size"]),
-        _melt(dataset_split(docs, base=base), "splits", ["source", "split"]),
+        _melt(corpus_stats(pt), "corpus", []),
+        _melt(lang_stats(pt), "languages", ["lang"]),
+        _melt(filter_funnel(pt), "funnel", ["stage", "stage_name"]),
+        _melt(dup_cluster_histogram(docs), "duplication", ["cluster_size"]),
+        _melt(dataset_split(docs), "splits", ["source", "split"]),
     ]
     out = parts[0]
     for p in parts[1:]:
@@ -2196,26 +2148,19 @@ def dataset_card_typed(t: Tables) -> DataFrame:
     a row-local explode, and a union.
     """
     from resin_spark.operators.dedup import dup_cluster_histogram
-    from resin_spark.operators.traindata import (card_base, corpus_stats,
-                                                 lang_stats)
+    from resin_spark.operators.traindata import corpus_stats, lang_stats
 
-    docs = t["documents"]
     # ONE scan + ONE tokenize for all five sections (r12; the r11
-    # pairs=/scores= subtree-sharing precedent): materialised EAGERLY
-    # so the card's many concurrent broadcast-subtree jobs read cached
-    # blocks instead of racing to compute the same lazy lineage (the
-    # measured lock-convoy — see card_base). Construction is eager,
-    # same class as session_overlap's documented probe.
-    base = card_base(docs).localCheckpoint(eager=True)
+    # pairs=/scores= subtree-sharing precedent) — see _card_documents.
+    docs = _card_documents(t)
+    pt = {"documents": docs}
     parts = [
-        _melt_typed(corpus_stats(t, base=base), "corpus", []),
-        _melt_typed(lang_stats(t, base=base), "languages", ["lang"]),
-        _melt_typed(filter_funnel(t, base=base), "funnel",
-                    ["stage", "stage_name"]),
-        _melt_typed(dup_cluster_histogram(docs, base=base), "duplication",
+        _melt_typed(corpus_stats(pt), "corpus", []),
+        _melt_typed(lang_stats(pt), "languages", ["lang"]),
+        _melt_typed(filter_funnel(pt), "funnel", ["stage", "stage_name"]),
+        _melt_typed(dup_cluster_histogram(docs), "duplication",
                     ["cluster_size"]),
-        _melt_typed(dataset_split(docs, base=base), "splits",
-                    ["source", "split"]),
+        _melt_typed(dataset_split(docs), "splits", ["source", "split"]),
     ]
     out = parts[0]
     for p in parts[1:]:

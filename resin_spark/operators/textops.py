@@ -802,8 +802,7 @@ BM25_TOPK = 20
 
 
 def bm25_scores(t: Tables, query: tuple[str, ...] = BM25_QUERY,
-                k1: float = BM25_K1, b: float = BM25_B,
-                base: DataFrame | None = None) -> DataFrame:
+                k1: float = BM25_K1, b: float = BM25_B) -> DataFrame:
     """(doc_id, n_hits, score): the full unranked BM25 per-doc scoring
     relation — the library surface for "score everything" consumers
     (exports, joins, the streaming twin's batch pin); bm25_search is
@@ -833,15 +832,9 @@ def bm25_scores(t: Tables, query: tuple[str, ...] = BM25_QUERY,
         return F.size(F.filter("tk", lambda x: x == q)).alias(f"tf_{i}")
 
     tf_cols = [_tf(i, q) for i, q in enumerate(query)]
-    if base is not None:
-        # shared card base (r12): same (doc_id, tokens(text)) columns
-        # read from a caller-cached tokenize; filters identical below.
-        tokenized = base.select("doc_id", "tk")
-    else:
-        tokenized = t["documents"].select(
-            "doc_id", T.tokens("text").alias("tk"))
     base = (
-        tokenized.filter(F.col("doc_id").isNotNull())
+        T.prepare_documents(t["documents"]).select("doc_id", "tk")
+        .filter(F.col("doc_id").isNotNull())
         .filter(F.size("tk") >= 1)
         .select("doc_id", F.size("tk").alias("dl"), *tf_cols)
     )
@@ -1100,8 +1093,7 @@ SNIP_RADIUS = 3
 def search_snippets(t: Tables, query: tuple[str, ...] = BM25_QUERY,
                     k: int = SNIP_TOPK,
                     radius: int = SNIP_RADIUS,
-                    scores: DataFrame | None = None,
-                    base: DataFrame | None = None) -> DataFrame:
+                    scores: DataFrame | None = None) -> DataFrame:
     """Result snippets for the BM25 top-k: (rank, doc_id, pos, snippet)
     where pos is the 1-based token position of the FIRST occurrence of
     any query term (earliest across terms) and snippet is the ±radius
@@ -1119,13 +1111,8 @@ def search_snippets(t: Tables, query: tuple[str, ...] = BM25_QUERY,
     """
     top = bm25_search(t, query, k, scores=scores).select("rank", "doc_id")
     from pyspark.sql.functions import broadcast
-    if base is not None:
-        # shared card base (r12): the k hit docs' tokens come from the
-        # cached tokenize instead of a fresh corpus scan.
-        hits = base.filter(F.col("doc_id").isNotNull()).select("doc_id", "tk")
-    else:
-        hits = (t["documents"].filter(F.col("doc_id").isNotNull())
-                .select("doc_id", T.tokens("text").alias("tk")))
+    hits = (T.prepare_documents(t["documents"])
+            .filter(F.col("doc_id").isNotNull()).select("doc_id", "tk"))
     base = hits.join(broadcast(top), "doc_id").select("rank", "doc_id", "tk")
     pos = F.array_min(F.filter(
         F.array(*[F.array_position("tk", F.lit(q)) for q in query]),
@@ -1173,8 +1160,7 @@ def search_snippets_oracle(query: tuple[str, ...] = BM25_QUERY,
 
 def search_facets(t: Tables, query: tuple[str, ...] = BM25_QUERY,
                   k: int = BM25_TOPK,
-                  scores: DataFrame | None = None,
-                  base: DataFrame | None = None) -> DataFrame:
+                  scores: DataFrame | None = None) -> DataFrame:
     """Facet counts for the BM25 top-k result page: (facet, value,
     n_hits, hit_share) over the source and lang dimensions — the
     search-UI sidebar ("web (12) · wiki (8)") every production search
@@ -1193,10 +1179,8 @@ def search_facets(t: Tables, query: tuple[str, ...] = BM25_QUERY,
     """
     from pyspark.sql.functions import broadcast
     top = bm25_search(t, query, k, scores=scores).select("doc_id")
-    # (source, lang) for the k hits from the cached card base when given
-    hit_src = (base if base is not None else t["documents"])
     page = (
-        hit_src.filter(F.col("doc_id").isNotNull())
+        t["documents"].filter(F.col("doc_id").isNotNull())
         .join(broadcast(top), "doc_id")
         .select("source", "lang")
     )

@@ -485,29 +485,9 @@ KN_DISCOUNT = 0.75
 def _doc_token_arrays(docs: DataFrame) -> DataFrame:
     """(doc_id, tk): per-doc token arrays, zero-token docs dropped."""
     return (
-        docs.filter(F.col("doc_id").isNotNull())
-        .select("doc_id", T.tokens("text").alias("tk"))
+        T.prepare_documents(docs).filter(F.col("doc_id").isNotNull())
+        .select("doc_id", "tk")
         .filter(F.size("tk") >= 1)
-    )
-
-
-def card_base(docs: DataFrame) -> DataFrame:
-    """Shared per-doc base for the release-card sections (r12): ONE
-    documents scan + ONE tokenize carrying every column any section
-    needs — UNFILTERED (doc_id/lang/text NULL rows included; each
-    section applies its own filters exactly as its standalone shape
-    does, so section outputs are row-identical). The card materialises
-    this once (eager localCheckpoint) and five sections derive from the
-    cached blocks instead of five independent scan+tokenize subtrees —
-    which also removes the lock-convoy of concurrent broadcast-subtree
-    jobs racing to materialise the same lazy intermediate (r12 stage
-    profile: 32-task stages at ~95% blocked time, executorRunTime 66 s
-    vs 1.1 s CPU)."""
-    return docs.select(
-        "doc_id", "lang", "source", "n_chars",
-        F.col("text").isNotNull().alias("has_text"),
-        F.md5("text").alias("h"),
-        T.tokens("text").alias("tk"),
     )
 
 
@@ -877,7 +857,7 @@ def dup_span_coverage_oracle(k: int = SPAN_K) -> str:
 
 # --- Naive-Bayes language classifier (train + score in one plan) -------------
 
-def nb_lang_classify(t: Tables, base: DataFrame | None = None) -> DataFrame:
+def nb_lang_classify(t: Tables) -> DataFrame:
     """Multinomial Naive-Bayes language classifier, trained on the
     corpus's own ``lang`` labels and self-scored (the fastText-style
     "learned filter" counterpart of the rule-based ``lang_id``).
@@ -908,24 +888,21 @@ def nb_lang_classify(t: Tables, base: DataFrame | None = None) -> DataFrame:
     exchange and is the same shape quality_perplexity already sweeps.
     """
     docs = t["documents"]
-    model, cand = nb_model_frames(docs, base=base)
-    return nb_classify_with_model(docs, model, cand, base=base)
+    model, cand = nb_model_frames(docs)
+    return nb_classify_with_model(docs, model, cand)
 
 
-def _nb_base(docs: DataFrame, base: DataFrame | None = None) -> DataFrame:
-    # shared card base (r12): same (doc_id, lang, tokens(text)) columns
-    # read from a caller-cached tokenize; filters identical.
-    src = (base.select("doc_id", "lang", "tk") if base is not None else
-           docs.select("doc_id", "lang", T.tokens("text").alias("tk")))
+def _labelled_token_arrays(docs: DataFrame) -> DataFrame:
+    """(doc_id, lang, tk): the NB train/score input — labelled docs
+    with at least one token."""
     return (
-        src
+        T.prepare_documents(docs).select("doc_id", "lang", "tk")
         .filter(F.col("doc_id").isNotNull() & F.col("lang").isNotNull())
         .filter(F.size("tk") >= 1)
     )
 
 
-def nb_model_frames(docs: DataFrame, with_counts: bool = False,
-                    base: DataFrame | None = None):
+def nb_model_frames(docs: DataFrame, with_counts: bool = False):
     """(model, cand[, cnt]): the NB classifier as two relations —
     (cand, tok, bits) per observed (language, token) pair, and the
     |langs|-row (cand, prior_bits, oov_bits) frame. Shared by the
@@ -934,7 +911,7 @@ def nb_model_frames(docs: DataFrame, with_counts: bool = False,
     additionally returns the checkpointed (lang, tok, c) count frame
     so consumers can derive global token frequencies WITHOUT another
     corpus scan (the streaming vocab cap does)."""
-    base = _nb_base(docs, base=base)
+    base = _labelled_token_arrays(docs)
     toks = base.select(F.col("lang"), F.explode("tk").alias("tok"))
     cnt = (
         toks.groupBy("lang", "tok")
@@ -976,14 +953,13 @@ def nb_model_frames(docs: DataFrame, with_counts: bool = False,
 
 
 def nb_classify_with_model(docs: DataFrame, model: DataFrame,
-                           cand: DataFrame,
-                           base: DataFrame | None = None) -> DataFrame:
+                           cand: DataFrame) -> DataFrame:
     """Score ``docs`` with an NB model given as relations — the apply
     side of the train-once/classify-forever split. With the frames
     straight from nb_model_frames this IS nb_lang_classify; with
     frames read back from parquet (read_nb_model) the output is
     row-for-row identical (pinned in tests)."""
-    toks = _nb_base(docs, base=base).select(
+    toks = _labelled_token_arrays(docs).select(
         "doc_id", F.col("lang").alias("true_lang"),
         F.explode("tk").alias("tok"))
     scored = (
@@ -1491,7 +1467,7 @@ def kmeans_refine_oracle(iters: int = KMEANS_ITERS) -> str:
 
 # --- corpus statistics sheet (dataset card) ----------------------------------
 
-def corpus_stats(t: Tables, base: DataFrame | None = None) -> DataFrame:
+def corpus_stats(t: Tables) -> DataFrame:
     """One-row corpus summary — the numbers a dataset card leads with:
     doc/token totals, exact vocabulary size, type-token ratio, mean and
     exact p50/p95 document lengths, language count and the dominant
@@ -1511,28 +1487,15 @@ def corpus_stats(t: Tables, base: DataFrame | None = None) -> DataFrame:
     IEEE divisions of exact integers; quantiles are order statistics
     picked by exact integer comparison (rn-style cum ≥ p·n).
 
-    ``base`` (r12, the r11 pairs=/scores= precedent): an optional
-    shared :func:`card_base` relation. When given, the token arrays
-    and the language counts derive from it (one cached tokenize for
-    the whole card) instead of fresh documents scans; rows and values
-    are identical (same filters applied on top). Default None keeps
-    the standalone entry self-contained.
+    Input is any documents frame, prepared or not (T.prepare_documents).
     """
-    if base is not None:
-        arrays = (base.filter(F.col("doc_id").isNotNull())
-                  .select("doc_id", "tk").filter(F.size("tk") >= 1))
-        lang_src = base
-    else:
-        arrays = _doc_token_arrays(t["documents"])
-        lang_src = t["documents"]
-    lens = arrays.select("doc_id", F.size("tk").cast("long").alias("n_tok"))
-    if base is None:
-        # localCheckpoint (r11): the per-doc length frame feeds the
-        # length histogram AND the doc totals — two branches that would
-        # each re-run the corpus tokenize. Two scalar columns per doc.
-        # (With a shared base the recompute is a cheap map over cached
-        # blocks — no checkpoint needed.)
-        lens = lens.localCheckpoint(eager=False)
+    docs = t["documents"]
+    arrays = _doc_token_arrays(docs)
+    # localCheckpoint (r11): the per-doc length frame feeds the length
+    # histogram AND the doc totals — two branches that would each re-run
+    # the corpus tokenize. Two scalar columns per doc.
+    lens = (arrays.select("doc_id", F.size("tk").cast("long").alias("n_tok"))
+            .localCheckpoint(eager=False))
     toks = arrays.select(F.explode("tk").alias("tok"))
     tok_agg = toks.agg(
         F.count(F.lit(1)).alias("n_tokens"),
@@ -1559,8 +1522,8 @@ def corpus_stats(t: Tables, base: DataFrame | None = None) -> DataFrame:
         F.sum("n_tok").alias("sum_tok"),
     )
     langs = (
-        lang_src.filter(F.col("doc_id").isNotNull()
-                        & F.col("lang").isNotNull())
+        docs.filter(F.col("doc_id").isNotNull()
+                    & F.col("lang").isNotNull())
         .groupBy("lang").agg(F.count(F.lit(1)).alias("c"))
     )
     # rank-1 window over the BOUNDED langs frame (|langs| rows);
@@ -1656,7 +1619,7 @@ def corpus_stats_oracle() -> str:
     """
 
 
-def lang_stats(t: Tables, base: DataFrame | None = None) -> DataFrame:
+def lang_stats(t: Tables) -> DataFrame:
     """Per-language dataset-card rows — the grouped form of
     corpus_stats: docs, tokens, exact vocabulary, mean and exact
     p50/p95 document lengths, and each language's doc/token share.
@@ -1670,29 +1633,19 @@ def lang_stats(t: Tables, base: DataFrame | None = None) -> DataFrame:
     Exactness: integer counts, single IEEE divisions, integer-compare
     order statistics — the corpus_stats recipe per group.
     """
-    if base is not None:
-        b = (base.filter(F.col("doc_id").isNotNull()
-                         & F.col("lang").isNotNull())
-             .select("doc_id", "lang", "tk")
-             .filter(F.size("tk") >= 1))
-    else:
-        b = (
-            t["documents"]
-            .filter(F.col("doc_id").isNotNull() & F.col("lang").isNotNull())
-            .select("doc_id", "lang", T.tokens("text").alias("tk"))
-            .filter(F.size("tk") >= 1)
-        )
+    b = (
+        T.prepare_documents(t["documents"])
+        .filter(F.col("doc_id").isNotNull() & F.col("lang").isNotNull())
+        .select("doc_id", "lang", "tk")
+        .filter(F.size("tk") >= 1)
+    )
     # localCheckpoints (r11): lens feeds the histogram, the doc totals
     # and (via doc_agg) the corpus total — three tokenize re-runs
     # without it; tok_agg feeds both the per-lang join and the corpus
     # token total — a token-explode + countDistinct re-run without it.
-    # Materialisations are 2 scalars/doc and |langs| rows. (With a
-    # shared card base the lens recompute is a cheap map over cached
-    # blocks, so its checkpoint is skipped; tok_agg keeps its
-    # checkpoint in both modes — it saves a real aggregation.)
-    lens = b.select("lang", F.size("tk").cast("long").alias("n_tok"))
-    if base is None:
-        lens = lens.localCheckpoint(eager=False)
+    # Materialisations are 2 scalars/doc and |langs| rows.
+    lens = (b.select("lang", F.size("tk").cast("long").alias("n_tok"))
+            .localCheckpoint(eager=False))
     toks = b.select("lang", F.explode("tk").alias("tok"))
     tok_agg = toks.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_tokens"),
@@ -1943,7 +1896,7 @@ def embedding_drift_demo_oracle() -> str:
 
 # --- language-metadata QA: NB confusion matrix --------------------------------
 
-def lang_confusion(t: Tables, base: DataFrame | None = None) -> DataFrame:
+def lang_confusion(t: Tables) -> DataFrame:
     """Language-metadata QA card: confusion matrix of the self-trained
     NB classifier (nb_lang_classify) against the corpus's declared
     ``lang`` labels — (true_lang, pred_lang, n_docs, share_of_true).
@@ -1961,7 +1914,7 @@ def lang_confusion(t: Tables, base: DataFrame | None = None) -> DataFrame:
     # action runs the ENTIRE NB classifier (model build + scoring
     # fan-out) twice. Tiny materialisation, halves the section.
     per = (
-        nb_lang_classify(t, base=base)
+        nb_lang_classify(t)
         .groupBy("true_lang", "pred_lang")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
@@ -2008,22 +1961,17 @@ CDC_MASK = 15
 
 
 def cdc_chunks(docs: DataFrame, k: int = CDC_K,
-               mask: int = CDC_MASK,
-               base: DataFrame | None = None) -> DataFrame:
+               mask: int = CDC_MASK) -> DataFrame:
     """(doc_id, n_tokens, chunk_no, chunk, ch) — the content-defined
     chunk relation: boundary selection and chunk assembly as row-local
     higher-order functions over ONE tokenize. Shared by the batch
     stats rollup and the streaming classifier
     (streaming/quality.py:stream_cdc_flags)."""
     d = mask + 1
-    # shared card base (r12): the has_text flag mirrors the standalone
-    # text-notnull filter; tk is the cached tokens(text).
-    src = (base.filter(F.col("has_text")).select("doc_id", "tk")
-           if base is not None else
-           docs.filter(F.col("text").isNotNull())
-           .select("doc_id", T.tokens("text").alias("tk")))
     base = (
-        src.filter(F.col("doc_id").isNotNull())
+        T.prepare_documents(docs).filter(F.col("has_text"))
+        .select("doc_id", "tk")
+        .filter(F.col("doc_id").isNotNull())
         .filter(F.size("tk") >= 1)
     )
     n = F.size("tk")
@@ -2056,8 +2004,7 @@ def cdc_chunks(docs: DataFrame, k: int = CDC_K,
 
 
 def cdc_chunk_stats(t: Tables, k: int = CDC_K, mask: int = CDC_MASK,
-                    min_count: int = 2,
-                    base: DataFrame | None = None) -> DataFrame:
+                    min_count: int = 2) -> DataFrame:
     """Content-defined-chunk duplication accounting — the
     storage-dedup trick (Rabin/CDC) applied to corpus hygiene: chunk
     boundaries are chosen by CONTENT (k-gram hash ≡ 0 mod mask+1), so
@@ -2081,7 +2028,7 @@ def cdc_chunk_stats(t: Tables, k: int = CDC_K, mask: int = CDC_MASK,
     # NOT checkpointed (r11 A/B on the nesting card): AQE reuses the
     # identical chunk-subtree exchange across the duplicate-count and
     # rollup branches at runtime; a checkpoint only adds a barrier.
-    chunks = cdc_chunks(t["documents"], k=k, mask=mask, base=base) \
+    chunks = cdc_chunks(t["documents"], k=k, mask=mask) \
         .select("doc_id", "n_tokens", "ch")
     dup = (
         chunks.groupBy("ch").agg(F.count(F.lit(1)).alias("n_occ"))

@@ -625,3 +625,41 @@ def test_shingle_sets_is_row_local_projection(spark):
     assert "ObjectHashAggregate" not in plan, plan[:2000]
     assert "hashpartitioning" not in plan, plan[:2000]
     assert "size(transform" not in plan, plan[:2000]
+
+
+def test_prepare_documents_passes_prepared_frame_through(spark):
+    """A frame that already carries ``tk`` is returned as is — the cards'
+    cached frame reaches every operator unchanged."""
+    from resin_spark.functions.text import prepare_documents
+    p = prepare_documents(load_tables(spark, SF)["documents"])
+    assert prepare_documents(p) is p
+    card = p.drop("text")
+    assert prepare_documents(card) is card
+
+
+def _documents_read_schemas(plan: str) -> list[str]:
+    return [line.split("ReadSchema: ")[1] for line in plan.splitlines()
+            if "documents.parquet" in line and "ReadSchema: " in line]
+
+
+@pytest.mark.parametrize("build", [
+    lambda t: dedup.shingle_hash_sets(t["documents"]),
+    lambda t: textops.bm25_scores(t),
+], ids=["shingle_hash_sets", "bm25_scores"])
+def test_prepared_projection_prunes_unused_columns(spark, build):
+    """Standalone operators start from prepare_documents' lazy
+    projection; the columns they do not read (h = md5(text), has_text,
+    lang, source, n_chars) must be pruned before the scan."""
+    plan = plan_of(build(load_tables(spark, SF)))
+    assert "md5(" not in plan, plan[:2000]
+    schemas = _documents_read_schemas(plan)
+    assert schemas == ["struct<doc_id:bigint,text:string>"], plan[:2000]
+
+
+def test_corpus_stats_keeps_lens_checkpoint(spark):
+    """corpus_stats checkpoints its per-doc length frame, so the final
+    plan scans documents twice (tokens, langs); re-deriving the lengths
+    from the corpus would add scans."""
+    from resin_spark.operators import traindata as td
+    plan = plan_of(td.corpus_stats(load_tables(spark, SF)))
+    assert plan.count("documents.parquet") <= 2, plan[:3000]
