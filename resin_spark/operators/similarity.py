@@ -329,6 +329,32 @@ def cosine_threshold_candidates(emb: DataFrame, bc, tau: float,
     return emb.select(id_col, vec_col).mapInPandas(gen, "vec_a long, vec_b long")
 
 
+def _score_candidates(pairs: DataFrame, id_col: str, vec_col: str,
+                      q_id: str, q_vec: str) -> DataFrame:
+    """(q_id, neighbor_id, score) for the (query, vector) pairs an ANN
+    probe generated: self-pairs dropped, every survivor scored with the
+    exact JVM cosine — candidate generation only prunes, it never
+    changes a score."""
+    return pairs.filter(F.col(id_col) != F.col(q_id)).select(
+        F.col(q_id),
+        F.col(id_col).alias("neighbor_id"),
+        V.cosine_gated(vec_col, q_vec).alias("score"),
+    )
+
+
+def _topk_by_query(scored: DataFrame, k: int, q_id: str) -> DataFrame:
+    """The ranked tail every top-k search shares: per-query row_number
+    over (score desc, neighbor_id) — the oracle's tie-break — cut at k,
+    score rounded to 9 decimals."""
+    w = Window.partitionBy(q_id).orderBy(F.col("score").desc(), F.col("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(q_id, "rank", "neighbor_id", F.round("score", 9).alias("score"))
+        .orderBy(q_id, "rank")
+    )
+
+
 def brute_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
                id_col: str = "vec_id", vec_col: str = "embedding",
                q_id: str = "query_id", q_vec: str = "q_vec") -> DataFrame:
@@ -351,13 +377,7 @@ def brute_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
             V.cosine_gated(vec_col, q_vec).alias("score"),
         )
     )
-    w = Window.partitionBy(q_id).orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, "rank", "neighbor_id", F.round("score", 9).alias("score"))
-        .orderBy(q_id, "rank")
-    )
+    return _topk_by_query(scored, k, q_id)
 
 
 def brute_topk_oracle(k: int = 10, n_queries: int = 5) -> str:
@@ -459,6 +479,40 @@ def _probe_dims(emb: DataFrame, vec_col: str) -> int:
     return dims
 
 
+def _lsh_postings(emb: DataFrame, h, id_col: str, vec_col: str) -> DataFrame:
+    """The LSH store's relation: one (id, vector, tbl, bucket) posting
+    per hash table, all tables from ONE Arrow pass of ``h``
+    (hyperplane_buckets_udf). write_ann_index persists it, lsh_topk
+    probes it in memory, the validator recomputes it, and the query
+    side of every probe starts from it (_lsh_probes)."""
+    return emb.select(
+        F.col(id_col), F.col(vec_col),
+        F.posexplode(h(F.col(vec_col))).alias("tbl", "bucket"),
+    )
+
+
+def _lsh_probes(queries: DataFrame, h, n_planes: int, probe_radius: int,
+                q_id: str, q_vec: str) -> DataFrame:
+    """Multi-probe query side: each query's own postings, expanded to
+    every bucket within Hamming ``probe_radius`` (_multi_probe)."""
+    return _multi_probe(_lsh_postings(queries, h, q_id, q_vec),
+                        n_planes, probe_radius)
+
+
+def _lsh_scored(index: DataFrame, queries: DataFrame, h, n_planes: int,
+                probe_radius: int, id_col: str, vec_col: str, q_id: str,
+                q_vec: str) -> DataFrame:
+    """The LSH probe: broadcast the multi-probe query side, equi-join
+    the postings on (tbl, bucket), keep each (query, vector) pair once
+    however many tables/probes matched it, and score it exactly."""
+    qb = _lsh_probes(queries, h, n_planes, probe_radius, q_id, q_vec)
+    pairs = (
+        index.join(broadcast(qb), on=["tbl", "bucket"])
+        .dropDuplicates([q_id, id_col])
+    )
+    return _score_candidates(pairs, id_col, vec_col, q_id, q_vec)
+
+
 def lsh_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
              dims: int | None = None,
              n_planes: int = 8, n_tables: int = 4, probe_radius: int = 2,
@@ -477,41 +531,20 @@ def lsh_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
     and the single equi-join key is (table, bucket): cost ≈ corpus ×
     tables, never corpus².
 
-    ``dims=None`` (default) probes the vector width from the data.
+    The in-memory corpus is the relation write_ann_index would persist
+    (_lsh_postings), probed by lsh_topk_indexed itself — one probe path
+    for both. ``dims=None`` (default) probes the vector width from the
+    data.
     """
     emb = valid_vectors(emb, vec_col)
-    queries = valid_vectors(queries, q_vec)
     if dims is None:
         dims = _probe_dims(emb, vec_col)
     h = hyperplane_buckets_udf(dims, n_planes, n_tables)
-    eb = emb.select(
-        F.col(id_col), F.col(vec_col),
-        F.posexplode(h(F.col(vec_col))).alias("tbl", "bucket"),
-    )
-    qb = _multi_probe(
-        queries.select(
-            F.col(q_id), F.col(q_vec),
-            F.posexplode(h(F.col(q_vec))).alias("tbl", "bucket"),
-        ),
-        n_planes, probe_radius,
-    )
-    cand = (
-        eb.join(broadcast(qb), on=["tbl", "bucket"])
-        .filter(F.col(id_col) != F.col(q_id))
-        .dropDuplicates([q_id, id_col])
-    )
-    scored = cand.select(
-        F.col(q_id),
-        F.col(id_col).alias("neighbor_id"),
-        V.cosine_gated(vec_col, q_vec).alias("score"),
-    )
-    w = Window.partitionBy(q_id).orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, "rank", "neighbor_id", F.round("score", 9).alias("score"))
-        .orderBy(q_id, "rank")
-    )
+    return lsh_topk_indexed(
+        _lsh_postings(emb, h, id_col, vec_col), queries, k, dims=dims,
+        n_planes=n_planes, n_tables=n_tables, seed0=7,
+        probe_radius=probe_radius, id_col=id_col, vec_col=vec_col,
+        q_id=q_id, q_vec=q_vec)
 
 
 def write_ann_index(emb: DataFrame, path: str, dims: int | None = None,
@@ -531,13 +564,12 @@ def write_ann_index(emb: DataFrame, path: str, dims: int | None = None,
     if dims is None:
         dims = _probe_dims(emb, vec_col)
     h = hyperplane_buckets_udf(dims, n_planes, n_tables, seed0)
-    idx = (
-        emb.select(F.col(id_col), F.col(vec_col),
-                   F.posexplode(h(F.col(vec_col))).alias("tbl", "bucket"))
+    (
+        _lsh_postings(emb, h, id_col, vec_col)
         .repartition("tbl")
         .sortWithinPartitions("bucket")
+        .write.mode("overwrite").partitionBy("tbl").parquet(path)
     )
-    idx.write.mode("overwrite").partitionBy("tbl").parquet(path)
 
 
 def read_ann_index(spark, path: str) -> DataFrame:
@@ -551,43 +583,22 @@ def lsh_topk_indexed(index: DataFrame, queries: DataFrame, k: int = 10,
                      seed0: int = 7, probe_radius: int = 2,
                      id_col: str = "vec_id", vec_col: str = "embedding",
                      q_id: str = "query_id", q_vec: str = "q_vec") -> DataFrame:
-    """lsh_topk against a pre-built persisted index: queries hash with
+    """Top-k probe of an LSH postings relation — a persisted index
+    (read_ann_index) or lsh_topk's in-memory one: queries hash with
     the same seeds (including the multi-probe ball), and the
-    (tbl, bucket) equi-join prunes the scan to the probed
-    partitions/row groups. Identical output to :func:`lsh_topk` on the
-    same corpus and parameters. ``dims=None`` probes the query width —
-    it must equal the width the index was written with."""
+    (tbl, bucket) equi-join prunes a stored scan to the probed
+    partitions/row groups. ``dims=None`` probes the query width — it
+    must equal the width the index was written with."""
     queries = valid_vectors(queries, q_vec)
     if dims is None:
         dims = _probe_dims(queries, q_vec)
     h = hyperplane_buckets_udf(dims, n_planes, n_tables, seed0)
-    qb = _multi_probe(
-        queries.select(
-            F.col(q_id), F.col(q_vec),
-            F.posexplode(h(F.col(q_vec))).alias("tbl", "bucket"),
-        ),
-        n_planes, probe_radius,
-    )
-    cand = (
-        index.join(broadcast(qb), on=["tbl", "bucket"])
-        .filter(F.col(id_col) != F.col(q_id))
-        .dropDuplicates([q_id, id_col])
-    )
-    scored = cand.select(
-        F.col(q_id),
-        F.col(id_col).alias("neighbor_id"),
-        V.cosine_gated(vec_col, q_vec).alias("score"),
-    )
-    w = Window.partitionBy(q_id).orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, "rank", "neighbor_id", F.round("score", 9).alias("score"))
-        .orderBy(q_id, "rank")
-    )
+    return _topk_by_query(
+        _lsh_scored(index, queries, h, n_planes, probe_radius,
+                    id_col, vec_col, q_id, q_vec), k, q_id)
 
 
-def _train_ivf_centroids(emb: DataFrame, n_cells: int, dims: int,
+def _train_ivf_centroids(emb: DataFrame, n_cells: int,
                          sample_cap: int, seed: int,
                          id_col: str, vec_col: str) -> np.ndarray:
     """Spherical k-means coarse quantizer on a deterministic sample.
@@ -634,8 +645,64 @@ def _train_ivf_centroids(emb: DataFrame, n_cells: int, dims: int,
     return cent
 
 
+def _ivf_cell_udf(cent: np.ndarray):
+    """Cell assignment against a trained centroid matrix: argmax of
+    the L2-normalised vector's dot with every centroid. The one kernel
+    that files vectors — writer, appender, validator and the in-memory
+    operator all assign with it."""
+    @pandas_udf(LongType())
+    def cell_of(vecs: pd.Series) -> pd.Series:
+        m = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
+        n = np.linalg.norm(m, axis=1, keepdims=True)
+        n[n == 0] = 1.0
+        return pd.Series(np.argmax((m / n) @ cent.T, axis=1).astype(np.int64))
+    return cell_of
+
+
+def _ivf_probe_udf(cent: np.ndarray, probe_n: int):
+    """A query's ``probe_n`` nearest cells, scored like _ivf_cell_udf."""
+    @pandas_udf(ArrayType(LongType()))
+    def probe_cells(vecs: pd.Series) -> pd.Series:
+        m = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
+        n = np.linalg.norm(m, axis=1, keepdims=True)
+        n[n == 0] = 1.0
+        s = (m / n) @ cent.T
+        top = np.argsort(-s, axis=1)[:, :probe_n].astype(np.int64)
+        return pd.Series(list(top))
+    return probe_cells
+
+
+def _ivf_entries(emb: DataFrame, cent: np.ndarray, id_col: str,
+                 vec_col: str) -> DataFrame:
+    """The IVF store's relation: (id, vector, cell) — what
+    write_ivf_index persists (partitioned by the int cell) and what
+    ann_topk_ivf probes in memory."""
+    return emb.select(
+        F.col(id_col), F.col(vec_col),
+        _ivf_cell_udf(cent)(F.col(vec_col)).cast("int").alias("cell"))
+
+
+def _ivf_probes(queries: DataFrame, cent: np.ndarray, n_probe: int,
+                q_id: str, q_vec: str) -> DataFrame:
+    """Query side: one (query, vector, cell) row per probed cell."""
+    probe_n = min(n_probe, len(cent))
+    return queries.select(
+        F.col(q_id), F.col(q_vec),
+        F.explode(_ivf_probe_udf(cent, probe_n)(F.col(q_vec))).alias("cell"),
+    ).withColumn("cell", F.col("cell").cast("int"))
+
+
+def _ivf_scored(entries: DataFrame, qb: DataFrame, id_col: str,
+                vec_col: str, q_id: str, q_vec: str) -> DataFrame:
+    """The IVF probe: broadcast the probed cells, equi-join the entries
+    on cell, score exactly. A vector sits in one cell and a query's
+    probed cells are distinct, so no pair repeats."""
+    return _score_candidates(entries.join(broadcast(qb), "cell"),
+                             id_col, vec_col, q_id, q_vec)
+
+
 def ann_topk_ivf(emb: DataFrame, queries: DataFrame, k: int = 10,
-                 n_cells: int = 64, n_probe: int = 8, dims: int = 64,
+                 n_cells: int = 64, n_probe: int = 8,
                  sample_cap: int = 100_000, seed: int = 33,
                  id_col: str = "vec_id", vec_col: str = "embedding",
                  q_id: str = "query_id", q_vec: str = "q_vec") -> DataFrame:
@@ -651,51 +718,20 @@ def ann_topk_ivf(emb: DataFrame, queries: DataFrame, k: int = 10,
     4. score — exact JVM cosine + per-query top-k window, so returned
        scores are oracle-grade even though recall is approximate.
 
+    Steps 2–4 are ivf_topk_indexed's probe over the relation
+    write_ivf_index would persist, minus the stored index's
+    probed-cell partition filter (a collect job an in-memory relation
+    has no directories to repay).
     n_probe = n_cells degrades gracefully to exact brute force (tested).
     """
     emb = valid_vectors(emb, vec_col)
     queries = valid_vectors(queries, q_vec)
-    cent = _train_ivf_centroids(emb, n_cells, dims, sample_cap, seed,
+    cent = _train_ivf_centroids(emb, n_cells, sample_cap, seed,
                                 id_col, vec_col)
-
-    @pandas_udf(LongType())
-    def cell_of(vecs: pd.Series) -> pd.Series:
-        m = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
-        n = np.linalg.norm(m, axis=1, keepdims=True)
-        n[n == 0] = 1.0
-        return pd.Series(np.argmax((m / n) @ cent.T, axis=1).astype(np.int64))
-
-    probe_n = min(n_probe, len(cent))
-
-    @pandas_udf(ArrayType(LongType()))
-    def probe_cells(vecs: pd.Series) -> pd.Series:
-        m = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
-        n = np.linalg.norm(m, axis=1, keepdims=True)
-        n[n == 0] = 1.0
-        s = (m / n) @ cent.T
-        top = np.argsort(-s, axis=1)[:, :probe_n].astype(np.int64)
-        return pd.Series(list(top))
-
-    eb = emb.select(F.col(id_col), F.col(vec_col),
-                    cell_of(F.col(vec_col)).alias("cell"))
-    qb = queries.select(F.col(q_id), F.col(q_vec),
-                        F.explode(probe_cells(F.col(q_vec))).alias("cell"))
-    scored = (
-        eb.join(broadcast(qb), "cell")
-        .filter(F.col(id_col) != F.col(q_id))
-        .select(
-            F.col(q_id),
-            F.col(id_col).alias("neighbor_id"),
-            V.cosine_gated(vec_col, q_vec).alias("score"),
-        )
-    )
-    w = Window.partitionBy(q_id).orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, "rank", "neighbor_id", F.round("score", 9).alias("score"))
-        .orderBy(q_id, "rank")
-    )
+    return _topk_by_query(
+        _ivf_scored(_ivf_entries(emb, cent, id_col, vec_col),
+                    _ivf_probes(queries, cent, n_probe, q_id, q_vec),
+                    id_col, vec_col, q_id, q_vec), k, q_id)
 
 
 def knn_classify(emb: DataFrame, k: int = 10) -> DataFrame:
@@ -973,10 +1009,9 @@ def closest_match_oracle(fold_angle: float = FOLD_ANGLE, n_queries: int = 5) -> 
 
 # --- E12: product-quantization ANN (ADC + exact rerank) -----------------------
 
-def _train_pq_codebooks(emb: DataFrame, m_sub: int, n_codes: int, dims: int,
-                        sample_cap: int, seed: int,
-                        id_col: str, vec_col: str,
-                        n_rows: int | None = None) -> np.ndarray:
+def _train_pq_codebooks(emb: DataFrame, m_sub: int, n_codes: int,
+                        dims: int | None, sample_cap: int, seed: int,
+                        id_col: str, vec_col: str) -> np.ndarray:
     """(m_sub, n_codes, dims/m_sub) PQ codebooks: independent L2 k-means
     per subspace over L2-normalised corpus vectors, trained on the same
     deterministic hash-threshold sample the IVF trainer uses (a pure
@@ -984,12 +1019,16 @@ def _train_pq_codebooks(emb: DataFrame, m_sub: int, n_codes: int, dims: int,
     assignment uses the dot trick (argmin ||x-c||² = argmax x·c −
     ||c||²/2), so the per-iteration cost is one (sample × n_codes)
     matmul per subspace; empty codes re-seed deterministically.
-    ``n_rows`` may be supplied by a caller that already ran
-    corpus_bytes_estimate (same ceiling) so the trainer adds no probe
-    job of its own."""
-    if n_rows is None:
-        _est, n_rows, _d = corpus_bytes_estimate(
-            emb, id_col, vec_col, ceiling_bytes=BROADCAST_CEILING_BYTES)
+
+    ONE stats probe (corpus_bytes_estimate, memoized per plan) serves
+    both the sample gate and ``dims=None`` (the probed width), and
+    ``m_sub`` must divide the width — checked before any sample ships."""
+    _est, n_rows, est_dims = corpus_bytes_estimate(
+        emb, id_col, vec_col, ceiling_bytes=BROADCAST_CEILING_BYTES)
+    if dims is None:
+        dims = est_dims
+    if m_sub <= 0 or dims % m_sub != 0:
+        raise ValueError(f"m_sub={m_sub} must divide the vector width {dims}")
     sampled = emb.select(id_col, vec_col)
     if n_rows > sample_cap:
         mm = 1 << 20
@@ -1058,19 +1097,8 @@ def ann_topk_pq(emb: DataFrame, queries: DataFrame, k: int = 10,
     """
     emb = valid_vectors(emb, vec_col)
     queries = valid_vectors(queries, q_vec)
-    # ONE stats probe serves both the dims check and the trainer's
-    # sample gate (r12, guide §1/§5: _probe_dims was a second eager
-    # first() per call on top of corpus_bytes_estimate's own probe —
-    # the estimate already returns dims, and it memoizes per plan, so
-    # repeated calls in a session pay zero probe jobs).
-    _est, n_rows, est_dims = corpus_bytes_estimate(
-        emb, id_col, vec_col, ceiling_bytes=BROADCAST_CEILING_BYTES)
-    if dims is None:
-        dims = est_dims
-    if m_sub <= 0 or dims % m_sub != 0:
-        raise ValueError(f"m_sub={m_sub} must divide the vector width {dims}")
     books = _train_pq_codebooks(emb, m_sub, n_codes, dims, sample_cap, seed,
-                                id_col, vec_col, n_rows=n_rows)
+                                id_col, vec_col)
     encoded = emb.select(
         F.col(id_col), _pq_encode_udf(books)(F.col(vec_col)).alias("codes"))
     return _pq_adc_topk(encoded, books, queries, emb, k, rerank,
@@ -1143,13 +1171,7 @@ def _pq_adc_topk(encoded: DataFrame, books: np.ndarray, queries: DataFrame,
         .select(F.col(q_id), F.col("neighbor_id"),
                 V.cosine_gated("n_vec", q_vec).alias("score"))
     )
-    w = Window.partitionBy(q_id).orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, "rank", "neighbor_id", F.round("score", 9).alias("score"))
-        .orderBy(q_id, "rank")
-    )
+    return _topk_by_query(rescored, k, q_id)
 
 
 def write_pq_index(emb: DataFrame, path: str, m_sub: int = 8,
@@ -1167,16 +1189,8 @@ def write_pq_index(emb: DataFrame, path: str, m_sub: int = 8,
     The raw-vector corpus stays wherever it lives — the exact rerank
     joins it back by id at query time."""
     emb = valid_vectors(emb, vec_col)
-    # one stats probe for dims + the trainer's sample gate (see
-    # ann_topk_pq)
-    _est, n_rows, est_dims = corpus_bytes_estimate(
-        emb, id_col, vec_col, ceiling_bytes=BROADCAST_CEILING_BYTES)
-    if dims is None:
-        dims = est_dims
-    if m_sub <= 0 or dims % m_sub != 0:
-        raise ValueError(f"m_sub={m_sub} must divide the vector width {dims}")
     books = _train_pq_codebooks(emb, m_sub, n_codes, dims, sample_cap, seed,
-                                id_col, vec_col, n_rows=n_rows)
+                                id_col, vec_col)
     spark = emb.sparkSession
     rows = [(int(mi), int(c), [float(x) for x in books[mi, c]])
             for mi in range(books.shape[0]) for c in range(books.shape[1])]
@@ -1214,32 +1228,6 @@ def pq_topk_indexed(codes: DataFrame, books: np.ndarray, queries: DataFrame,
 
 # --- recall / cost report (r6) ------------------------------------------------
 
-def _ivf_cell_udf(cent: np.ndarray):
-    """Cell assignment against a trained centroid matrix — the same
-    normalise-then-argmax kernel ann_topk_ivf closes over (kept as a
-    factory here so the report can mirror it without touching the
-    frozen operator)."""
-    @pandas_udf(LongType())
-    def cell_of(vecs: pd.Series) -> pd.Series:
-        m = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
-        n = np.linalg.norm(m, axis=1, keepdims=True)
-        n[n == 0] = 1.0
-        return pd.Series(np.argmax((m / n) @ cent.T, axis=1).astype(np.int64))
-    return cell_of
-
-
-def _ivf_probe_udf(cent: np.ndarray, probe_n: int):
-    @pandas_udf(ArrayType(LongType()))
-    def probe_cells(vecs: pd.Series) -> pd.Series:
-        m = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
-        n = np.linalg.norm(m, axis=1, keepdims=True)
-        n[n == 0] = 1.0
-        s = (m / n) @ cent.T
-        top = np.argsort(-s, axis=1)[:, :probe_n].astype(np.int64)
-        return pd.Series(list(top))
-    return probe_cells
-
-
 ANN_REPORT_CONFIGS = (
     {"method": "lsh", "n_planes": 6, "n_tables": 8, "probe_radius": 2},
     {"method": "lsh", "n_planes": 6, "n_tables": 4, "probe_radius": 1},
@@ -1267,16 +1255,17 @@ def ann_recall_report(emb: DataFrame, queries: DataFrame,
     One row per config: (method, config, recall_at_k,
     n_candidate_pairs, n_exhaustive_pairs, scan_fraction) where
     n_candidate_pairs counts the exact-rescored (query, vector) pairs
-    the config generates — bucket-join matches for LSH (deduplicated,
-    exactly lsh_topk's candidate relation), probed-cell members for
-    IVF (same trainer seed and argmax kernel), the ADC rerank window
-    for PQ — and n_exhaustive_pairs = |queries| × (|corpus| − 1) is
-    the brute-force scan. recall is averaged over queries on the
+    the config generates — for LSH and IVF the very relation the probe
+    scores (at lsh_topk's / ann_topk_ivf's seeds), whose top-k is then
+    the approximate answer; the ADC rerank window for PQ — and
+    n_exhaustive_pairs = |queries| × (|corpus| − 1) is the brute-force
+    scan. recall is averaged over queries on the
     neighbor-ID sets (score ties broken identically on both sides).
 
     Cost: one brute_topk + per config one candidate count + one
-    top-k run — every job bounded by the config's own candidate
-    relation; the collected report is |configs| rows of scalars.
+    top-k run over that same candidate relation (trained once per IVF
+    config) — every job bounded by the config's own candidates; the
+    collected report is |configs| rows of scalars.
     """
     emb = valid_vectors(emb, vec_col)
     queries = valid_vectors(queries, q_vec)
@@ -1307,49 +1296,31 @@ def ann_recall_report(emb: DataFrame, queries: DataFrame,
     for cfg in configs:
         cfg = dict(cfg)
         method = cfg.pop("method")
-        if method == "lsh":
-            h = hyperplane_buckets_udf(dims, cfg["n_planes"],
-                                       cfg["n_tables"])
-            eb = emb.select(
-                F.col(id_col),
-                F.posexplode(h(F.col(vec_col))).alias("tbl", "bucket"))
-            qb = _multi_probe(
-                queries.select(
-                    F.col(q_id),
-                    F.posexplode(h(F.col(q_vec))).alias("tbl", "bucket")),
-                cfg["n_planes"], cfg["probe_radius"])
-            n_cand = (
-                eb.join(broadcast(qb), ["tbl", "bucket"])
-                .filter(F.col(id_col) != F.col(q_id))
-                .select(q_id, id_col).distinct().count())
-            approx = pair_set(lsh_topk(
-                emb, queries, k=k, dims=dims, id_col=id_col,
-                vec_col=vec_col, q_id=q_id, q_vec=q_vec, **cfg))
-        elif method == "ivf":
-            cent = _train_ivf_centroids(
-                emb, cfg["n_cells"], dims, 100_000, 33, id_col, vec_col)
-            probe_n = min(cfg["n_probe"], len(cent))
-            eb = emb.select(
-                F.col(id_col),
-                _ivf_cell_udf(cent)(F.col(vec_col)).alias("cell"))
-            qb = queries.select(
-                F.col(q_id),
-                F.explode(_ivf_probe_udf(cent, probe_n)(
-                    F.col(q_vec))).alias("cell"))
-            n_cand = (
-                eb.join(broadcast(qb), "cell")
-                .filter(F.col(id_col) != F.col(q_id))
-                .select(q_id, id_col).distinct().count())
-            approx = pair_set(ann_topk_ivf(
-                emb, queries, k=k, dims=dims, id_col=id_col,
-                vec_col=vec_col, q_id=q_id, q_vec=q_vec, **cfg))
-        elif method == "pq":
+        if method == "pq":
             n_cand = n_queries * min(cfg["rerank"], max(0, n_corpus - 1))
-            approx = pair_set(ann_topk_pq(
+            top = ann_topk_pq(
                 emb, queries, k=k, dims=dims, id_col=id_col,
-                vec_col=vec_col, q_id=q_id, q_vec=q_vec, **cfg))
+                vec_col=vec_col, q_id=q_id, q_vec=q_vec, **cfg)
         else:
-            raise ValueError(f"unknown ANN method {method!r}")
+            if method == "lsh":
+                h = hyperplane_buckets_udf(dims, cfg["n_planes"],
+                                           cfg["n_tables"])
+                scored = _lsh_scored(
+                    _lsh_postings(emb, h, id_col, vec_col), queries, h,
+                    cfg["n_planes"], cfg["probe_radius"],
+                    id_col, vec_col, q_id, q_vec)
+            elif method == "ivf":
+                cent = _train_ivf_centroids(
+                    emb, cfg["n_cells"], 100_000, 33, id_col, vec_col)
+                scored = _ivf_scored(
+                    _ivf_entries(emb, cent, id_col, vec_col),
+                    _ivf_probes(queries, cent, cfg["n_probe"], q_id, q_vec),
+                    id_col, vec_col, q_id, q_vec)
+            else:
+                raise ValueError(f"unknown ANN method {method!r}")
+            n_cand = scored.count()
+            top = _topk_by_query(scored, k, q_id)
+        approx = pair_set(top)
         cfg_str = ",".join(f"{kk}={vv}" for kk, vv in sorted(cfg.items()))
         rows.append((
             method, cfg_str, round(recall_of(approx), 6), int(n_cand),
@@ -1368,7 +1339,7 @@ def ann_recall_report(emb: DataFrame, queries: DataFrame,
 # --- persisted IVF index (r6) -------------------------------------------------
 
 def write_ivf_index(emb: DataFrame, path: str, n_cells: int = 64,
-                    dims: int | None = None, sample_cap: int = 100_000,
+                    sample_cap: int = 100_000,
                     seed: int = 33, id_col: str = "vec_id",
                     vec_col: str = "embedding") -> None:
     """Persist an IVF index: ``{path}/centroids`` = (cell, centroid)
@@ -1376,13 +1347,12 @@ def write_ivf_index(emb: DataFrame, path: str, n_cells: int = 64,
     (id, vector, cell) PARTITIONED BY cell, so a probe reads only its
     probed cells' directories (the partition-pruning move
     write_text_index makes for terms, applied to vector cells; the
-    LSH/PQ stores' missing sibling). Training and assignment are the
-    exact ann_topk_ivf kernels, so probing a stored index at the same
-    parameters is row-identical to the in-memory operator (pinned)."""
+    LSH/PQ stores' missing sibling). The entries are _ivf_entries —
+    the relation ann_topk_ivf probes in memory — so probing a stored
+    index at the same parameters is row-identical to the in-memory
+    operator (pinned)."""
     emb = valid_vectors(emb, vec_col)
-    if dims is None:
-        dims = _probe_dims(emb, vec_col)
-    cent = _train_ivf_centroids(emb, n_cells, dims, sample_cap, seed,
+    cent = _train_ivf_centroids(emb, n_cells, sample_cap, seed,
                                 id_col, vec_col)
     spark = emb.sparkSession
     spark.createDataFrame(
@@ -1390,9 +1360,7 @@ def write_ivf_index(emb: DataFrame, path: str, n_cells: int = 64,
         "cell int, centroid array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
     (
-        emb.select(F.col(id_col), F.col(vec_col),
-                   _ivf_cell_udf(cent)(F.col(vec_col)).cast("int")
-                   .alias("cell"))
+        _ivf_entries(emb, cent, id_col, vec_col)
         .repartition("cell")
         .write.mode("overwrite").partitionBy("cell")
         .parquet(f"{path}/entries")
@@ -1414,39 +1382,19 @@ def ivf_topk_indexed(entries: DataFrame, cent: np.ndarray,
                      id_col: str = "vec_id", vec_col: str = "embedding",
                      q_id: str = "query_id",
                      q_vec: str = "q_vec") -> DataFrame:
-    """ann_topk_ivf's probe phase against a persisted index: each
-    query expands to its n_probe nearest stored centroids, the probed
-    cell ids (≤ |queries| × n_probe scalars) prune the entries scan to
-    their partition directories, and candidates rescore with the exact
-    JVM cosine — row-identical to ann_topk_ivf at the same training
-    parameters; n_probe = n_cells still degrades to brute force."""
+    """ann_topk_ivf's probe against a persisted index: each query
+    expands to its n_probe nearest stored centroids, the probed cell
+    ids (≤ |queries| × n_probe scalars, one collect job) prune the
+    entries scan to their partition directories, and the shared
+    cell-join → exact score → top-k step does the rest — so the
+    output is ann_topk_ivf's at the same training parameters;
+    n_probe = n_cells still degrades to brute force."""
     queries = valid_vectors(queries, q_vec)
-    probe_n = min(n_probe, len(cent))
-    qb = queries.select(
-        F.col(q_id), F.col(q_vec),
-        F.explode(_ivf_probe_udf(cent, probe_n)(F.col(q_vec)))
-        .alias("cell"))
-    qb = qb.withColumn("cell", F.col("cell").cast("int"))
+    qb = _ivf_probes(queries, cent, n_probe, q_id, q_vec)
     probed = [r["cell"] for r in qb.select("cell").distinct().collect()]
-    scored = (
-        entries.filter(F.col("cell").isin(probed))
-        .join(broadcast(qb), "cell")
-        .filter(F.col(id_col) != F.col(q_id))
-        .select(
-            F.col(q_id),
-            F.col(id_col).alias("neighbor_id"),
-            V.cosine_gated(vec_col, q_vec).alias("score"),
-        )
-    )
-    w = Window.partitionBy(q_id).orderBy(F.col("score").desc(),
-                                         F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, "rank", "neighbor_id",
-                F.round("score", 9).alias("score"))
-        .orderBy(q_id, "rank")
-    )
+    return _topk_by_query(
+        _ivf_scored(entries.filter(F.col("cell").isin(probed)), qb,
+                    id_col, vec_col, q_id, q_vec), k, q_id)
 
 
 def append_ivf_index(emb_new: DataFrame, path: str,
@@ -1489,9 +1437,7 @@ def append_ivf_index(emb_new: DataFrame, path: str,
         raise ValueError(
             f"append_ivf_index: id {dup[0][0]} already stored in "
             f"{path} — appending would double its entry")
-    assigned = new.select(
-        F.col(id_col), F.col(vec_col),
-        _ivf_cell_udf(cent)(F.col(vec_col)).cast("int").alias("cell"))
+    assigned = _ivf_entries(new, cent, id_col, vec_col)
     # eagerly materialise before writing into the directory tree the
     # plan is still lazily reading from (the append_text_index lesson)
     assigned = assigned.localCheckpoint()
@@ -1575,8 +1521,7 @@ def append_ann_index(emb_new: DataFrame, path: str,
             f"append_ann_index: id {dup[0][0]} already indexed in {path}")
     h = hyperplane_buckets_udf(dims, n_planes, n_tables, seed0)
     (
-        new.select(F.col(id_col), F.col(vec_col),
-                   F.posexplode(h(F.col(vec_col))).alias("tbl", "bucket"))
+        _lsh_postings(new, h, id_col, vec_col)
         .repartition("tbl")
         .sortWithinPartitions("bucket")
         .write.mode("append").partitionBy("tbl").parquet(path)

@@ -40,6 +40,33 @@ def _term_bucket(term, n_buckets: int = N_TERM_BUCKETS):
     return F.pmod(F.xxhash64(term), F.lit(n_buckets)).cast("int")
 
 
+def _in_term_buckets(terms, n_buckets: int):
+    """Partition filter for the buckets ``terms`` hash into: the bucket
+    expressions are over literals, so Catalyst constant-folds them and
+    the scan plans ``PartitionFilters: [bucket IN (…)]`` — no job."""
+    return F.col("bucket").isin(
+        [_term_bucket(F.lit(t), n_buckets) for t in terms])
+
+
+def _postings(docs: DataFrame):
+    """(tf, dl) — the two relations a text store holds, derived from
+    one tokenise of ``docs``: tf = (term, doc_id, tf, positions), dl =
+    (doc_id, dl). Positions are 0-based token offsets, sorted — tf
+    rides as their count; the positional payload is what makes phrase
+    queries an index probe instead of a corpus scan."""
+    toks = (
+        docs.filter(F.col("doc_id").isNotNull())
+        .select("doc_id",
+                F.posexplode(T.tokens("text")).alias("pos", "term"))
+    )
+    tf = toks.groupBy("term", "doc_id").agg(
+        F.array_sort(F.collect_list("pos")).alias("positions"),
+    ).select("term", "doc_id", F.size("positions").alias("tf"),
+             "positions")
+    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
+    return tf, dl
+
+
 def write_text_index(docs: DataFrame, path: str,
                      n_buckets: int = N_TERM_BUCKETS) -> None:
     """Persist the inverted index of a corpus:
@@ -59,19 +86,7 @@ def write_text_index(docs: DataFrame, path: str,
 
     Deterministic: same corpus → byte-identical relations.
     """
-    toks = (
-        docs.filter(F.col("doc_id").isNotNull())
-        .select("doc_id",
-                F.posexplode(T.tokens("text")).alias("pos", "term"))
-    )
-    # positions are 0-based token offsets, sorted — tf rides as their
-    # count; the positional payload is what makes phrase queries an
-    # index probe instead of a corpus scan
-    tf = toks.groupBy("term", "doc_id").agg(
-        F.array_sort(F.collect_list("pos")).alias("positions"),
-    ).select("term", "doc_id", F.size("positions").alias("tf"),
-             "positions")
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
+    tf, dl = _postings(docs)
     (
         tf.withColumn("bucket", _term_bucket(F.col("term"), n_buckets))
         .repartition("bucket")
@@ -148,14 +163,8 @@ def bm25_topk_indexed(spark: SparkSession, path: str,
             [], "rank int, doc_id long, n_hits long, score double")
     n_buckets = stored_n_buckets(stats, n_buckets)
     avgdl = stats["total_tokens"] / stats["n_docs"]
-    buckets = [
-        r["b"] for r in
-        spark.createDataFrame([(q,) for q in query], "term string")
-        .select(_term_bucket(F.col("term"), n_buckets).alias("b"))
-        .distinct().collect()
-    ]
     tf = postings.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(list(query)))
+        _in_term_buckets(query, n_buckets) & F.col("term").isin(list(query)))
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     k11, one_minus_b = k1 + 1.0, 1.0 - b
     idf = ((F.lit(n_docs) - F.col("df")).cast("double") + 0.5) \
@@ -212,14 +221,8 @@ def phrase_topk_indexed(spark: SparkSession, path: str,
         raise ValueError(f"k={k} exceeds BM25_MAX_K={BM25_MAX_K}")
     postings, doclens, stats = read_text_index(spark, path)
     n_buckets = stored_n_buckets(stats, n_buckets)
-    buckets = [
-        r["b"] for r in
-        spark.createDataFrame([(q,) for q in set(phrase)], "term string")
-        .select(_term_bucket(F.col("term"), n_buckets).alias("b"))
-        .distinct().collect()
-    ]
     pruned = postings.filter(
-        F.col("bucket").isin(buckets)
+        _in_term_buckets(phrase, n_buckets)
         & F.col("term").isin(list(set(phrase))))
     # one side per phrase slot; a term repeated in the phrase reuses
     # its (single) posting row per doc under a different alias
@@ -287,17 +290,9 @@ def append_text_index(docs_new: DataFrame, path: str) -> None:
             f"{path}; incremental appends require fresh ids (re-crawls "
             "of existing docs need corpus_delta + rebuild of affected "
             "docs, not a blind append)")
-    toks = (
-        docs_new.filter(F.col("doc_id").isNotNull())
-        .select("doc_id",
-                F.posexplode(T.tokens("text")).alias("pos", "term"))
-    )
-    tf_new = toks.groupBy("term", "doc_id").agg(
-        F.array_sort(F.collect_list("pos")).alias("positions"),
-    ).select("term", "doc_id", F.size("positions").alias("tf"),
-             "positions",
-             _term_bucket(F.col("term"), n_buckets).alias("bucket"))
-    dl_new = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
+    tf_new, dl_new = _postings(docs_new)
+    tf_new = tf_new.withColumn("bucket",
+                               _term_bucket(F.col("term"), n_buckets))
     affected = [r["bucket"] for r in
                 tf_new.select("bucket").distinct().collect()]
     if affected:

@@ -81,7 +81,7 @@ def validate_ann_index(spark: SparkSession, path: str,
     a parameter mismatch shows up as mass posting mismatches, which is
     the desired loud failure."""
     from resin_spark.operators.similarity import (
-        _probe_dims, hyperplane_buckets_udf, read_ann_index,
+        _lsh_postings, _probe_dims, hyperplane_buckets_udf, read_ann_index,
     )
 
     idx = read_ann_index(spark, path)
@@ -89,10 +89,7 @@ def validate_ann_index(spark: SparkSession, path: str,
     if dims is None:
         dims = _probe_dims(entries, vec_col)
     h = hyperplane_buckets_udf(dims, n_planes, n_tables, seed0)
-    recomputed = entries.select(
-        F.col(id_col),
-        F.posexplode(h(F.col(vec_col))).alias("tbl", "bucket"),
-    )
+    recomputed = _lsh_postings(entries, h, id_col, vec_col)
     stored = idx.select(id_col, F.col("tbl").cast("int").alias("tbl"),
                         "bucket")
     n_missing, n_extra, unfindable = _posting_compare(

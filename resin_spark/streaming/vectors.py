@@ -18,12 +18,11 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from resin_spark.functions import vectors as V
 from resin_spark.operators import similarity as S
 
 
 def stream_ann_topk(spark: SparkSession, queries_parquet_dir: str,
-                    index_emb, k: int = 10, dims: int = 64,
+                    index_emb, k: int = 10, dims: int | None = None,
                     n_planes: int = 8, n_tables: int = 4,
                     probe_radius: int = 2, seed0: int = 7,
                     id_col: str = "vec_id", vec_col: str = "embedding"):
@@ -51,41 +50,35 @@ def stream_ann_topk(spark: SparkSession, queries_parquet_dir: str,
 
     Output (update mode): (query_id, neighbors array<struct<rank,
     neighbor_id, score>>) — ``score`` rounded to 9 decimals like the
-    batch path.
+    batch path. ``dims=None`` (default) probes the corpus width, as
+    lsh_topk does.
     """
-    idx = index_emb.select(
-        F.col(id_col), F.col(vec_col),
-        F.posexplode(
-            S.hyperplane_buckets_udf(dims, n_planes, n_tables, seed0)(F.col(vec_col))
-        ).alias("tbl", "bucket"),
-    ).localCheckpoint(eager=False)
+    if dims is None:
+        dims = S._probe_dims(index_emb, vec_col)
+    h = S.hyperplane_buckets_udf(dims, n_planes, n_tables, seed0)
+    idx = S._lsh_postings(index_emb, h, id_col, vec_col) \
+        .localCheckpoint(eager=False)
+    qb = S._lsh_probes(_query_stream(spark, queries_parquet_dir, id_col,
+                                     vec_col),
+                       h, n_planes, probe_radius, "query_id", "q_vec")
+    pairs = qb.join(idx, on=["tbl", "bucket"]) \
+        .dropDuplicates(["query_id", id_col])
+    return _topk_update_agg(
+        S._score_candidates(pairs, id_col, vec_col, "query_id", "q_vec"), k)
 
+
+def _query_stream(spark: SparkSession, queries_parquet_dir: str,
+                  id_col: str, vec_col: str):
+    """The query file stream, one file per trigger, as the batch
+    probes' (query_id, q_vec) side."""
     schema = spark.read.parquet(queries_parquet_dir).schema
-    stream = (
+    return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(queries_parquet_dir)
+        .select(F.col(id_col).alias("query_id"),
+                F.col(vec_col).alias("q_vec"))
     )
-    qh = S.hyperplane_buckets_udf(dims, n_planes, n_tables, seed0)
-    qb = S._multi_probe(
-        stream.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.posexplode(qh(F.col(vec_col))).alias("tbl", "bucket"),
-        ),
-        n_planes, probe_radius,
-    )
-    cand = (
-        qb.join(idx, on=["tbl", "bucket"])
-        .filter(F.col(id_col) != F.col("query_id"))
-        .dropDuplicates(["query_id", id_col])
-    )
-    scored = cand.select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        V.cosine_gated(vec_col, "q_vec").alias("score"),
-    )
-    return _topk_update_agg(scored, k)
 
 
 def _topk_update_agg(scored, k: int):
@@ -147,26 +140,9 @@ def stream_ivf_topk(spark: SparkSession, queries_parquet_dir: str,
     """
     entries, cent = S.read_ivf_index(spark, index_path)
     entries = entries.localCheckpoint(eager=False)
-    probe_n = min(n_probe, len(cent))
-    schema = spark.read.parquet(queries_parquet_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(queries_parquet_dir)
-    )
-    qb = stream.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.explode(S._ivf_probe_udf(cent, probe_n)(F.col(vec_col)))
-        .alias("cell"),
-    ).withColumn("cell", F.col("cell").cast("int"))
-    scored = (
-        qb.join(entries, "cell")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            V.cosine_gated(vec_col, "q_vec").alias("score"),
-        )
-    )
-    return _topk_update_agg(scored, k)
+    qb = S._ivf_probes(_query_stream(spark, queries_parquet_dir, id_col,
+                                     vec_col),
+                       cent, n_probe, "query_id", "q_vec")
+    return _topk_update_agg(
+        S._score_candidates(qb.join(entries, "cell"), id_col, vec_col,
+                            "query_id", "q_vec"), k)

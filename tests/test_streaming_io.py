@@ -460,6 +460,47 @@ def test_stream_ann_topk_matches_batch_lsh(spark, tmp_path):
     assert got == want
 
 
+def test_stream_ann_topk_probes_corpus_width(spark, tmp_path):
+    """With dims unset, streaming ANN sizes its hyperplanes from the
+    corpus like lsh_topk does: on a 12-wide corpus (not the testdata's
+    64) every micro-batch must equal the batch lsh_topk result instead
+    of dying in the hyperplane matmul."""
+    import numpy as np
+    from resin_spark.operators import similarity as S
+    from resin_spark.streaming import vectors as sv
+
+    rng = np.random.RandomState(5)
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in rng.standard_normal(12)])
+         for i in range(300)],
+        "vec_id long, embedding array<float>")
+    queries = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
+    want = {}
+    for r in S.lsh_topk(emb, queries).collect():
+        want.setdefault(r["query_id"], []).append(
+            (r["rank"], r["neighbor_id"], r["score"]))
+    assert want
+
+    qdir = str(tmp_path / "q12")
+    emb.filter(F.col("vec_id") < 8).coalesce(1).write.parquet(qdir)
+    q = (
+        sv.stream_ann_topk(spark, qdir, emb)
+        .writeStream.format("memory")
+        .queryName("ann_stream_w12")
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ckpt_w12"))
+        .start()
+    )
+    assert q.awaitTermination(180), "stream did not drain (overloaded machine?)"
+    got = {}
+    for r in spark.sql("SELECT * FROM ann_stream_w12").collect():
+        got[r["query_id"]] = [(n["rank"], n["neighbor_id"], n["score"])
+                              for n in r["neighbors"]]
+    assert got == want
+
+
 def test_shingle_hashes_per_row_matches_batch_on_edge_docs(spark):
     """The per-row shingle-hash expression (stream path) must produce
     exactly the batch shingles()->groupBy hash set for every document,

@@ -47,6 +47,30 @@ def test_indexed_bm25_prunes_to_query_buckets(spark, index_dir):
     assert scan_line  # postings scan exists
 
 
+def test_probe_frames_run_no_job_beyond_reading_the_store(spark, index_dir):
+    """Building either probe's frame runs only the jobs of reading the
+    store: the query terms' bucket list is a literal expression that
+    Catalyst folds into the partition filter, not a collect job."""
+    sc = spark.sparkContext
+
+    def jobs(group, build):
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status tracker is fed by the listener bus: drain it first
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    ti.read_text_index(spark, index_dir)  # warm the file-status cache
+    read = jobs("ti-read", lambda: ti.read_text_index(spark, index_dir))
+    assert jobs("ti-bm25", lambda: ti.bm25_topk_indexed(spark, index_dir)) \
+        == read
+    assert jobs("ti-phrase",
+                lambda: ti.phrase_topk_indexed(spark, index_dir)) == read
+
+
 def test_text_index_validator_roundtrip_and_corruption(spark, tmp_path):
     docs = load_tables(spark, SF)["documents"].limit(120)
     path = str(tmp_path / "text_idx")
