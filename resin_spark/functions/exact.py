@@ -75,10 +75,3 @@ def dravg_sql(expr: str, scale: int = 2, precision: int = 18) -> str:
 def dsum_sql(expr: str, scale: int = 2, precision: int = 18) -> str:
     """The matching ANSI-SQL fragment for :func:`dsum` (DuckDB oracle)."""
     return f"CAST(SUM(CAST(({expr}) AS DECIMAL({precision},{scale}))) AS DOUBLE)"
-
-
-def davg_sql(expr: str, scale: int = 2, precision: int = 18) -> str:
-    return (
-        f"CAST(SUM(CAST(({expr}) AS DECIMAL({precision},{scale}))) AS DOUBLE)"
-        f" / COUNT({expr})"
-    )

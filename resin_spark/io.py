@@ -164,6 +164,21 @@ def read_cirrussearch(spark: SparkSession, path: str, fields: list[str],
     return df
 
 
+def file_stream(spark: SparkSession, parquet_dir: str,
+                schema=None) -> DataFrame:
+    """readStream over a parquet directory, one file per trigger — the
+    source every streaming twin reads. The schema defaults to the one
+    of the files already in the directory (a file source needs it up
+    front)."""
+    if schema is None:
+        schema = spark.read.parquet(parquet_dir).schema
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(parquet_dir)
+    )
+
+
 def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None,
                   mode: str = "overwrite") -> None:
     w = df.write.mode(mode)

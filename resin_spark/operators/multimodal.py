@@ -176,18 +176,6 @@ def feature_extract(t: Tables) -> DataFrame:
     return with_payload(t["documents"]).mapInPandas(gen, schema).orderBy("doc_id")
 
 
-def feature_extract_oracle() -> str:
-    feats = ", ".join(
-        _hex_to_int_sql(f"substr(md5(coalesce(text, '')), {i * 4 + 1}, 4)")
-        + " / 65536.0"
-        for i in range(N_FEATURES)
-    )
-    return f"""
-    SELECT doc_id, [{feats}] AS features
-    FROM documents ORDER BY doc_id
-    """
-
-
 def feature_extract_flat(t: Tables) -> DataFrame:
     """Driver-facing flat form of :func:`feature_extract`: one
     (doc_id, feat_idx, feature) row per vector slot. The array column

@@ -158,7 +158,8 @@ def bm25_topk_indexed(spark: SparkSession, path: str,
     n_docs = stats["n_docs"] if stats else 0
     if not n_docs:
         # an index over zero tokenized docs: avgdl undefined, nothing
-        # can match (the bm25_scores empty-corpus guard's indexed twin)
+        # can match (bm25_scores' empty corpus, where bm25_stats keeps
+        # no term)
         return spark.createDataFrame(
             [], "rank int, doc_id long, n_hits long, score double")
     n_buckets = stored_n_buckets(stats, n_buckets)

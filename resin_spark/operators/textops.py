@@ -10,6 +10,8 @@ langs), which AQE coalesces.
 from __future__ import annotations
 
 import math
+import operator
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -801,6 +803,80 @@ BM25_B = 0.75
 BM25_TOPK = 20
 
 
+def _bm25_tf(docs: DataFrame, terms: tuple[str, ...]) -> DataFrame:
+    """(doc_id, dl, tf_0, …): per-doc length and per-term frequencies
+    as ROW-LOCAL array ops over one tokenize — tokenized docs only."""
+    def _tf(i: int, q: str):
+        # closure per call: a default-arg lambda would change the
+        # lambda's arity and make F.filter bind the array INDEX to it
+        return F.size(F.filter("tk", lambda x: x == q)).alias(f"tf_{i}")
+
+    return (
+        T.prepare_documents(docs).select("doc_id", "tk")
+        .filter(F.col("doc_id").isNotNull())
+        .filter(F.size("tk") >= 1)
+        .select("doc_id", F.size("tk").alias("dl"),
+                *[_tf(i, q) for i, q in enumerate(terms)])
+    )
+
+
+def bm25_stats(docs: DataFrame, query: tuple[str, ...] = BM25_QUERY):
+    """(df_by_term, n_docs, avgdl): the corpus statistics BM25 scores
+    with, from ONE aggregate probe over ``docs``. ``df_by_term`` keeps
+    query order and only the terms the corpus holds (df > 0): a term
+    no doc contains has no defined idf and can add no hit. avgdl is
+    None when no doc has a token."""
+    # The query is a SET of terms (the pre-r11 groupBy(doc_id, term)
+    # path deduped implicitly); the positional enumeration would
+    # otherwise score and count a duplicated term twice (ADVICE r11).
+    query = tuple(dict.fromkeys(query))
+    stats = _bm25_tf(docs, query).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("dl").alias("tot"),
+        *[F.count(F.when(F.col(f"tf_{i}") > 0, F.lit(1))).alias(f"df_{i}")
+          for i in range(len(query))],
+    ).first()
+    n = stats["n"]
+    df_by_term = {q: stats[f"df_{i}"] for i, q in enumerate(query)
+                  if stats[f"df_{i}"]}
+    return df_by_term, n, (stats["tot"] / n if n else None)
+
+
+def bm25_score_rows(docs: DataFrame, stats, k1: float = BM25_K1,
+                    b: float = BM25_B) -> DataFrame:
+    """(doc_id, n_hits, score) for every doc of ``docs`` with a query
+    hit, scored against ``stats`` (a :func:`bm25_stats` triple, which
+    may come from another corpus — the streaming twin scores arriving
+    docs against a frozen one). Row-local: the statistics fold into
+    the expression as literals, so ``docs`` may be a stream."""
+    df_by_term, n_docs, avgdl = stats
+    terms = tuple(df_by_term)
+    k11, one_minus_b = k1 + 1.0, 1.0 - b
+    ratio = F.col("dl").cast("double") / F.lit(avgdl)
+    denom_base = F.lit(k1) * (F.lit(one_minus_b) + F.lit(b) * ratio)
+
+    def term_score(i: int, df_i: int):
+        idf = ((n_docs - df_i) + 0.5) / (df_i + 0.5)
+        tf = F.col(f"tf_{i}").cast("double")
+        score_t = F.lit(idf) * ((tf * F.lit(k11)) / (tf + denom_base))
+        return F.when(F.col(f"tf_{i}") > 0,
+                      score_t.cast("string").cast("decimal(28,15)"))
+
+    zero = F.lit(0).cast("decimal(28,15)")
+    scores = [F.coalesce(term_score(i, df_by_term[q]), zero)
+              for i, q in enumerate(terms)]
+    hits = [(F.col(f"tf_{i}") > 0).cast("long") for i in range(len(terms))]
+    # no term to score (an empty corpus, or none of the query in it):
+    # the typed empty relation
+    score_sum = reduce(operator.add, scores) if terms else zero
+    n_hits = reduce(operator.add, hits) if terms else F.lit(0).cast("long")
+    return (
+        _bm25_tf(docs, terms).withColumn("n_hits", n_hits)
+        .filter(F.col("n_hits") > 0)
+        .select("doc_id", "n_hits", score_sum.cast("double").alias("score"))
+    )
+
+
 def bm25_scores(t: Tables, query: tuple[str, ...] = BM25_QUERY,
                 k1: float = BM25_K1, b: float = BM25_B) -> DataFrame:
     """(doc_id, n_hits, score): the full unranked BM25 per-doc scoring
@@ -813,69 +889,18 @@ def bm25_scores(t: Tables, query: tuple[str, ...] = BM25_QUERY,
     term frequencies are ROW-LOCAL array ops (size(filter(tk, = term))
     per term) over one tokenize — no token explode, no (doc, term)
     shuffle, no scoring joins. Corpus statistics (n_docs, avgdl, df per
-    term) come from ONE aggregate probe whose scalars fold into the
-    scoring expression as literals; the per-(doc, term) score_t doubles
-    and their decimal(28,15)-exact sum are bit-identical to the
-    previous join form (decimal addition is exact, so summing the
-    fixed per-term order equals summing the shuffle order), keeping
-    the oracle hash and the streaming twin's bit-equality pin green.
-    At 100 TB this removes the corpus-token-count exchange entirely:
-    the only remaining shuffle in bm25_search is the ≤ k top-k."""
-    # The query is a SET of terms (the pre-r11 groupBy(doc_id, term)
-    # path deduped implicitly); the positional enumeration below would
-    # otherwise score and count a duplicated term twice (ADVICE r11).
-    query = tuple(dict.fromkeys(query))
-
-    def _tf(i: int, q: str):
-        # closure per call: a default-arg lambda would change the
-        # lambda's arity and make F.filter bind the array INDEX to it
-        return F.size(F.filter("tk", lambda x: x == q)).alias(f"tf_{i}")
-
-    tf_cols = [_tf(i, q) for i, q in enumerate(query)]
-    base = (
-        T.prepare_documents(t["documents"]).select("doc_id", "tk")
-        .filter(F.col("doc_id").isNotNull())
-        .filter(F.size("tk") >= 1)
-        .select("doc_id", F.size("tk").alias("dl"), *tf_cols)
-    )
-    stats = base.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("dl").alias("tot"),
-        *[F.count(F.when(F.col(f"tf_{i}") > 0, F.lit(1))).alias(f"df_{i}")
-          for i in range(len(query))],
-    ).first()
-    if not stats["n"]:
-        # zero tokenized docs: avgdl is undefined and nothing can match
-        # (found by the hypothesis sweep: sum() is NULL over an empty
-        # frame and None / 0 threw) — the empty relation, typed
-        return t["documents"].sparkSession.createDataFrame(
-            [], "doc_id long, n_hits long, score double")
-    n_docs, avgdl = stats["n"], stats["tot"] / stats["n"]
-    k11, one_minus_b = k1 + 1.0, 1.0 - b
-    ratio = F.col("dl").cast("double") / F.lit(avgdl)
-    denom_base = F.lit(k1) * (F.lit(one_minus_b) + F.lit(b) * ratio)
-
-    def term_score(i: int):
-        df_i = stats[f"df_{i}"]
-        idf = ((n_docs - df_i) + 0.5) / (df_i + 0.5)
-        tf = F.col(f"tf_{i}").cast("double")
-        score_t = F.lit(idf) * ((tf * F.lit(k11)) / (tf + denom_base))
-        return F.when(F.col(f"tf_{i}") > 0,
-                      score_t.cast("string").cast("decimal(28,15)"))
-
-    zero = F.lit(0).cast("decimal(28,15)")
-    score_sum = F.coalesce(term_score(0), zero)
-    for i in range(1, len(query)):
-        score_sum = score_sum + F.coalesce(term_score(i), zero)
-    n_hits = None
-    for i in range(len(query)):
-        hit = (F.col(f"tf_{i}") > 0).cast("long")
-        n_hits = hit if n_hits is None else n_hits + hit
-    return (
-        base.withColumn("n_hits", n_hits)
-        .filter(F.col("n_hits") > 0)
-        .select("doc_id", "n_hits", score_sum.cast("double").alias("score"))
-    )
+    term) come from ONE aggregate probe (:func:`bm25_stats`) whose
+    scalars fold into the scoring expression (:func:`bm25_score_rows`)
+    as literals; the per-(doc, term) score_t doubles and their
+    decimal(28,15)-exact sum are bit-identical to the previous join
+    form (decimal addition is exact, so summing the fixed per-term
+    order equals summing the shuffle order), keeping the oracle hash
+    green. The streaming twin applies the same projection to arriving
+    docs. At 100 TB this removes the corpus-token-count exchange
+    entirely: the only remaining shuffle in bm25_search is the ≤ k
+    top-k."""
+    docs = t["documents"]
+    return bm25_score_rows(docs, bm25_stats(docs, query), k1, b)
 
 
 BM25_MAX_K = 100_000
@@ -981,19 +1006,12 @@ PHRASE_QUERY = ("merge", "sort")
 PHRASE_TOPK = 20
 
 
-def phrase_search(t: Tables, phrase: tuple[str, ...] = PHRASE_QUERY,
-                  k: int = PHRASE_TOPK) -> DataFrame:
-    """Exact consecutive-phrase search: top-k documents by number of
-    occurrences of ``phrase`` as an adjacent token sequence —
-    (rank, doc_id, n_occurrences, n_tokens). The positional face of
-    the search block beside ranked bag-of-terms retrieval (bm25) and
-    vector search (closest_match).
-
-    Scale: occurrence counting is ROW-LOCAL — one pass builds the
-    token array and a higher-order filter counts the match positions
-    (no explode, no positional-postings join, no shuffle at all before
-    the top-k); the global top-k is orderBy+limit (TakeOrdered).
-    Integer counts make the oracle hash-exact with no float care.
+def phrase_matches(docs: DataFrame,
+                   phrase: tuple[str, ...] = PHRASE_QUERY) -> DataFrame:
+    """(doc_id, n_occurrences, n_tokens) for every doc of ``docs``
+    holding ``phrase`` as an adjacent token sequence at least once —
+    the scored relation phrase_search ranks and the streaming phrase
+    matcher emits. Row-local, so ``docs`` may be a stream.
 
     The token array is materialised by a LOWER projection and the
     match lambda references that column, not the tokenize expression:
@@ -1004,15 +1022,19 @@ def phrase_search(t: Tables, phrase: tuple[str, ...] = PHRASE_QUERY,
     0.6 s for the same corpus scan in text_tokenize_stats).
     CollapseProject cannot re-inline it: the column is referenced more
     than once and tokenize is not a cheap expression.
+
+    Non-matching docs are dropped by a generator (inline over a
+    one-element array filtered on the count), not a Filter: predicate
+    pushdown moves a Filter below the tk projection with the alias
+    substituted, re-inlining the tokenizer into every element_at
+    (measured 6×), and it does not push through a Generate.
     """
     if not phrase:
         raise ValueError("phrase must contain at least one term")
-    if k > BM25_MAX_K:
-        raise ValueError(f"k={k} exceeds BM25_MAX_K={BM25_MAX_K}")
     n = len(phrase)
     base = (
-        t["documents"].filter(F.col("doc_id").isNotNull())
-        .select("doc_id", T.tokens("text").alias("tk"))
+        T.prepare_documents(docs).filter(F.col("doc_id").isNotNull())
+        .select("doc_id", "tk")
     )
     tk = F.col("tk")
     # sequence(1, stop) COUNTS DOWN when stop < 1 (the bpe_train /
@@ -1029,22 +1051,34 @@ def phrase_search(t: Tables, phrase: tuple[str, ...] = PHRASE_QUERY,
             cond = cond & (F.element_at(tk, (i + j).cast("int")) == phrase[j])
         return cond
 
-    occurrences = F.size(F.filter(starts, match_at))
-    scored = base.select(
-        "doc_id",
-        occurrences.alias("n_occurrences"),
+    scored = F.struct(
+        F.size(F.filter(starts, match_at)).alias("n_occurrences"),
         F.size(tk).alias("n_tokens"),
     )
-    # The >0 filter runs AFTER the limit: a pre-TakeOrdered filter gets
-    # predicate-pushed below the tk projection with the whole
-    # occurrences expression substituted — re-inlining the tokenizer
-    # the lower projection exists to run once (measured 6x). Past the
-    # limit it cannot push, and the output is identical: every
-    # positive count sorts before every zero, so the top-k prefix of
-    # all docs filtered to >0 is exactly the top-k of matching docs.
+    return base.select("doc_id", F.inline(F.filter(
+        F.array(scored), lambda r: r["n_occurrences"] > 0)))
+
+
+def phrase_search(t: Tables, phrase: tuple[str, ...] = PHRASE_QUERY,
+                  k: int = PHRASE_TOPK) -> DataFrame:
+    """Exact consecutive-phrase search: top-k documents by number of
+    occurrences of ``phrase`` as an adjacent token sequence —
+    (rank, doc_id, n_occurrences, n_tokens). The positional face of
+    the search block beside ranked bag-of-terms retrieval (bm25) and
+    vector search (closest_match).
+
+    Scale: occurrence counting is ROW-LOCAL (:func:`phrase_matches` —
+    one pass builds the token array and a higher-order filter counts
+    the match positions; no explode, no positional-postings join, no
+    shuffle at all before the top-k); the global top-k is
+    orderBy+limit (TakeOrdered). Integer counts make the oracle
+    hash-exact with no float care.
+    """
+    if k > BM25_MAX_K:
+        raise ValueError(f"k={k} exceeds BM25_MAX_K={BM25_MAX_K}")
     top = (
-        scored.orderBy(F.col("n_occurrences").desc(), "doc_id").limit(k)
-        .filter(F.col("n_occurrences") > 0)
+        phrase_matches(t["documents"], phrase)
+        .orderBy(F.col("n_occurrences").desc(), "doc_id").limit(k)
     )
     w = Window.orderBy(F.col("n_occurrences").desc(), "doc_id")
     return (

@@ -55,6 +55,41 @@ N_SHARDS = 16
 
 # --- unigram-LM perplexity scoring -------------------------------------------
 
+def _doc_tokens(docs: DataFrame) -> DataFrame:
+    """(doc_id, tok): one row per token of every doc with an id."""
+    return (
+        T.prepare_documents(docs).filter(F.col("doc_id").isNotNull())
+        .select("doc_id", F.explode("tk").alias("tok"))
+    )
+
+
+def unigram_bits_frame(toks: DataFrame) -> DataFrame:
+    """(tok, tf, total, bits, oov_bits): the unigram LM over the ``tok``
+    column of ``toks``, one row per distinct token — bits = −log2
+    tf/total and oov_bits = −log2 1/total (the information content of
+    a singleton, the scorers' out-of-vocabulary prior), each rounded to
+    6 once. Shared by quality_perplexity, the bigram LM's unigram
+    back-off and the streaming artifact builds (streaming/quality.py).
+
+    The vocabulary-sized tf frame is localCheckpointed: both the total
+    and the per-token bits read it, which without the checkpoint
+    re-runs the full tokenise+aggregate lineage (3 corpus scans instead
+    of the inherent 2 — build the LM, then score with it). The frame is
+    |vocab| rows, safe to pin at any corpus size."""
+    lm = (
+        toks.groupBy("tok").agg(F.count(F.lit(1)).alias("tf"))
+        .localCheckpoint(eager=False)
+    )
+    total = lm.agg(F.sum("tf").alias("total"))
+    return lm.join(broadcast(total)).select(
+        "tok", "tf", "total",
+        F.round(-F.log2(F.col("tf").cast("double")
+                        / F.col("total").cast("double")), 6).alias("bits"),
+        F.round(-F.log2(F.lit(1.0) / F.col("total").cast("double")), 6)
+        .alias("oov_bits"),
+    )
+
+
 def quality_perplexity(t: Tables) -> DataFrame:
     """Per-doc mean negative log2 unigram probability (bits/token).
 
@@ -72,28 +107,9 @@ def quality_perplexity(t: Tables) -> DataFrame:
     sum (functions/exact.py). Docs with zero tokens vanish at the
     explode in both engines.
     """
-    toks = (
-        t["documents"]
-        .filter(F.col("doc_id").isNotNull())
-        .select("doc_id", F.explode(T.tokens("text")).alias("tok"))
-    )
-    # localCheckpoint the vocabulary-sized LM: both the total and the
-    # per-token bits read it, which without the checkpoint re-runs the
-    # full tokenise+aggregate lineage (3 corpus scans instead of the
-    # inherent 2 — build the LM, then score with it). The checkpointed
-    # frame is |vocab| rows, safe to pin at any corpus size.
-    lm = (
-        toks.groupBy("tok").agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
-    )
-    total = lm.agg(F.sum("tf").alias("total"))
-    bits = lm.join(broadcast(total)).select(
-        "tok",
-        F.round(-F.log2(F.col("tf").cast("double")
-                        / F.col("total").cast("double")), 6).alias("bits"),
-    )
+    toks = _doc_tokens(t["documents"])
     return (
-        toks.join(bits, "tok")
+        toks.join(unigram_bits_frame(toks).select("tok", "bits"), "tok")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
@@ -510,13 +526,13 @@ def _bigram_instances(base: DataFrame) -> DataFrame:
 
 def bigram_bits_frames(base: DataFrame):
     """(bits_bi, bits_uni): the KN bigram LM as two vocabulary-sized
-    frames — (w1, w2, bits) for every observed bigram type and
-    (w, bits) for every unigram — shared by the batch scorer and the
-    streaming artifact build (streaming/quality.py). ``base`` is a
-    _doc_token_arrays frame. All stats derive from ONE checkpointed
-    bigram-type frame plus one unigram aggregate; the bits expression
-    keeps a fixed IEEE operation order so both engines and both
-    consumers agree bit-for-bit."""
+    frames — (w1, w2, c12, bits) for every observed bigram type and
+    the :func:`unigram_bits_frame` of every token — shared by the batch
+    scorer and the streaming artifact build (streaming/quality.py).
+    ``base`` is a _doc_token_arrays frame. All stats derive from ONE
+    checkpointed bigram-type frame plus one unigram aggregate; the bits
+    expression keeps a fixed IEEE operation order so both engines and
+    both consumers agree bit-for-bit."""
     D = KN_DISCOUNT
     bi = _bigram_instances(base)
     big_types = (
@@ -546,15 +562,7 @@ def bigram_bits_frames(base: DataFrame):
             ), 6).alias("bits"),
         )
     )
-    toks = base.select(F.explode("tk").alias("w"))
-    uni = toks.groupBy("w").agg(F.count(F.lit(1)).alias("cw")) \
-        .localCheckpoint(eager=False)
-    utot = uni.agg(F.sum("cw").alias("total"))
-    bits_uni = uni.join(broadcast(utot)).select(
-        "w", "cw", "total",
-        F.round(-F.log2(F.col("cw").cast("double")
-                        / F.col("total").cast("double")), 6).alias("bits"),
-    )
+    bits_uni = unigram_bits_frame(base.select(F.explode("tk").alias("tok")))
     return bits_bi, bits_uni
 
 
@@ -589,11 +597,11 @@ def quality_perplexity_bigram(t: Tables) -> DataFrame:
     """
     base = _doc_token_arrays(t["documents"])
     bi = _bigram_instances(base)
-    first = base.select("doc_id", F.element_at("tk", 1).alias("w"))
+    first = base.select("doc_id", F.element_at("tk", 1).alias("tok"))
     bits_bi, bits_uni = bigram_bits_frames(base)
     scored = (
         bi.join(bits_bi, ["w1", "w2"]).select("doc_id", "bits")
-        .unionByName(first.join(bits_uni, "w").select("doc_id", "bits"))
+        .unionByName(first.join(bits_uni, "tok").select("doc_id", "bits"))
     )
     # report the EXACT decimal total (6dp grid → integer*1e-6, always an
     # exact double) rather than a rounded mean: one sf0.001 doc's mean

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from resin_spark.functions.exact import dsum
+from resin_spark.io import file_stream
 
 Tables = dict[str, DataFrame]
 
@@ -197,11 +198,7 @@ def _event_stream(spark: SparkSession, events_parquet_dir: str):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_parquet_dir)
-    )
+    stream = file_stream(spark, events_parquet_dir, schema)
     ts_type = dict(stream.dtypes).get("ts")
     if ts_type == "bigint":
         stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -328,12 +325,7 @@ def stream_dedup_exact(spark: SparkSession, docs_parquet_dir: str):
     with bounded re-crawl windows adds ``withWatermark`` on an event
     time to age state out.
     """
-    schema = spark.read.parquet(docs_parquet_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_parquet_dir)
-    )
+    stream = file_stream(spark, docs_parquet_dir)
     return (
         stream.withColumn("content_hash", F.md5("text"))
         .dropDuplicates(["content_hash"])
@@ -377,12 +369,7 @@ def stream_near_dedup(spark: SparkSession, docs_parquet_dir: str,
         F.col("doc_id").alias("dup_of"), F.col("hashes").alias("dup_hashes")
     )
 
-    schema = spark.read.parquet(docs_parquet_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_parquet_dir)
-    )
+    stream = file_stream(spark, docs_parquet_dir)
     sig = D._minhash_udf(num_perm, seed)
     docs = (
         stream.select("doc_id", T.tokens("text").alias("tk"))
@@ -428,12 +415,7 @@ def stream_hll_registers(spark: SparkSession, events_parquet_dir: str):
     """
     from resin_spark.operators.sketch import hll_registers
 
-    schema = spark.read.parquet(events_parquet_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_parquet_dir)
-    )
+    stream = file_stream(spark, events_parquet_dir)
     return hll_registers(stream.filter(F.col("user_id").isNotNull()))
 
 
@@ -448,12 +430,7 @@ def stream_cms_counters(spark: SparkSession, docs_parquet_dir: str):
     """
     from resin_spark.operators.sketch import cms_counters
 
-    schema = spark.read.parquet(docs_parquet_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_parquet_dir)
-    )
+    stream = file_stream(spark, docs_parquet_dir)
     from resin_spark.functions.text import tokens
 
     toks = (

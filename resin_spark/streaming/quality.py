@@ -1,41 +1,92 @@
-"""Streaming document-quality scoring (ingestion-time twin of
-operators/traindata.quality_perplexity).
+"""Streaming twins of the batch operators: each arriving document (or
+vector) is scored or classified against a FROZEN artifact built from
+the already-ingested corpus, the way a production ingestion gate
+deploys a KenLM/CCNet scorer, a language filter or a standing search
+profile.
 
-A continuous ingestion pipeline can't rebuild the corpus LM per
-micro-batch — the model is a frozen ARTIFACT built from the already-
-ingested corpus and shipped to executors, exactly how a production
-quality gate deploys a KenLM/CCNet scorer. Here the artifact is the
-unigram bits table (token → −log2 tf/total, the same values the batch
-operator computes), capped to a top-``vocab_cap`` vocabulary with an
-out-of-vocabulary fallback, broadcast once, and applied per micro-batch
-with an Arrow-batched mapInPandas — no stream-side shuffle, no
-stateful aggregation, so the scoring cost is exactly one pass over each
-arriving batch at any cluster size.
+Each twin runs the batch operator's own code on the stream: the token
+array is the batch ``tk`` (functions/text.prepare_documents), and every
+score, bits value and prior comes from the batch frames and
+expressions (textops.bm25_stats / bm25_score_rows and phrase_matches;
+traindata.unigram_bits_frame, bigram_bits_frames and nb_model_frames).
+BM25 and phrase matching are row-local Spark expressions end to end.
+The three LM scorers (unigram, bigram, Naive Bayes) look tokens up in a
+vocabulary-sized dict broadcast once and share one Arrow-batched
+mapInPandas pass (:func:`_score_tokens`) whose Python body does only the
+lookups and integer micro-bit sums: a Spark map lookup (element_at on a
+broadcast map) scans the map linearly, ~229 s for 400k lookups in a
+65,536-key map on local[4], where a dict takes milliseconds. No twin
+holds stream-side state or shuffles, unless its batch face is an
+aggregate (manifest, boilerplate keywords), and every file source is
+:func:`resin_spark.io.file_stream`.
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from resin_spark.functions import text as T
+from resin_spark.io import file_stream
+from resin_spark.operators import textops as tx
+from resin_spark.operators import traindata as td
 
 VOCAB_CAP = 1 << 16
+
+
+def _micro(bits: float) -> int:
+    """A 6-dp bits value as an exact integer number of micro-bits."""
+    return round(bits * 1e6)
+
+
+def _unigram_table(bits_uni: DataFrame, vocab_cap: int, min_tf: int = 1):
+    """(bits_by_token, oov_bits) from a unigram_bits_frame: the
+    ``vocab_cap`` highest-tf tokens (ties: token asc) with tf >=
+    ``min_tf``. An empty model has no singleton prior; its OOV value is
+    0."""
+    rows = (
+        bits_uni.filter(F.col("tf") >= min_tf)
+        .orderBy(F.col("tf").desc(), "tok")
+        .limit(vocab_cap)
+        .select("tok", "bits", "oov_bits")
+        .collect()
+    )
+    oov_bits = rows[0]["oov_bits"] if rows else 0.0
+    return {r["tok"]: r["bits"] for r in rows}, oov_bits
+
+
+def _score_tokens(arrays: DataFrame, model, score, schema: str) -> DataFrame:
+    """One mapInPandas pass scoring each row's token array ``tk``
+    against a broadcast dict ``model``: the output row is every other
+    column of ``arrays``, passed through, followed by ``score(model,
+    tk)``. ``arrays`` is a batch token-array frame, so NULL and
+    zero-token rows are already gone JVM-side (Arrow would hand a NULL
+    long to pandas as NaN, where an ``is None`` guard never fires)."""
+    import pandas as pd
+
+    bc = arrays.sparkSession.sparkContext.broadcast(model)
+    keys = [c for c in arrays.columns if c != "tk"]
+    names = [f.split()[0] for f in schema.split(",")]
+
+    def run(batches):
+        m = bc.value
+        for pdf in batches:
+            rows = zip(*(pdf[c] for c in keys), pdf["tk"])
+            yield pd.DataFrame([(*k, *score(m, tk)) for *k, tk in rows],
+                               columns=names)
+
+    return arrays.mapInPandas(run, schema)
 
 
 def build_unigram_lm(docs: DataFrame, vocab_cap: int = VOCAB_CAP,
                      min_tf: int = 1):
     """(bits_by_token, oov_bits): the frozen scorer artifact.
 
-    bits values are computed with the batch operator's exact recipe
-    (tf/total as an IEEE division, −log2, rounded to 6 once per
-    DISTINCT token), so streaming scores over in-vocabulary text equal
-    the batch ``quality_perplexity`` output bit-for-bit. The vocabulary
-    keeps the ``vocab_cap`` highest-tf tokens (ties: token asc); any
-    other token scores ``oov_bits`` — the information content of a
-    singleton (−log2 1/total), the standard pessimistic OOV prior.
+    The values are traindata.unigram_bits_frame's — the frame the
+    batch ``quality_perplexity`` scores with — so streaming scores over
+    in-vocabulary text equal the batch output bit-for-bit. The
+    vocabulary keeps the ``vocab_cap`` highest-tf tokens (ties: token
+    asc); any other token scores ``oov_bits`` — the information content
+    of a singleton (−log2 1/total), the standard pessimistic OOV prior.
 
     The collect is vocab-sized (≤ vocab_cap rows), never corpus-sized.
     The top-cap's TakeOrdered merge ships at most partitions × cap
@@ -46,25 +97,8 @@ def build_unigram_lm(docs: DataFrame, vocab_cap: int = VOCAB_CAP,
     by default because the exact batch-parity contract needs every
     corpus token in vocabulary.
     """
-    toks = (
-        docs.filter(F.col("doc_id").isNotNull())
-        .select(F.explode(T.tokens("text")).alias("tok"))
-    )
-    lm = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("tf"))
-    rows = (
-        lm.filter(F.col("tf") >= min_tf)
-        .join(F.broadcast(lm.agg(F.sum("tf").alias("total"))))
-        .orderBy(F.col("tf").desc(), "tok")
-        .limit(vocab_cap)
-        .select("tok", "tf", "total")
-        .collect()
-    )
-    total = rows[0]["total"] if rows else 1
-    bits_by_token = {
-        r["tok"]: round(-math.log2(r["tf"] / total), 6) for r in rows
-    }
-    oov_bits = round(-math.log2(1.0 / total), 6)
-    return bits_by_token, oov_bits
+    return _unigram_table(td.unigram_bits_frame(td._doc_tokens(docs)),
+                          vocab_cap, min_tf)
 
 
 def stream_quality_score(spark: SparkSession, docs_parquet_dir: str,
@@ -73,59 +107,35 @@ def stream_quality_score(spark: SparkSession, docs_parquet_dir: str,
     """Score a document stream with a static unigram LM built from
     ``lm_docs``: (doc_id, n_tokens, bits_per_token), append mode.
 
-    Per-row scoring only — tokenise, look each token up in the
-    broadcast bits table, HALF_UP-round the exact micro-bits mean — so
+    Per-row scoring only — look each token up in the broadcast bits
+    table, sum exact integer micro-bits, HALF_UP-round the mean — so
     there is no watermark, no state store, and no shuffle on the stream
     side; docs with zero tokens are dropped (the batch twin's explode
     semantics). On a shared-vocabulary corpus the emitted rows equal
     the batch ``quality_perplexity`` output exactly (pinned in
     tests/test_streaming_io.py); unseen tokens score the OOV prior.
     """
-    import pandas as pd
-
     bits_by_token, oov_bits = build_unigram_lm(lm_docs, vocab_cap)
-    bc = spark.sparkContext.broadcast((bits_by_token, oov_bits))
-    tokenize_re = T.TOKEN_SPLIT_RE
+    model = ({t: _micro(b) for t, b in bits_by_token.items()},
+             _micro(oov_bits))
 
-    def score(batches):
-        import re
-        table, oov = bc.value
-        splitter = re.compile(tokenize_re)
-        for pdf in batches:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if doc_id is None or text is None:
-                    continue
-                toks = [t for t in splitter.split(text.lower()) if t]
-                if not toks:
-                    continue
-                # exact integer micro-bits sum, then one HALF_UP round.
-                # The mean must round in INTEGER micro-bits —
-                # floor((2·micro+n)/(2n)) is exact HALF_UP of micro/n
-                # (bits are non-negative) — because the batch side
-                # (exact.dravg) half-up-rounds the exact DECIMAL
-                # quotient: a float mean is off by an ulp on exact
-                # .5-at-the-7th-digit ties (r7 stream-fuzz, seed 13002:
-                # 4.041214 vs 4.041215)
-                micro = sum(int(round(table.get(t, oov) * 1e6)) for t in toks)
-                n = len(toks)
-                out.append((doc_id, n, ((2 * micro + n) // (2 * n)) / 1e6))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "n_tokens", "bits_per_token"])
+    def score(m, tk):
+        table, oov = m
+        return (sum(table.get(t, oov) for t in tk),)
 
-    schema = spark.read.parquet(docs_parquet_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_parquet_dir)
-    )
-    # NULL doc_ids reach pandas as NaN (not None) through Arrow — gate
-    # them JVM-side so the batch twin's doc_id IS NOT NULL filter holds
-    return (
-        stream.select("doc_id", "text")
-        .filter(F.col("doc_id").isNotNull() & F.col("text").isNotNull())
-        .mapInPandas(
-            score, "doc_id long, n_tokens long, bits_per_token double")
+    arrays = td._doc_token_arrays(file_stream(spark, docs_parquet_dir))
+    # The mean rounds in INTEGER micro-bits — floor((2·micro+n)/(2n))
+    # is exact HALF_UP of micro/n (bits are non-negative) — because
+    # the batch side (exact.dravg) half-up-rounds the exact DECIMAL
+    # quotient: a float mean is off by an ulp on exact .5-at-the-7th-
+    # digit ties (r7 stream-fuzz, seed 13002: 4.041214 vs 4.041215)
+    return _score_tokens(
+        arrays.select("doc_id", F.size("tk").alias("n_tokens"), "tk"),
+        model, score, "doc_id long, n_tokens long, micro long",
+    ).select(
+        "doc_id", "n_tokens",
+        (F.expr("(2 * micro + n_tokens) div (2 * n_tokens)")
+         .cast("double") / 1_000_000).alias("bits_per_token"),
     )
 
 
@@ -137,39 +147,24 @@ def build_bigram_lm(docs: DataFrame, bigram_cap: int = BIGRAM_CAP,
     """(bits_by_bigram, bits_by_token, oov_bits): the frozen KN-bigram
     scorer artifact (streaming twin of traindata.quality_perplexity_bigram).
 
-    Bigram and unigram bits come from the SAME DataFrame expressions the
-    batch operator scores with (traindata.bigram_bits_frames), so
-    streaming scores over fully-covered text equal the batch output
-    bit-for-bit. The bigram table keeps the ``bigram_cap`` highest-c12
-    types (ties: (w1, w2) asc), the unigram table the ``vocab_cap``
-    highest-tf tokens; both collects are vocabulary-sized, never
-    corpus-sized. Backoff at score time: an unseen bigram falls back to
-    the unigram bits of its RIGHT word (stupid backoff, α = 1), an
-    unseen word to the singleton OOV prior — same spirit as the unigram
-    twin's prior, and irrelevant to the batch-parity pin, which covers
-    the full vocabulary.
+    Every value comes from the SAME frames the batch operator scores
+    with (traindata.bigram_bits_frames), so streaming scores over
+    fully-covered text equal the batch output bit-for-bit. The bigram
+    table keeps the ``bigram_cap`` highest-c12 types (ties: (w1, w2)
+    asc), the unigram table the ``vocab_cap`` highest-tf tokens; both
+    collects are vocabulary-sized, never corpus-sized. Backoff at
+    score time: an unseen bigram falls back to the unigram bits of its
+    RIGHT word (stupid backoff, α = 1), an unseen word to the singleton
+    OOV prior — same spirit as the unigram twin's prior, and irrelevant
+    to the batch-parity pin, which covers the full vocabulary.
     """
-    import math as _math
-
-    from pyspark.sql import functions as FF
-
-    from resin_spark.operators import traindata as td
-
-    base = td._doc_token_arrays(docs)
-    bits_bi, bits_uni = td.bigram_bits_frames(base)
+    bits_bi, bits_uni = td.bigram_bits_frames(td._doc_token_arrays(docs))
     bi_rows = (
-        bits_bi.orderBy(FF.col("c12").desc(), "w1", "w2")
+        bits_bi.orderBy(F.col("c12").desc(), "w1", "w2")
         .limit(bigram_cap).select("w1", "w2", "bits").collect()
     )
-    uni_rows = (
-        bits_uni.orderBy(FF.col("cw").desc(), "w")
-        .limit(vocab_cap).select("w", "bits", "total").collect()
-    )
     bits_by_bigram = {(r["w1"], r["w2"]): r["bits"] for r in bi_rows}
-    bits_by_token = {r["w"]: r["bits"] for r in uni_rows}
-    total = uni_rows[0]["total"] if uni_rows else 1
-    oov_bits = round(-_math.log2(1.0 / total), 6)
-    return bits_by_bigram, bits_by_token, oov_bits
+    return (bits_by_bigram, *_unigram_table(bits_uni, vocab_cap))
 
 
 def stream_quality_score_bigram(spark: SparkSession, docs_parquet_dir: str,
@@ -179,55 +174,32 @@ def stream_quality_score_bigram(spark: SparkSession, docs_parquet_dir: str,
     """Score a document stream with the frozen bigram LM:
     (doc_id, n_tokens, bits_total), append mode.
 
-    Per-row scoring only (tokenise → first-token unigram lookup +
-    adjacent-bigram lookups → exact integer micro-bits sum) — no
-    watermark, no state, no stream-side shuffle. bits_total is an
-    integer number of micro-bits divided by 1e6 — exactly the batch
-    operator's decimal(18,6) sum — so on a shared-vocabulary corpus the
-    emitted rows equal the batch quality_perplexity_bigram output
-    row-for-row (pinned in tests/test_streaming_io.py).
+    Per-row scoring only (first-token unigram lookup + adjacent-bigram
+    lookups → exact integer micro-bits sum) — no watermark, no state,
+    no stream-side shuffle. bits_total is an integer number of
+    micro-bits divided by 1e6 — exactly the batch operator's
+    decimal(18,6) sum — so on a shared-vocabulary corpus the emitted
+    rows equal the batch quality_perplexity_bigram output row-for-row
+    (pinned in tests/test_streaming_io.py).
     """
-    import pandas as pd
-
     bits_bi, bits_uni, oov = build_bigram_lm(lm_docs, bigram_cap, vocab_cap)
-    bc = spark.sparkContext.broadcast((bits_bi, bits_uni, oov))
-    tokenize_re = T.TOKEN_SPLIT_RE
+    model = ({k: _micro(b) for k, b in bits_bi.items()},
+             {t: _micro(b) for t, b in bits_uni.items()}, _micro(oov))
 
-    def score(batches):
-        import re
-        table_bi, table_uni, oov_bits = bc.value
-        splitter = re.compile(tokenize_re)
-        for pdf in batches:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if doc_id is None or text is None:
-                    continue
-                toks = [t for t in splitter.split(text.lower()) if t]
-                if not toks:
-                    continue
-                micro = int(round(
-                    table_uni.get(toks[0], oov_bits) * 1e6))
-                for w1, w2 in zip(toks, toks[1:]):
-                    b = table_bi.get((w1, w2))
-                    if b is None:
-                        b = table_uni.get(w2, oov_bits)
-                    micro += int(round(b * 1e6))
-                out.append((doc_id, len(toks), float(micro) / 1e6))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "n_tokens", "bits_total"])
+    def score(m, tk):
+        table_bi, table_uni, oov_micro = m
+        micro = table_uni.get(tk[0], oov_micro)
+        for w1, w2 in zip(tk, tk[1:]):
+            b = table_bi.get((w1, w2))
+            micro += table_uni.get(w2, oov_micro) if b is None else b
+        return (micro,)
 
-    schema = spark.read.parquet(docs_parquet_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_parquet_dir)
-    )
-    return (
-        stream.select("doc_id", "text")
-        .filter(F.col("doc_id").isNotNull() & F.col("text").isNotNull())
-        .mapInPandas(
-            score, "doc_id long, n_tokens long, bits_total double")
-    )
+    arrays = td._doc_token_arrays(file_stream(spark, docs_parquet_dir))
+    return _score_tokens(
+        arrays.select("doc_id", F.size("tk").alias("n_tokens"), "tk"),
+        model, score, "doc_id long, n_tokens long, micro long",
+    ).select("doc_id", "n_tokens",
+             (F.col("micro") / 1_000_000).alias("bits_total"))
 
 
 def build_nb_model(docs: DataFrame, vocab_cap: int = VOCAB_CAP):
@@ -244,9 +216,7 @@ def build_nb_model(docs: DataFrame, vocab_cap: int = VOCAB_CAP):
     value for a zero-count pair ((0+1)/(n_lang+V)). Both collects are
     vocabulary-sized, never corpus-sized.
     """
-    from resin_spark.operators.traindata import nb_model_frames
-
-    model, cand, cnt = nb_model_frames(docs, with_counts=True)
+    model, cand, cnt = td.nb_model_frames(docs, with_counts=True)
     # global tf from the already-checkpointed (lang, tok, c) counts —
     # no third corpus scan for the vocab cap
     kept = (
@@ -268,97 +238,41 @@ def stream_lang_classify(spark: SparkSession, docs_parquet_dir: str,
     """Classify a document stream with the frozen NB language model:
     (doc_id, true_lang, pred_lang, best_bits, correct), append mode.
 
-    Per-row scoring only — tokenise once, fold integer micro-bits per
-    candidate language, argmin with language-ascending tie-break — no
-    watermark, no state store, no stream-side shuffle. On a
-    shared-vocabulary corpus the emitted rows equal the batch
-    ``nb_lang_classify`` output exactly (pinned in
-    tests/test_streaming_io.py); tokens outside the model score each
-    language's OOV prior, which is also the batch zero-count value.
+    Per-row scoring only — fold integer micro-bits per candidate
+    language, argmin with language-ascending tie-break — no watermark,
+    no state store, no stream-side shuffle. On a shared-vocabulary
+    corpus the emitted rows equal the batch ``nb_lang_classify`` output
+    exactly (pinned in tests/test_streaming_io.py); tokens outside the
+    model score each language's OOV prior, which is also the batch
+    zero-count value.
     """
-    import pandas as pd
-
     table, per_lang = build_nb_model(model_docs, vocab_cap)
-    bc = spark.sparkContext.broadcast((table, per_lang))
-    tokenize_re = T.TOKEN_SPLIT_RE
+    model = ({k: _micro(b) for k, b in table.items()},
+             [(lang, _micro(prior), _micro(oov))
+              for lang, (prior, oov) in sorted(per_lang.items())])
 
-    def score(batches):
-        import re
-        tbl, pl = bc.value
-        langs = sorted(pl)
-        splitter = re.compile(tokenize_re)
-        for pdf in batches:
-            out = []
-            for doc_id, true_lang, text in zip(
-                    pdf["doc_id"], pdf["lang"], pdf["text"]):
-                if doc_id is None or true_lang is None or text is None:
-                    continue
-                toks = [t for t in splitter.split(text.lower()) if t]
-                if not toks:
-                    continue
-                best_lang, best_micro = None, None
-                for lang in langs:
-                    prior_bits, oov_bits = pl[lang]
-                    oov_micro = int(round(oov_bits * 1e6))
-                    micro = int(round(prior_bits * 1e6))
-                    for t in toks:
-                        b = tbl.get((lang, t))
-                        micro += int(round(b * 1e6)) if b is not None \
-                            else oov_micro
-                    if best_micro is None or micro < best_micro:
-                        best_lang, best_micro = lang, micro
-                out.append((doc_id, true_lang, best_lang,
-                            float(best_micro) / 1e6,
-                            best_lang == true_lang))
-            yield pd.DataFrame(out, columns=[
-                "doc_id", "true_lang", "pred_lang", "best_bits", "correct"])
+    def score(m, tk):
+        tbl, langs = m
+        best = None
+        for lang, prior, oov in langs:
+            micro = prior + sum(tbl.get((lang, t), oov) for t in tk)
+            if best is None or micro < best[1]:
+                best = (lang, micro)
+        return best
 
-    schema = spark.read.parquet(docs_parquet_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_parquet_dir)
-    )
-    return (
-        stream.select("doc_id", "lang", "text")
-        .filter(F.col("doc_id").isNotNull() & F.col("lang").isNotNull()
-                & F.col("text").isNotNull())
-        .mapInPandas(
-            score,
-            "doc_id long, true_lang string, pred_lang string, "
-            "best_bits double, correct boolean")
+    arrays = td._labelled_token_arrays(file_stream(spark, docs_parquet_dir))
+    return _score_tokens(
+        arrays.select("doc_id", F.col("lang").alias("true_lang"), "tk"),
+        model, score,
+        "doc_id long, true_lang string, pred_lang string, micro long",
+    ).select(
+        "doc_id", "true_lang", "pred_lang",
+        (F.col("micro") / 1_000_000).alias("best_bits"),
+        (F.col("pred_lang") == F.col("true_lang")).alias("correct"),
     )
 
 
 # --- streaming BM25 (ingestion-time twin of textops.bm25_search) -------------
-
-def build_bm25_model(docs: DataFrame, query=None):
-    """(df_by_term, n_docs, avgdl): the frozen ranked-retrieval scorer
-    artifact — query-term document frequencies plus the corpus length
-    statistics, computed with textops.bm25_search's exact recipe so
-    streaming scores over the same corpus equal the batch per-doc rows
-    bit-for-bit. |query|+2 scalars: trivially broadcastable at any
-    corpus size."""
-    from resin_spark.operators.textops import BM25_QUERY
-
-    query = tuple(query or BM25_QUERY)
-    toks = (
-        docs.filter(F.col("doc_id").isNotNull())
-        .select("doc_id", F.explode(T.tokens("text")).alias("term"))
-    )
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    stats = dl.agg(F.count(F.lit(1)).alias("n"),
-                   F.sum("dl").alias("tot")).first()
-    n_docs = stats["n"] or 0
-    avgdl = (stats["tot"] / stats["n"]) if n_docs else 1.0
-    df_rows = (
-        toks.filter(F.col("term").isin(list(query)))
-        .groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-        .groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        .collect()
-    )
-    return {r["term"]: r["df"] for r in df_rows}, n_docs, avgdl
-
 
 def stream_bm25_score(spark: SparkSession, docs_parquet_dir: str,
                       model_docs: DataFrame, query=None,
@@ -367,114 +281,32 @@ def stream_bm25_score(spark: SparkSession, docs_parquet_dir: str,
     (doc_id, n_hits, score), append mode — the ingestion-time ranked
     filter ("does this new doc match the standing query profile").
 
-    Per-row scoring only: tokenize, count query-term hits, apply the
-    SAME IEEE float expression chain as the batch operator (Python
-    floats are IEEE doubles; identical literals, identical op order)
-    and the same string→decimal(28,15) HALF_UP exact sum — so on a
-    shared corpus the emitted rows equal batch per-doc scores
+    The model is textops.bm25_stats over ``model_docs`` (the deduped
+    query's document frequencies, n_docs, avgdl), and the stream is
+    scored by the batch projection itself (textops.bm25_score_rows),
+    so on a shared corpus the emitted rows equal batch bm25_scores
     bit-for-bit (pinned in tests). No watermark, no state store, no
     stream-side shuffle. Query terms unseen in the model corpus
-    (df=0) are skipped — no idf is defined for them; docs with zero
-    query-term hits emit nothing (the batch inner join's semantics).
+    (df=0) are dropped from the query — no idf is defined for them;
+    docs with zero query-term hits emit nothing, and an empty model
+    emits no rows.
     """
-    import pandas as pd
-
-    from resin_spark.operators.textops import BM25_QUERY
-
-    query = tuple(query or BM25_QUERY)
-    df_by_term, n_docs, avgdl = build_bm25_model(model_docs, query)
-    bc = spark.sparkContext.broadcast((df_by_term, n_docs, avgdl))
-    tokenize_re = T.TOKEN_SPLIT_RE
-    k11, one_minus_b = k1 + 1.0, 1.0 - b
-
-    def score(batches):
-        import re
-        from decimal import ROUND_HALF_UP, Decimal
-
-        q15 = Decimal("1e-15")
-        dft, n, ad = bc.value
-        splitter = re.compile(tokenize_re)
-        for pdf in batches:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if doc_id is None or text is None:
-                    continue
-                toks = [t for t in splitter.split(text.lower()) if t]
-                if not toks:
-                    continue
-                dl = len(toks)
-                total, hits = Decimal(0), 0
-                for term in query:
-                    tf = toks.count(term)
-                    df = dft.get(term, 0)
-                    if tf == 0 or df == 0:
-                        continue
-                    hits += 1
-                    idf = (float(n - df) + 0.5) / (float(df) + 0.5)
-                    denom = float(tf) + k1 * (one_minus_b
-                                              + b * (float(dl) / ad))
-                    score_t = idf * ((float(tf) * k11) / denom)
-                    total += Decimal(repr(score_t)).quantize(
-                        q15, rounding=ROUND_HALF_UP)
-                if hits:
-                    out.append((doc_id, hits, float(total)))
-            yield pd.DataFrame(out, columns=["doc_id", "n_hits", "score"])
-
-    schema = spark.read.parquet(docs_parquet_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_parquet_dir)
-    )
-    return (
-        stream.select("doc_id", "text")
-        .filter(F.col("doc_id").isNotNull() & F.col("text").isNotNull())
-        .mapInPandas(score, "doc_id long, n_hits long, score double")
-    )
+    stats = tx.bm25_stats(model_docs, tuple(query or tx.BM25_QUERY))
+    return tx.bm25_score_rows(file_stream(spark, docs_parquet_dir),
+                              stats, k1, b)
 
 
 def stream_phrase_match(spark: SparkSession, docs_parquet_dir: str,
                         phrase=None) -> DataFrame:
     """Streaming exact-phrase matcher: (doc_id, n_occurrences,
     n_tokens) for arriving docs containing the phrase — the
-    ingestion-time routing face of textops.phrase_search (occurrence
-    counting is already row-local there, so the stream twin is the
-    same stateless expression chain: no watermark, no state, no
-    shuffle). Emitted rows equal the batch operator's pre-top-k scored
-    relation bit-for-bit (integer counts; pinned in tests)."""
-    from resin_spark.operators.textops import PHRASE_QUERY
-
-    phrase = tuple(phrase or PHRASE_QUERY)
-    if not phrase:
-        raise ValueError("phrase must contain at least one term")
-    n = len(phrase)
-    tk = T.tokens("text")
-    starts = F.when(
-        F.size(tk) >= n,
-        F.sequence(F.lit(1), F.size(tk) - (n - 1)),
-    ).otherwise(F.array().cast("array<int>"))
-
-    def match_at(i):
-        cond = F.element_at(tk, i.cast("int")) == phrase[0]
-        for j in range(1, n):
-            cond = cond & (F.element_at(tk, (i + j).cast("int")) == phrase[j])
-        return cond
-
-    schema = spark.read.parquet(docs_parquet_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_parquet_dir)
-    )
-    return (
-        stream.filter(F.col("doc_id").isNotNull())
-        .select(
-            "doc_id",
-            F.size(F.filter(starts, match_at)).alias("n_occurrences"),
-            F.size(tk).alias("n_tokens"),
-        )
-        .filter(F.col("n_occurrences") > 0)
-    )
+    ingestion-time routing face of textops.phrase_search, which ranks
+    the same row-local relation (textops.phrase_matches): no
+    watermark, no state, no shuffle. Emitted rows equal the batch
+    operator's pre-top-k scored relation bit-for-bit (integer counts;
+    pinned in tests)."""
+    return tx.phrase_matches(file_stream(spark, docs_parquet_dir),
+                             tuple(phrase or tx.PHRASE_QUERY))
 
 
 def stream_corpus_delta(spark: SparkSession, docs_parquet_dir: str,
@@ -495,12 +327,7 @@ def stream_corpus_delta(spark: SparkSession, docs_parquet_dir: str,
     old = old_snapshot.filter(F.col("doc_id").isNotNull()).select(
         "doc_id", F.md5("text").alias("old_md5")
     ).withColumn("_o", F.lit(1))
-    schema = spark.read.parquet(docs_parquet_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_parquet_dir)
-    )
+    stream = file_stream(spark, docs_parquet_dir)
     return (
         stream.filter(F.col("doc_id").isNotNull())
         .select("doc_id", F.md5("text").alias("new_md5"))
@@ -547,12 +374,7 @@ def stream_embedding_drift(spark: SparkSession, emb_parquet_dir: str,
                 F.col("centroid").alias("centroid_old"))
         .withColumn("_o", F.lit(1))
     )
-    schema = spark.read.parquet(emb_parquet_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(emb_parquet_dir)
-    )
+    stream = file_stream(spark, emb_parquet_dir)
     new = valid_vectors(stream).filter(F.col("label").isNotNull())
     # norm_new folds over the RAW float array — the exact expression
     # the batch operator sums, so the decimal pin holds bit-for-bit;
@@ -590,12 +412,7 @@ def stream_encoding_anomalies(spark: SparkSession,
     """
     from resin_spark.operators.health import encoding_anomaly_flags
 
-    schema = spark.read.parquet(docs_parquet_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_parquet_dir)
-    )
+    stream = file_stream(spark, docs_parquet_dir)
     return (
         encoding_anomaly_flags(stream.filter(F.col("doc_id").isNotNull()))
         .filter(F.col("n_repl") + F.col("n_ctrl") + F.col("n_moji") > 0)
@@ -626,12 +443,7 @@ def stream_cdc_flags(spark: SparkSession, docs_parquet_dir: str,
         .select("ch").distinct()
         .withColumn("_k", F.lit(1))
     )
-    schema = spark.read.parquet(docs_parquet_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_parquet_dir)
-    )
+    stream = file_stream(spark, docs_parquet_dir)
     return (
         cdc_chunks(stream)
         .join(known, "ch", "left")
@@ -659,12 +471,7 @@ def stream_apply_mixture(spark: SparkSession, docs_parquet_dir: str,
     from resin_spark.operators.pipeline import mixture_copy_count
 
     frozen = plan.select("source", "sampling_rate")
-    schema = spark.read.parquet(docs_parquet_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_parquet_dir)
-    )
+    stream = file_stream(spark, docs_parquet_dir)
     return (
         stream.filter(F.col("doc_id").isNotNull())
         .join(F.broadcast(frozen), "source", "left")
@@ -689,12 +496,7 @@ def stream_split_assign(spark: SparkSession,
     """
     from resin_spark.operators.pipeline import split_of
 
-    schema = spark.read.parquet(docs_parquet_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_parquet_dir)
-    )
+    stream = file_stream(spark, docs_parquet_dir)
     return (
         stream.filter(F.col("doc_id").isNotNull())
         .select("doc_id", "source",
@@ -719,12 +521,7 @@ def stream_mm_meta(spark: SparkSession, docs_parquet_dir: str) -> DataFrame:
     """
     from resin_spark.operators.multimodal import payload_meta_frame
 
-    schema = spark.read.parquet(docs_parquet_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_parquet_dir)
-    )
+    stream = file_stream(spark, docs_parquet_dir)
     return payload_meta_frame(stream.filter(F.col("doc_id").isNotNull()))
 
 
@@ -747,12 +544,7 @@ def stream_shard_manifest(spark: SparkSession, docs_parquet_dir: str,
     from resin_spark.operators.traindata import N_SHARDS, manifest_rows
 
     n = N_SHARDS if n_shards is None else n_shards
-    schema = spark.read.parquet(docs_parquet_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_parquet_dir)
-    )
+    stream = file_stream(spark, docs_parquet_dir)
     return (
         manifest_rows(stream, n)
         .groupBy("shard")
@@ -814,12 +606,7 @@ def stream_boilerplate_keywords(spark: SparkSession,
     keyword columns row-for-row (pinned in tests)."""
     from resin_spark.operators.extract import boiler_line_rows
 
-    schema = spark.read.parquet(docs_parquet_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_parquet_dir)
-    )
+    stream = file_stream(spark, docs_parquet_dir)
     kw_chars = F.sum(F.when(F.col("is_keyword"),
                             F.col("n_chars")).otherwise(F.lit(0)))
     total_chars = F.sum("n_chars")

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from resin_spark.io import file_stream
 from resin_spark.operators import similarity as S
 
 
@@ -71,11 +72,8 @@ def _query_stream(spark: SparkSession, queries_parquet_dir: str,
                   id_col: str, vec_col: str):
     """The query file stream, one file per trigger, as the batch
     probes' (query_id, q_vec) side."""
-    schema = spark.read.parquet(queries_parquet_dir).schema
     return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(queries_parquet_dir)
+        file_stream(spark, queries_parquet_dir)
         .select(F.col(id_col).alias("query_id"),
                 F.col(vec_col).alias("q_vec"))
     )

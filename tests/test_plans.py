@@ -461,12 +461,43 @@ def test_phrase_search_tokenizes_once(spark):
     array once, and neither CollapseProject nor predicate pushdown may
     re-inline it into the match lambda or a pre-limit filter (the r5
     shape re-ran the tokenizer per (start × term) probe, 6×). Top-k
-    stays TakeOrdered; the >0 filter sits above the limit."""
+    stays TakeOrdered; non-matching docs are dropped by a generator,
+    which predicate pushdown cannot move below the token projection."""
     df = textops.phrase_search(load_tables(spark, SF))
     opt = df._jdf.queryExecution().optimizedPlan().toString()
     assert opt.count("split(lower") == 1, opt[:3000]
     plan = plan_of(df)
     assert "TakeOrderedAndProject" in plan, plan[:2000]
+
+
+def test_stream_phrase_match_tokenizes_once(spark, tmp_path, capsys):
+    """The streaming phrase matcher runs phrase_search's relation: the
+    executed micro-batch plan tokenizes once, and dropping the
+    non-matching docs must not push the tokenizer back inline (a Filter
+    on the count would be pushed below the token projection with every
+    element_at re-tokenizing)."""
+    from resin_spark.streaming import quality as q
+
+    src = tmp_path / "docs"
+    spark.createDataFrame(
+        [(1, "merge sort merge sort"), (2, "sort merge"), (3, None)],
+        "doc_id long, text string",
+    ).coalesce(1).write.parquet(str(src))
+    sq = (
+        q.stream_phrase_match(spark, str(src))
+        .writeStream.format("memory").queryName("phrase_plan_stream")
+        .outputMode("append").trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ckpt")).start()
+    )
+    assert sq.awaitTermination(120), "stream did not drain (overloaded machine?)"
+    capsys.readouterr()
+    sq.explain()
+    plan = capsys.readouterr().out
+    assert "MicroBatchWrite" in plan, plan
+    assert plan.count("split(lower") == 1, plan
+    got = sorted(tuple(r) for r in
+                 spark.sql("SELECT * FROM phrase_plan_stream").collect())
+    assert got == [(1, 2, 4)]
 
 
 def test_corpus_delta_is_one_join_pruned_scans(spark):

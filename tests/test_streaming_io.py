@@ -895,6 +895,66 @@ def test_stream_bm25_matches_batch(spark, tmp_path):
     assert got == batch
 
 
+def test_stream_bm25_repeated_query_term_matches_batch(spark, tmp_path):
+    """The query is a set on both faces: a repeated term counts once in
+    n_hits and score, as bm25_scores dedupes it."""
+    from resin_spark.operators import textops as tx
+    from resin_spark.streaming import quality as q
+
+    query = ("merge", "sort", "merge")
+    t = load_tables(spark, SF)
+    batch = {r["doc_id"]: (r["n_hits"], r["score"])
+             for r in tx.bm25_scores(t, query=query).collect()}
+    assert batch
+
+    src_dir = tmp_path / "docs_in"
+    src_dir.mkdir()
+    shutil.copy(f"{SF}/documents.parquet", src_dir / "part-0000.parquet")
+    sq = (
+        q.stream_bm25_score(spark, str(src_dir), t["documents"], query=query)
+        .writeStream.format("memory")
+        .queryName("bm25_dup_stream")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ckpt_bm25_dup"))
+        .start()
+    )
+    assert sq.awaitTermination(120), "stream did not drain (overloaded machine?)"
+    got = {r["doc_id"]: (r["n_hits"], r["score"])
+           for r in spark.sql("SELECT * FROM bm25_dup_stream").collect()}
+    assert got == batch
+
+
+def test_stream_bm25_term_absent_from_model_never_hits(spark, tmp_path):
+    """A query term with df = 0 in the model has no idf: it is dropped
+    from the query, so a streamed doc holding only that term emits
+    nothing and a doc holding it beside a modelled term counts one hit
+    scored by the modelled term alone."""
+    from resin_spark.streaming import quality as q
+
+    model_docs = spark.createDataFrame(
+        [(0, "merge sort alpha"), (1, "beta gamma")],
+        "doc_id long, text string")
+    src = tmp_path / "docs_df0"
+    spark.createDataFrame(
+        [(10, "window window"), (11, "merge window")],
+        "doc_id long, text string",
+    ).coalesce(1).write.parquet(str(src))
+    sq = (
+        q.stream_bm25_score(spark, str(src), model_docs,
+                            query=("merge", "window"))
+        .writeStream.format("memory").queryName("bm25_df0_stream")
+        .outputMode("append").trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ckpt_df0")).start()
+    )
+    assert sq.awaitTermination(120), "stream did not drain (overloaded machine?)"
+    rows = spark.sql("SELECT * FROM bm25_df0_stream").collect()
+    assert [(r["doc_id"], r["n_hits"]) for r in rows] == [(11, 1)]
+    # merge: N = 2, df = 1 -> idf 1.0; avgdl = 5/2; doc 11: dl = 2, tf = 1
+    want = 1.0 * (1.0 * 2.2 / (1.0 + 1.2 * (0.25 + 0.75 * (2.0 / 2.5))))
+    assert abs(rows[0]["score"] - want) < 1e-12
+
+
 def test_stream_phrase_match_matches_batch(spark, tmp_path):
     """The stateless streaming phrase matcher must emit exactly the
     batch phrase_search scored relation (pre-top-k) on the same docs."""

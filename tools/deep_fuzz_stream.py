@@ -280,6 +280,15 @@ def main() -> None:  # noqa: C901 — one twin block per pairing, linear
               _rowset(tx.bm25_scores(t), cols))
         n_twins += 1
 
+        # a repeated query term is one term on both faces
+        dup_q = ("merge", "sort", "merge")
+        check(seed, "bm25_score_dup_term",
+              _rowset(_drain(spark, sq.stream_bm25_score(
+                  spark, f"{d}/docs", docs, query=dup_q), f"bmd_{tag}",
+                  "append"), cols),
+              _rowset(tx.bm25_scores(t, query=dup_q), cols))
+        n_twins += 1
+
         cols = ["doc_id", "n_occurrences", "n_tokens"]
         check(seed, "phrase_match",
               _rowset(_drain(spark, sq.stream_phrase_match(
