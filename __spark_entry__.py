@@ -22,6 +22,7 @@ from resin_spark.operators import (
     similarity, sketch, textindex, textops, timeseries, tokenizer, traindata,
 )
 from resin_spark.plans import tpch
+from resin_spark.session import memo, scratch_dir
 from resin_spark.streaming import events as ev
 
 Query = Callable[[SparkSession, str], DataFrame]
@@ -318,60 +319,35 @@ def _synthesize_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _scratch(kind: str, sf_dir: str) -> str:
-    """Fixed per-(entry, sf) scratch path for the persisted-path
-    entries: every write below is mode("overwrite"), so reusing the
-    path keeps repeated driver/bench runs from accumulating tempdirs
-    in /tmp (mkdtemp leaked one index per run). The driver runs
-    queries serially; concurrent same-entry runs would race, which a
-    scratch demo accepts."""
-    import os
-    base = f"/tmp/resin_spark_scratch/{kind}_{os.path.basename(sf_dir.rstrip('/'))}"
-    os.makedirs(base, exist_ok=True)
-    return base
-
-
-_BUILD_MEMO: set = set()
-
 # lockstep knob: the bpe_encode entry trains this many merges and its
 # oracle unrolls exactly as many CTE iterations — change together
 BPE_ENCODE_MERGES = 20
 
 
-# Process-shared pair relations (r11, VERDICT r9 item 4): the D2
+# Session-shared pair relations (r11, VERDICT r9 item 4): the D2
 # PPJoin at the leakage operating point and the D5 gated matmul are
 # the two most expensive stages in the governance block, and the SAME
 # relation feeds split_governance_card's leakage + cluster sections,
 # the cluster_split entry, and the semantic-leakage section. Each is
-# built ONCE per (relation, sf_dir, session) and localCheckpointed, so
-# one driver pass prices the pair stage once instead of 3-4 times —
-# dataflow and row identity unchanged (the operators' own entries,
-# dedup_ngram_jaccard and dedup_embedding, deliberately do NOT share
-# the memo: their rows keep timing the honest pair-stage cost).
-_PAIR_MEMO: dict = {}
-
-
-def _pairs_once(kind: str, spark: SparkSession, sf_dir: str,
-                build_fn) -> DataFrame:
-    key = (kind, sf_dir, spark)
-    if key not in _PAIR_MEMO:
-        _PAIR_MEMO[key] = build_fn().localCheckpoint(eager=True)
-    return _PAIR_MEMO[key]
-
-
+# built ONCE per (relation, sf_dir) in the session memo and
+# localCheckpointed, so one driver pass prices the pair stage once
+# instead of 3-4 times — dataflow and row identity unchanged (the
+# operators' own entries, dedup_ngram_jaccard and dedup_embedding,
+# deliberately do NOT share the memo: their rows keep timing the
+# honest pair-stage cost).
 def _leak_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir)["documents"]
-    return _pairs_once(
-        "leak_jaccard", spark, sf_dir,
-        lambda: dedup.ngram_jaccard_pairs(docs, pipeline.LEAK_N,
-                                          pipeline.LEAK_TAU))
+    return memo(spark, ("leak_jaccard", sf_dir),
+                lambda: dedup.ngram_jaccard_pairs(
+                    docs, pipeline.LEAK_N, pipeline.LEAK_TAU
+                ).localCheckpoint(eager=True))
 
 
 def _sem_leak_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir)["embeddings"]
-    return _pairs_once(
-        "sem_leak", spark, sf_dir,
-        lambda: dedup.embedding_dedup_pairs(emb, pipeline.SEM_LEAK_TAU))
+    return memo(spark, ("sem_leak", sf_dir),
+                lambda: dedup.embedding_dedup_pairs(
+                    emb, pipeline.SEM_LEAK_TAU).localCheckpoint(eager=True))
 
 
 def _cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -387,36 +363,29 @@ def _split_governance_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         embedding_pairs=_sem_leak_pairs(spark, sf_dir))
 
 
-def _build_once(key: tuple, build_fn) -> None:
-    """One cold index build per process (r6): the first invocation of
-    a persisted-path entry pays the write — exercising the build path
-    under the correctness gate — and later same-process invocations
-    (bench.py's repeated timed runs) reuse the store, so the *_indexed
-    bench rows time the QUERY, which is the number that matters at
-    100× (production amortises the build over every later query). The
-    memo is in-process only: a fresh driver run always rebuilds, so a
-    stale on-disk index can never serve a newer code version."""
-    if key not in _BUILD_MEMO:
-        build_fn()
-        _BUILD_MEMO.add(key)
-
-
+# Persisted-path entries build their store once per session, into a
+# scratch_dir filled on first use: the first invocation pays the write —
+# exercising the build path under the correctness gate — and later
+# invocations in the session (bench's repeated timed runs) reuse the
+# store, so the *_indexed bench rows time the QUERY, the number that
+# matters at 100× (production amortises the build over every later
+# query). A fresh session always rebuilds, so a stale on-disk index can
+# never serve a newer code version.
 def _ann_topk_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PERSISTED-index production path of ann_topk_lsh, driver-
     checked end-to-end: write_ann_index to a scratch dir, read it back,
     probe with lsh_topk_indexed at the same measured-complete operating
     point (6 planes × 8 tables, Hamming-2 multi-probe) — so the output
     equals brute_topk and shares its oracle. The build runs once per
-    process (_build_once, r7): the first invocation pays the write
+    session (scratch_dir's fill): the first invocation pays the write
     (GraphSerializer → SeekableGraphReader analog, still exercised by
     every fresh driver run) and bench reruns time the probe; output
     equality to the in-memory lsh_topk is additionally pinned in
     tests/test_ann.py."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    path = _scratch("annidx", sf_dir) + "/ann"
-    _build_once(("annidx", sf_dir),
-                lambda: similarity.write_ann_index(emb, path,
-                                                   n_planes=6, n_tables=8))
+    path = scratch_dir(spark, ("annidx", sf_dir),
+                       lambda d: similarity.write_ann_index(
+                           emb, d + "/ann", n_planes=6, n_tables=8)) + "/ann"
     idx = similarity.read_ann_index(spark, path)
     return similarity.lsh_topk_indexed(
         idx, _query_vectors(emb), n_planes=6, n_tables=8, probe_radius=2)
@@ -427,12 +396,11 @@ def _ann_topk_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     a scratch dir, then pq_topk_indexed at the complete-rerank operating
     point — provably equal to brute_topk (the ann_topk_pq precedent),
     with the candidate scan reading the stored codes relation. The
-    build runs once per process (_build_once) so repeated bench runs
-    time the ADC query, not the codebook train."""
+    build runs once per session (scratch_dir's fill) so repeated bench
+    runs time the ADC query, not the codebook train."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    path = _scratch("pqidx", sf_dir)
-    _build_once(("pqidx", sf_dir),
-                lambda: similarity.write_pq_index(emb, path))
+    path = scratch_dir(spark, ("pqidx", sf_dir),
+                       lambda d: similarity.write_pq_index(emb, d))
     codes, books = similarity.read_pq_index(spark, path)
     return similarity.pq_topk_indexed(codes, books, _query_vectors(emb),
                                       emb, rerank=1_000_000)
@@ -444,14 +412,14 @@ def _ann_topk_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     scratch dir, read it back, probe at the COMPLETE operating point
     (n_probe = n_cells = 64 — candidates provably cover the corpus, the
     _ann_topk_ivf precedent), so the exact-rescored output equals
-    brute_topk and shares its oracle. The build runs once per process
-    (_build_once); bench reruns time the cell-pruned probe. Lean-probe
-    equality to the in-memory operator and the partition-pruning plan
-    pin live in tests/test_ann.py."""
+    brute_topk and shares its oracle. The build runs once per session
+    (scratch_dir's fill); bench reruns time the cell-pruned probe.
+    Lean-probe equality to the in-memory operator and the
+    partition-pruning plan pin live in tests/test_ann.py."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    path = _scratch("ivfidx", sf_dir) + "/ivf"
-    _build_once(("ivfidx", sf_dir),
-                lambda: similarity.write_ivf_index(emb, path, n_cells=64))
+    path = scratch_dir(spark, ("ivfidx", sf_dir),
+                       lambda d: similarity.write_ivf_index(
+                           emb, d + "/ivf", n_cells=64)) + "/ivf"
     entries, cent = similarity.read_ivf_index(spark, path)
     return similarity.ivf_topk_indexed(entries, cent, _query_vectors(emb),
                                        n_probe=64)
@@ -465,10 +433,10 @@ def _dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     it shares incremental_dedup's oracle row-for-row."""
     docs = load_tables(spark, sf_dir)["documents"] \
         .filter(F.col("doc_id").isNotNull())
-    path = _scratch("dedupidx", sf_dir) + "/idx"
-    _build_once(("dedupidx", sf_dir),
-                lambda: dedup.write_dedup_index(
-                    docs.filter(F.col("doc_id") % 2 == 0), path))
+    path = scratch_dir(spark, ("dedupidx", sf_dir),
+                       lambda d: dedup.write_dedup_index(
+                           docs.filter(F.col("doc_id") % 2 == 0),
+                           d + "/idx")) + "/idx"
     idx_hashes, idx_bands = dedup.read_dedup_index(spark, path)
     return dedup.incremental_dedup_indexed(
         docs.filter(F.col("doc_id") % 2 == 1), idx_hashes, idx_bands)
@@ -476,14 +444,18 @@ def _dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _semantic_dedup_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted SemDeDup: write the cell-bucketed assignment table
-    (write_cell_index, overwritten each run), then the within-cell pair
-    join over the stored corpus — verdict-equal to semantic_dedup, so
-    it shares its oracle. The bucketed read plans the quadratic stage
-    with zero vector-side Exchange (pinned in tests)."""
+    (write_cell_index), then the within-cell pair join over the stored
+    corpus — verdict-equal to semantic_dedup, so it shares its oracle.
+    The bucketed read plans the quadratic stage with zero vector-side
+    Exchange (pinned in tests). Every sf_dir shares the one table, so
+    the session memo records which sf_dir it holds and the table is
+    rewritten only when that changes."""
     emb = load_tables(spark, sf_dir)["embeddings"]
     table = "r5_semdedup_cell_index"
-    _build_once(("semdedupidx", sf_dir),
-                lambda: dedup.write_cell_index(emb, table))
+    held = memo(spark, table, dict)
+    if held.get("sf_dir") != sf_dir:
+        dedup.write_cell_index(emb, table)
+        held["sf_dir"] = sf_dir
     return dedup.semantic_dedup_indexed(spark, table)
 
 
@@ -491,12 +463,11 @@ def _text_index_path(spark: SparkSession, sf_dir: str) -> str:
     """Build-once shared text index for the indexed search entries:
     bm25_indexed and phrase_topk_indexed probe the SAME store (exactly
     how production serves both query shapes off one inverted index);
-    the first entry to run in a process pays the write."""
+    the first entry to run in a session pays the write."""
     docs = load_tables(spark, sf_dir)["documents"]
-    path = _scratch("textidx", sf_dir) + "/text"
-    _build_once(("textidx", sf_dir),
-                lambda: textindex.write_text_index(docs, path))
-    return path
+    return scratch_dir(spark, ("textidx", sf_dir),
+                       lambda d: textindex.write_text_index(
+                           docs, d + "/text")) + "/text"
 
 
 def _bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -566,7 +537,7 @@ def _index_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from resin_spark.operators import validate as val
     t = load_tables(spark, sf_dir)
-    base = _scratch("validate", sf_dir)
+    base = scratch_dir(spark, ("validate", sf_dir))
 
     # The dedup and ANN pipelines (build + validate) are fully
     # independent until the final union, and each is a chain of
@@ -657,7 +628,8 @@ def _warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
           + "</p></body></html>").encode("utf-8"))
         for r in rows
     ]
-    seg = os.path.join(_scratch("warc", sf_dir), "segment-00000.warc.gz")
+    seg = os.path.join(scratch_dir(spark, ("warc", sf_dir)),
+                       "segment-00000.warc.gz")
     with open(seg, "wb") as fh:
         fh.write(rio.warc_segment_bytes(recs))
     from resin_spark.operators import extract
@@ -707,10 +679,11 @@ def queries() -> dict[str, Query]:
         "cluster_split": _cluster_split,
         "health_card_typed": _mk_text(health.health_card_typed),
         "split_governance_card": _split_governance_card,
-        # -- (c) 34 of the 50 rotation-due r10-cohort entries; the due
+        # -- (c) 28 of the 50 rotation-due r10-cohort entries; the due
         #    set exceeds the remaining slots by 16 this round (edited +
         #    due = 66 > 50) — the deferral adjudication is in the tail
-        #    comment below and OPTIMIZATION_r12.md
+        #    comment below and OPTIMIZATION_r12.md; six more were
+        #    displaced to the tail by edit re-windows since
         "price_quantiles": _mk_text(sketch.price_quantiles),
         "corpus_delta": _corpus_delta,
         "embedding_drift": _embedding_drift,
@@ -734,12 +707,6 @@ def queries() -> dict[str, Query]:
         "shard_export": _mk_text(traindata.shard_export),
         "epoch_shuffle": _mk_text(traindata.epoch_shuffle),
         "term_cooccurrence": _mk_text(textops.term_cooccurrence),
-        "split_words_stats": _mk_text(textops.split_words_stats),
-        "term_frequencies": _mk_text(textops.term_frequencies),
-        "pii_redact": _mk_text(pipeline.pii_redact),
-        "hll_distinct": _mk_text(sketch.hll_distinct),
-        "cms_heavy_hitters": _mk_text(sketch.cms_heavy_hitters),
-        "agg_rollup": _rollup,
         # -- (b, second r12 session) the two persisted-ANN entries whose
         #    reachable _probe_dims gained the per-plan memo (742bd74):
         #    swapped INTO the window for re-verification; the two
@@ -757,8 +724,25 @@ def queries() -> dict[str, Query]:
         #    scorers): swapped INTO the window; the r12-checked entry it
         #    displaced opens the tail
         "quality_perplexity": _mk_text(traindata.quality_perplexity),
+        # -- (b) the six entries reaching the session memo and scratch
+        #    dirs (resin_spark.session.memo / scratch_dir) that replaced
+        #    the process-global stats, dims, pair and build caches, and
+        #    graph_dedup's gate routing: swapped INTO the window; the six
+        #    r12-checked entries they displaced open the tail
+        "dedup_embedding": _dedup_embedding,
+        "semantic_dedup": _semantic_dedup,
+        "semantic_dedup_indexed": _semantic_dedup_indexed,
+        "graph_dedup": _graph_dedup,
+        "knn_classify": _knn_classify,
+        "warc_ingest": _warc_ingest,
         # ---- tail: past the 50-entry window from here down ----
         # green in CORRECTNESS_r12, AST-identical to that checked form
+        "term_frequencies": _mk_text(textops.term_frequencies),
+        "split_words_stats": _mk_text(textops.split_words_stats),
+        "pii_redact": _mk_text(pipeline.pii_redact),
+        "hll_distinct": _mk_text(sketch.hll_distinct),
+        "cms_heavy_hitters": _mk_text(sketch.cms_heavy_hitters),
+        "agg_rollup": _rollup,
         "q1_pricing_summary": _q1,
         "session_overlap": _mk_text(timeseries.session_overlap),
         "kmv_distinct": _mk_text(sketch.kmv_distinct),
@@ -795,13 +779,8 @@ def queries() -> dict[str, Query]:
         #    functions AST-identical to that checked form — audit_window
         #    adjudicated)
         "domain_mix": _mk_text(pipeline.domain_mix),
-        "dedup_embedding": _dedup_embedding,
-        "semantic_dedup": _semantic_dedup,
         "kmeans_refine": _kmeans_refine,
-        "semantic_dedup_indexed": _semantic_dedup_indexed,
         "doc_fingerprint": _mk_text(textops.fingerprint),
-        "graph_dedup": _graph_dedup,
-        "knn_classify": _knn_classify,
         "importance_weights": _mk_text(traindata.importance_weights),
         "centroid_assign": _centroid_assign,
         "bpe_merge_step": _bpe_merge_step,
@@ -821,7 +800,6 @@ def queries() -> dict[str, Query]:
         "lang_id_heuristic": _mk_text(textops.lang_id),
         "kv_try_put": _kv_try_put,
         "shard_manifest": _mk_text(traindata.shard_manifest),
-        "warc_ingest": _warc_ingest,
         "token_count_bpe": _mk_text(textops.token_count_bpe),
         "q4_order_priority": _q4,
         "q22_idle_customers": _q22,

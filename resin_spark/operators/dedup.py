@@ -568,6 +568,110 @@ def simhash_pairs_oracle(max_hamming: int = 3) -> str:
 DEDUP_EDGE_COLLECT_CAP = 1_000_000
 
 
+def connected_components(edges: DataFrame, max_iters: int = 25,
+                         edge_collect_cap: int = DEDUP_EDGE_COLLECT_CAP
+                         ) -> DataFrame:
+    """(doc_id, component) for every doc on an undirected (doc_a, doc_b)
+    edge list, component = the min doc_id reachable from it — the D6
+    label contract dedup_components and pipeline.cluster_components
+    share. Docs with no edge are absent; callers join them back as
+    their own component.
+
+    Statistics-gated (the vector paths' auto-gate pattern): when the
+    edge list fits ``edge_collect_cap`` a driver union-find replaces the
+    propagation loop — one bounded pull instead of ~log(diameter)
+    join+agg rounds. Cap sizing is for PYTHON heap, not raw bytes: rows
+    stream through toLocalIterator (never a driver-side Row list) but
+    the parent map holds up to 2·cap int entries — ~100 MB at the 1M
+    default. Past the cap (adversarially chained graphs at scale) the
+    distributed min-label + pointer-jumping loop runs: each round is
+    two equi-joins + a groupBy, lineage cut per round with a lazy
+    localCheckpoint so plans stay flat (no driver-side graph, no
+    recursion in the plan). Both routes give the same labels (pinned in
+    tests). The count materialises the edge checkpoint the loop would
+    pay for anyway.
+    """
+    edges = edges.select("doc_a", "doc_b").localCheckpoint(eager=False)
+    if edges.count() <= edge_collect_cap:
+        parent: dict[int, int] = {}
+
+        def find(x: int) -> int:
+            root = x
+            while parent.get(root, root) != root:
+                root = parent[root]
+            while parent.get(x, x) != x:
+                parent[x], x = root, parent[x]
+            return root
+
+        for r in edges.toLocalIterator():
+            ra, rb = find(r["doc_a"]), find(r["doc_b"])
+            if ra != rb:
+                # union by MIN id — the component label contract
+                lo, hi = (ra, rb) if ra < rb else (rb, ra)
+                parent[hi] = lo
+        rows = sorted({(x, find(x)) for x in parent})
+        return edges.sparkSession.createDataFrame(
+            rows or [(None, None)], "doc_id long, component long"
+        ).filter(F.col("doc_id").isNotNull())
+
+    # undirected: propagate labels both ways
+    sym = edges.union(
+        edges.select(F.col("doc_b").alias("doc_a"),
+                     F.col("doc_a").alias("doc_b"))
+    ).localCheckpoint(eager=False)
+    # the loop only carries docs that have at least one edge — in a
+    # real corpus that's a small fraction
+    labels = (
+        sym.select(F.col("doc_a").alias("doc_id")).distinct()
+        .withColumn("component", F.col("doc_id"))
+        .localCheckpoint(eager=False)
+    )
+
+    # Convergence probe: labels are monotone non-increasing (every
+    # update is least(old, ...)), so the label sum strictly decreases
+    # iff any label moved — one scalar agg over the checkpointed frame
+    # replaces a join + count per iteration.
+    def _label_sum(df: DataFrame) -> int:
+        return df.agg(F.sum("component")).collect()[0][0] or 0
+
+    prev_sum = _label_sum(labels)
+    for _ in range(max_iters):
+        # one hop of min-label propagation over the edges …
+        nbr_min = (
+            sym.join(labels, sym.doc_b == labels.doc_id)
+            .groupBy(F.col("doc_a").alias("doc_id"))
+            .agg(F.min("component").alias("nbr_component"))
+        )
+        prop = labels.join(nbr_min, "doc_id", "left").select(
+            "doc_id",
+            F.least(
+                F.col("component"),
+                F.coalesce(F.col("nbr_component"), F.col("component")),
+            ).alias("component"),
+        )
+        # … then pointer-jumping (component ← component's component):
+        # path doubling makes convergence O(log diameter) rounds
+        # instead of O(diameter) — on a 100 TB corpus a duplicate chain
+        # of depth 1000 finishes in ~10 rounds, not ~1000.
+        jump = prop.select(F.col("doc_id").alias("p_doc"),
+                           F.col("component").alias("p_comp"))
+        new_labels = (
+            prop.join(jump, prop.component == jump.p_doc, "left")
+            .select(
+                "doc_id",
+                F.coalesce(F.col("p_comp"), F.col("component"))
+                .alias("component"),
+            )
+            .localCheckpoint(eager=False)
+        )
+        new_sum = _label_sum(new_labels)
+        labels = new_labels
+        if new_sum == prev_sum:
+            break
+        prev_sum = new_sum
+    return labels
+
+
 def dedup_components(docs: DataFrame, max_hamming: int = 3,
                      max_iters: int = 25,
                      edge_collect_cap: int = DEDUP_EDGE_COLLECT_CAP
@@ -577,18 +681,10 @@ def dedup_components(docs: DataFrame, max_hamming: int = 3,
     training-data pipeline actually consumes, since pairwise output
     alone can't answer "which copies do I drop".
 
-    Edges come from simhash_pairs (any pair source drops in). Component
-    labels are computed by distributed min-label propagation: each
-    iteration is one equi-join + groupBy (labels flow one hop), and the
-    loop stops when an iteration changes nothing — at most
-    graph-diameter iterations, each a linear shuffle; lineage is cut
-    per iteration with a lazy localCheckpoint so plans stay flat. This
-    is the standard Spark shape for iterative graph algorithms (no
-    driver-side graph, no recursion in the plan). When the clique-
-    collapsed VALUE-level edge list fits ``edge_collect_cap`` a gated
-    driver union-find replaces the loop (one bounded collect — the
-    vector paths' statistics-gate pattern; path equality pinned in
-    tests); the distributed loop is the past-the-cap route.
+    Edges come from simhash_pairs (any pair source drops in); component
+    labels come from connected_components (a gated driver union-find
+    under ``edge_collect_cap``, distributed min-label propagation past
+    it).
 
     Output: (doc_id, component, is_canonical) for every document;
     singletons are their own component.
@@ -631,101 +727,8 @@ def dedup_components(docs: DataFrame, max_hamming: int = 3,
         )
         .select(F.col("a.rep").alias("doc_a"), F.col("b.rep").alias("doc_b"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    # Statistics-gated small-graph shortcut (the vector paths' auto-gate
-    # pattern applied to the VALUE-LEVEL edge list): the super-node
-    # graph is already clique-collapsed, so its edge count is tiny
-    # whenever duplication is clique-dominated (13.5k edges at sf0.1
-    # from 271k doc pairs). Under the cap a driver union-find replaces
-    # the whole propagation loop — one bounded pull instead of
-    # ~log(diameter) join+agg rounds. Cap sizing is for PYTHON heap,
-    # not raw bytes: rows stream through toLocalIterator (never a
-    # driver-side Row list) but the parent map holds up to 2·cap int
-    # entries — ~100 MB at the 1M default. Past the cap (adversarially
-    # chained corpora at scale) the distributed min-label +
-    # pointer-jumping loop below runs unchanged. The count
-    # materialises the checkpoint the loop would pay for anyway.
-    n_edges = edges.count()
-    if n_edges <= edge_collect_cap:
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:
-                parent[x], x = root, parent[x]
-            return root
-
-        for r in edges.toLocalIterator():
-            ra, rb = find(r["doc_a"]), find(r["doc_b"])
-            if ra != rb:
-                # union by MIN id — the component label contract
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        rows = sorted({(x, find(x)) for x in parent})
-        labels = edges.sparkSession.createDataFrame(
-            rows or [(None, None)], "doc_id long, component long"
-        ).filter(F.col("doc_id").isNotNull())
-    else:
-        # undirected: propagate labels both ways
-        sym = edges.union(
-            edges.select(F.col("doc_b").alias("doc_a"),
-                         F.col("doc_a").alias("doc_b"))
-        ).localCheckpoint(eager=False)
-
-        # the loop only carries docs that have at least one duplicate
-        # edge — in a real corpus that's a small fraction; singletons
-        # join back in at the end as their own component
-        labels = (
-            sym.select(F.col("doc_a").alias("doc_id")).distinct()
-            .withColumn("component", F.col("doc_id"))
-            .localCheckpoint(eager=False)
-        )
-
-        # Convergence probe: labels are monotone non-increasing (every
-        # update is least(old, ...)), so the label sum strictly
-        # decreases iff any label moved — one scalar agg over the
-        # checkpointed frame replaces a join + count per iteration.
-        def _label_sum(df: DataFrame) -> int:
-            return df.agg(F.sum("component")).collect()[0][0] or 0
-
-        prev_sum = _label_sum(labels)
-        for _ in range(max_iters):
-            # one hop of min-label propagation over the edges …
-            nbr_min = (
-                sym.join(labels, sym.doc_b == labels.doc_id)
-                .groupBy(F.col("doc_a").alias("doc_id"))
-                .agg(F.min("component").alias("nbr_component"))
-            )
-            prop = labels.join(nbr_min, "doc_id", "left").select(
-                "doc_id",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("nbr_component"), F.col("component")),
-                ).alias("component"),
-            )
-            # … then pointer-jumping (component ← component's component):
-            # path doubling makes convergence O(log diameter) rounds
-            # instead of O(diameter) — on a 100 TB corpus a duplicate
-            # chain of depth 1000 finishes in ~10 rounds, not ~1000.
-            parent = prop.select(F.col("doc_id").alias("p_doc"),
-                                 F.col("component").alias("p_comp"))
-            new_labels = (
-                prop.join(parent, prop.component == parent.p_doc, "left")
-                .select(
-                    "doc_id",
-                    F.coalesce(F.col("p_comp"), F.col("component"))
-                    .alias("component"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            new_sum = _label_sum(new_labels)
-            labels = new_labels
-            if new_sum == prev_sum:
-                break
-            prev_sum = new_sum
+    labels = connected_components(edges, max_iters, edge_collect_cap)
 
     # route every doc through its fingerprint's super-node label:
     # doc → simhash → rep → component (rep itself when the super-node

@@ -35,72 +35,36 @@ from resin_spark.functions import vectors as V
 from resin_spark.operators.similarity import IDENTICAL_ANGLE
 
 
-def _candidate_pairs_lsh(emb: DataFrame, dims: int, n_planes: int,
-                         n_tables: int) -> DataFrame:
-    """Distinct (i < j) candidate pairs sharing an LSH bucket in ≥1 table,
-    with the embeddings equi-joined back AFTER the pair dedup.
-
-    Shuffle-width discipline (the round-3 flaw): the (tbl, bucket)
-    self-join and the pair dropDuplicates exchange move 16-byte id pairs
-    only — carrying the two 64-dim float arrays (~1 KB/row) through
-    those ×n_tables-inflated exchanges would widen the heaviest shuffle
-    ~60×. The embeddings rejoin is two plain equi-joins on the id after
-    the candidate set has collapsed to its distinct pairs (the shape
-    similarity.self_threshold_candidates_lsh establishes)."""
-    from resin_spark.operators.similarity import self_threshold_candidates_lsh
-    pairs = self_threshold_candidates_lsh(
-        emb, dims, n_planes=n_planes, n_tables=n_tables, probe_radius=0)
-    ea = emb.select(F.col("vec_id").alias("vec_a"),
-                    F.col("embedding").alias("emb_a"))
-    eb = emb.select(F.col("vec_id").alias("vec_b"),
-                    F.col("embedding").alias("emb_b"))
-    return (
-        pairs.select(F.col("vec_a").alias("id_a"), F.col("vec_b").alias("id_b"))
-        .join(ea.withColumnRenamed("vec_a", "id_a"), "id_a")
-        .join(eb.withColumnRenamed("vec_b", "id_b"), "id_b")
-        .select("id_a", "id_b", "emb_a", "emb_b")
-    )
-
-
-def graph_dedup(emb: DataFrame, identical_angle: float = IDENTICAL_ANGLE,
-                dims: int = 64, n_planes: int = 8, n_tables: int = 6,
-                use_lsh: bool | None = None) -> DataFrame:
+def graph_dedup(emb: DataFrame,
+                identical_angle: float = IDENTICAL_ANGLE) -> DataFrame:
     """Vectors surviving the reference's IdenticalAngle build dedup.
 
     Returns (vec_id, label) of kept vectors — j is dropped when any
     i < j has cos(i, j) ≥ identical_angle.
 
-    Candidate generation is size-gated (use_lsh=None, the default):
-    under similarity.BROADCAST_CEILING_BYTES it is the broadcast-matrix
-    matmul pass (exact recall, one corpus scan); past it, the banded
-    hyperplane tables take over automatically — candidate quality drops
-    to ~1-5e-5 miss probability per cos ≥ 0.99 pair. ``use_lsh`` forces
-    either path. Candidates are always verified with the strict JVM
-    fold, so the kept set is oracle-exact whenever recall is complete.
+    Candidate generation is similarity.cosine_threshold_candidates_auto:
+    under BROADCAST_CEILING_BYTES it is the broadcast-matrix matmul pass
+    (exact recall, one corpus scan); past it, 8-plane × 6-table
+    hyperplane buckets at the measured corpus width, exact bucket only —
+    candidate quality drops to ~1-5e-5 miss probability per cos ≥ 0.99
+    pair. The embeddings rejoin the distinct id pairs only after the
+    candidate set has collapsed, so the bucket self-join and pair-dedup
+    exchanges move ids, not vectors. Candidates are always verified
+    with the strict JVM fold, so the kept set is oracle-exact whenever
+    recall is complete.
     """
     from resin_spark.operators.similarity import (
-        broadcast_unit_matrix, cosine_threshold_candidates,
-        corpus_bytes_estimate, maybe_broadcast, valid_vectors,
-        BROADCAST_CEILING_BYTES,
+        cosine_threshold_candidates_auto, maybe_broadcast, valid_vectors,
     )
     emb = valid_vectors(emb)
-    if use_lsh is None:
-        est, _n, _d = corpus_bytes_estimate(
-            emb, ceiling_bytes=BROADCAST_CEILING_BYTES)
-        use_lsh = est > BROADCAST_CEILING_BYTES
-    if use_lsh:
-        cand = _candidate_pairs_lsh(emb, dims, n_planes, n_tables).select(
-            F.col("id_a").alias("vec_a"), F.col("id_b").alias("vec_b"),
-            F.col("emb_a"), F.col("emb_b"),
-        )
-    else:
-        bc = broadcast_unit_matrix(emb)
-        pairs = cosine_threshold_candidates(emb, bc, identical_angle)
-        ea = emb.select(F.col("vec_id").alias("vec_a"),
-                        F.col("embedding").alias("emb_a"))
-        eb = emb.select(F.col("vec_id").alias("vec_b"),
-                        F.col("embedding").alias("emb_b"))
-        cand = pairs.join(F.broadcast(ea), "vec_a").join(F.broadcast(eb), "vec_b")
+    pairs, fits = cosine_threshold_candidates_auto(
+        emb, identical_angle, n_planes=8, probe_radius=0)
+    ea = emb.select(F.col("vec_id").alias("vec_a"),
+                    F.col("embedding").alias("emb_a"))
+    eb = emb.select(F.col("vec_id").alias("vec_b"),
+                    F.col("embedding").alias("emb_b"))
+    cand = (pairs.join(maybe_broadcast(ea, fits), "vec_a")
+            .join(maybe_broadcast(eb, fits), "vec_b"))
     dropped = (
         cand.withColumn("cos", V.cosine_gated("emb_a", "emb_b"))
         .filter(F.col("cos") >= identical_angle)

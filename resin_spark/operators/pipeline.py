@@ -15,7 +15,8 @@ from pyspark.sql import functions as F
 from resin_spark.functions import text as T
 import os
 
-from resin_spark.operators.dedup import (_shingles_sql, embedding_dedup_oracle,
+from resin_spark.operators.dedup import (_shingles_sql, connected_components,
+                                         embedding_dedup_oracle,
                                          embedding_dedup_pairs,
                                          ngram_jaccard_pairs,
                                          shingle_hashes_from_tokens, shingles)
@@ -1579,55 +1580,15 @@ def cluster_components(docs: DataFrame, n: int = LEAK_N,
     doc_id reachable (the D6 label contract); docs with no near-dup
     edge are their own component.
 
-    Scale: the pair stage is the proven exact PPJoin (D2). The label
-    loop carries only PAIRED docs (the near-dup share of the corpus,
-    a small fraction at tau 0.5) and converges in O(log diameter)
-    rounds via min-label propagation + pointer jumping — each round
-    two equi-joins + a groupBy, lineage cut per round (the D6 loop
-    shape; D6's statistics-gated driver union-find could gate in
-    unchanged, but the leakage graph is far sparser than the Hamming
-    graph so the always-correct distributed loop is kept).
+    Scale: the pair stage is the proven exact PPJoin (D2); the labels
+    are dedup.connected_components over the pairs, D6's gated driver
+    union-find or its min-label + pointer-jumping loop.
 
     ``pairs``: optional precomputed pair relation (see split_leakage).
     """
     if pairs is None:
         pairs = ngram_jaccard_pairs(docs, n, tau)
-    sym = (pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-           .union(pairs.select(F.col("doc_b").alias("a"),
-                               F.col("doc_a").alias("b")))
-           .localCheckpoint(eager=False))
-    labels = (sym.select(F.col("a").alias("doc_id")).distinct()
-              .withColumn("component", F.col("doc_id"))
-              .localCheckpoint(eager=False))
-
-    # monotone convergence probe (the D6 recipe): every update is
-    # least(old, …), so the label sum strictly decreases iff any moved
-    def _label_sum(df: DataFrame) -> int:
-        return df.agg(F.sum("component")).collect()[0][0] or 0
-
-    prev_sum = _label_sum(labels)
-    for _ in range(max_iters):
-        nbr_min = (sym.join(labels, sym.b == labels.doc_id)
-                   .groupBy(F.col("a").alias("doc_id"))
-                   .agg(F.min("component").alias("nbr_component")))
-        prop = labels.join(nbr_min, "doc_id", "left").select(
-            "doc_id",
-            F.least(F.col("component"),
-                    F.coalesce(F.col("nbr_component"), F.col("component"))
-                    ).alias("component"))
-        parent = prop.select(F.col("doc_id").alias("p_doc"),
-                             F.col("component").alias("p_comp"))
-        new_labels = (prop.join(parent, prop.component == parent.p_doc,
-                                "left")
-                      .select("doc_id",
-                              F.coalesce("p_comp", "component")
-                              .alias("component"))
-                      .localCheckpoint(eager=False))
-        new_sum = _label_sum(new_labels)
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
+    labels = connected_components(pairs, max_iters)
     return (docs.filter(F.col("doc_id").isNotNull()).select("doc_id")
             .join(labels, "doc_id", "left")
             .select("doc_id",

@@ -30,6 +30,7 @@ from pyspark.sql.functions import broadcast, pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, LongType
 
 from resin_spark.functions import vectors as V
+from resin_spark.session import memo
 
 FOLD_ANGLE = 0.55  # GraphOptions.cs defaults
 IDENTICAL_ANGLE = 0.99
@@ -93,7 +94,16 @@ def broadcast_unit_matrix(emb: DataFrame, id_col: str = "vec_id",
 BROADCAST_CEILING_BYTES = 2 << 30
 
 
-_STATS_CACHE: dict = {}
+def _plan_memo(df: DataFrame, key: tuple, build):
+    """memo() keyed on ``df``'s plan semanticHash plus ``key``: a
+    static relation's width and size are plan properties, so repeated
+    calls in one session pay their probe jobs once. Frames whose plan
+    cannot be hashed are probed every time."""
+    try:
+        plan = df.semanticHash()
+    except Exception:
+        return build()
+    return memo(df.sparkSession, (plan, *key), build)
 
 
 def _plan_size_bytes(df: DataFrame):
@@ -124,28 +134,17 @@ def corpus_bytes_estimate(emb: DataFrame, id_col: str = "vec_id",
     the plan bytes. Only corpora under the ceiling pay an exact
     count(), and results are memoized per (plan semanticHash, columns,
     ceiling) so repeated candidate-generation calls in one session cost
-    nothing. dims always comes from a single-row probe.
+    nothing. dims is _probe_dims' memoized single-row probe.
     """
-    try:
-        key = (emb.semanticHash(), id_col, vec_col, ceiling_bytes)
-    except Exception:
-        key = None
-    if key is not None and key in _STATS_CACHE:
-        return _STATS_CACHE[key]
-    first = emb.select(F.size(F.col(vec_col)).alias("d")).first()
-    dims = int(first["d"]) if first and first["d"] is not None else 0
-    plan_bytes = _plan_size_bytes(emb)
-    if (ceiling_bytes is not None and plan_bytes is not None
-            and dims > 0 and plan_bytes > ceiling_bytes):
-        out = (plan_bytes, max(1, plan_bytes // (dims * 8 + 8)), dims)
-    else:
+    def stats():
+        dims = _probe_dims(emb, vec_col)
+        plan_bytes = _plan_size_bytes(emb)
+        if (ceiling_bytes is not None and plan_bytes is not None
+                and dims > 0 and plan_bytes > ceiling_bytes):
+            return plan_bytes, max(1, plan_bytes // (dims * 8 + 8)), dims
         n = emb.count()
-        out = (n * (dims * 8 + 8), n, dims)
-    if key is not None:
-        if len(_STATS_CACHE) > 256:
-            _STATS_CACHE.clear()
-        _STATS_CACHE[key] = out
-    return out
+        return n * (dims * 8 + 8), n, dims
+    return _plan_memo(emb, ("stats", id_col, vec_col, ceiling_bytes), stats)
 
 
 def adaptive_planes(n_rows: int, target_bucket: int = 1024) -> int:
@@ -452,31 +451,18 @@ def _multi_probe(qb: DataFrame, n_planes: int, radius: int) -> DataFrame:
     )
 
 
-_DIMS_CACHE: dict = {}
-
-
 def _probe_dims(emb: DataFrame, vec_col: str) -> int:
     """Vector width from a single-row probe — schemas don't carry array
     length, and a hardcoded dims crashes the hyperplane matmul on any
     corpus whose width differs.
 
-    Memoized per (plan semanticHash, column) like corpus_bytes_estimate:
-    the width of a static relation is a plan property, so repeated
-    LSH/IVF/incremental calls in one session pay the probe job once.
-    In-process only — a fresh driver run always re-probes."""
-    try:
-        key = (emb.semanticHash(), vec_col)
-    except Exception:
-        key = None
-    if key is not None and key in _DIMS_CACHE:
-        return _DIMS_CACHE[key]
-    first = emb.select(F.size(F.col(vec_col)).alias("d")).first()
-    dims = int(first["d"]) if first and first["d"] is not None else 0
-    if key is not None:
-        if len(_DIMS_CACHE) > 256:
-            _DIMS_CACHE.clear()
-        _DIMS_CACHE[key] = dims
-    return dims
+    Memoized per (plan semanticHash, column) in the session memo, so
+    repeated LSH/IVF/incremental calls and corpus_bytes_estimate pay
+    the probe job once; a fresh session always re-probes."""
+    def probe() -> int:
+        first = emb.select(F.size(F.col(vec_col)).alias("d")).first()
+        return int(first["d"]) if first and first["d"] is not None else 0
+    return _plan_memo(emb, ("dims", vec_col), probe)
 
 
 def _lsh_postings(emb: DataFrame, h, id_col: str, vec_col: str) -> DataFrame:

@@ -4,12 +4,18 @@ The settings below are the ones that matter at 100 TB: AQE (runtime
 coalescing + skew-join splitting), partition sizing, Arrow for any
 Python exchange, and a UTC session timezone so timestamp semantics are
 engine-independent (the DuckDB correctness oracle runs in UTC).
+
+``memo`` and ``scratch_dir`` are the package's one cache and scratch
+space, both scoped to the live SparkContext.
 """
 
 from __future__ import annotations
 
 import os
+import tempfile
+import threading
 
+from pyspark import SparkFiles
 from pyspark.sql import SparkSession
 
 # The directory holding the resin_spark package: Python workers get it on
@@ -52,3 +58,54 @@ def get_spark(app_name: str = "resin_spark",
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     return builder.getOrCreate()
+
+
+# Entries one SparkContext's memo holds; past it the store is cleared
+# whole and rebuilt on demand.
+MEMO_BOUND = 256
+
+# SparkContext -> its memo store. A process has at most one live
+# SparkContext, so a context not seen before means the earlier one was
+# stopped, and its entries (checkpointed frames, scratch dirs Spark
+# deleted at stop()) go with it.
+_MEMOS: dict = {}
+_MEMOS_LOCK = threading.Lock()
+
+
+def memo(spark: SparkSession, key, build):
+    """``build()``'s result for ``key``, computed once per SparkContext:
+    the one cache for plan statistics, shared pair relations and
+    persisted-index builds. A value is never served to a later context
+    than the one whose plans and files it describes.
+
+    ``build`` runs outside the lock (it runs Spark jobs, and may call
+    memo itself), so threads racing on one key may each build; the
+    first value stored is the one every caller gets."""
+    sc = spark.sparkContext
+    with _MEMOS_LOCK:
+        store = _MEMOS.get(sc)
+        if store is None:
+            _MEMOS.clear()
+            store = _MEMOS[sc] = {}
+        if key in store:
+            return store[key]
+    value = build()
+    with _MEMOS_LOCK:
+        if key not in store and len(store) >= MEMO_BOUND:
+            store.clear()
+        return store.setdefault(key, value)
+
+
+def scratch_dir(spark: SparkSession, key, fill=None) -> str:
+    """A scratch directory for ``key``, private to this SparkContext:
+    created under ``SparkFiles.getRootDirectory()``, which Spark deletes
+    at ``stop()``, so concurrent runs never share one and none outlives
+    its session. ``fill(dir)`` runs once, when the directory is made;
+    the memo entry and the files it refers to live and die together."""
+    def make() -> str:
+        path = tempfile.mkdtemp(prefix="scratch_",
+                                dir=SparkFiles.getRootDirectory())
+        if fill is not None:
+            fill(path)
+        return path
+    return memo(spark, ("scratch", key), make)

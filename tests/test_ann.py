@@ -441,13 +441,20 @@ def test_probe_dims_memo_is_per_plan(spark):
     """r12: _probe_dims memoizes per (plan semanticHash, column) so
     repeated ANN calls in one session pay the probe job once. The memo
     must not cross-contaminate frames of different widths, and a
-    repeated probe of the same frame must serve from the cache."""
+    repeated probe of the same frame must serve from the cache: no
+    Spark job runs for it."""
+    sc = spark.sparkContext
     emb = load_tables(spark, SF)["embeddings"]
     wide = similarity._probe_dims(emb, "embedding")
     narrow_df = spark.createDataFrame(
         [(1, [1.0, 2.0])], "vec_id long, embedding array<float>")
     assert wide == 64
     assert similarity._probe_dims(narrow_df, "embedding") == 2
-    assert similarity._probe_dims(emb, "embedding") == wide  # cached hit
-    key = (emb.semanticHash(), "embedding")
-    assert similarity._DIMS_CACHE.get(key) == wide
+    sc.setJobGroup("dims-hit", "dims-hit")
+    try:
+        assert similarity._probe_dims(emb, "embedding") == wide
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("dims-hit")) == []

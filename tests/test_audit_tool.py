@@ -107,3 +107,17 @@ def test_staleness_distinguishes_due_from_violation():
     assert aw._staleness_warnings({**pad, rotated: None}) == (0, 1)
     assert aw._staleness_warnings(
         {**pad, "never_checked_entry": None}) == (1, 0)
+
+
+def test_reachable_walks_resin_spark_classes():
+    """Classes have no __code__, so the walk must count a resin_spark
+    class as its own (file, name) and continue through its methods: a
+    wrapper calling load_tables reaches LazyTables, whose _load every
+    entry runs, so an edit inside the class re-windows its entries."""
+    from resin_spark.io import load_tables
+
+    def wrapper(spark, sf):
+        return load_tables(spark, sf)
+
+    funcs, _consts = reachable(wrapper)
+    assert ("resin_spark/io.py", "LazyTables") in funcs

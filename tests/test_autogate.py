@@ -71,7 +71,7 @@ def test_knn_classify_bucketed_path_no_collect(spark, monkeypatch):
 
 def test_graph_dedup_auto_gate_matches_exact(spark, monkeypatch):
     emb = load_tables(spark, SF)["embeddings"]
-    exact = [tuple(r) for r in graph.graph_dedup(emb, use_lsh=False).collect()]
+    exact = [tuple(r) for r in graph.graph_dedup(emb).collect()]
     _force_bucketed(monkeypatch)
     auto = [tuple(r) for r in graph.graph_dedup(emb).collect()]
     # near-identical vectors agree on ~every hyperplane sign: identical output

@@ -62,16 +62,44 @@ def test_threshold_boundary_is_inclusive(spark):
     assert kept == [0]
 
 
-def test_lsh_path_agrees_with_exact_on_clustered_data(spark):
+def _force_past_ceiling(monkeypatch):
+    """Force the broadcast gate to the LSH route: the estimate reports
+    a corpus past any ceiling, with its true row count and width."""
+    from resin_spark.operators import similarity
+    real = similarity.corpus_bytes_estimate
+
+    def huge(emb, *a, **kw):
+        _est, n, dims = real(emb, *a, **kw)
+        return 1 << 60, n, dims
+
+    monkeypatch.setattr(similarity, "corpus_bytes_estimate", huge)
+
+
+def test_lsh_path_agrees_with_exact_on_clustered_data(spark, monkeypatch):
     vecs = []
     for base in ([1, 0, 0, 0], [0, 1, 0, 0], [0, 0, 1, 0]):
         for k in range(4):
             vecs.append([x + (0.001 * k if x else 0.0) for x in base])
     emb = _mk_emb(spark, vecs)
-    exact = [r["vec_id"] for r in graph.graph_dedup(emb, dims=4).collect()]
-    lsh = [r["vec_id"]
-           for r in graph.graph_dedup(emb, dims=4, use_lsh=True).collect()]
+    exact = [r["vec_id"] for r in graph.graph_dedup(emb).collect()]
+    _force_past_ceiling(monkeypatch)
+    lsh = [r["vec_id"] for r in graph.graph_dedup(emb).collect()]
     assert exact == lsh == [0, 4, 8]
+
+
+def test_lsh_path_hashes_at_the_measured_width(spark, monkeypatch):
+    """Past the ceiling the hyperplanes take the corpus's own width: a
+    12-wide corpus must not be hashed with 64-wide planes (that matmul
+    raises a shape ValueError)."""
+    vecs = []
+    for d in range(0, 12, 3):
+        base = [1.0 if i == d else 0.0 for i in range(12)]
+        vecs += [base, [x + (0.002 if i == d + 1 else 0.0)
+                        for i, x in enumerate(base)]]
+    emb = _mk_emb(spark, vecs)
+    _force_past_ceiling(monkeypatch)
+    kept = [r["vec_id"] for r in graph.graph_dedup(emb).collect()]
+    assert kept == [0, 2, 4, 6]
 
 
 def test_minhash_lsh_subset_of_exact_with_full_recall(spark):
@@ -200,6 +228,24 @@ def test_semantic_dedup_indexed_matches_direct_with_zero_exchange(spark):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thr)
         spark.sql("DROP TABLE IF EXISTS cell_idx_t")
+
+
+@pytest.mark.full_suite
+def test_semantic_dedup_indexed_entry_rebuilds_per_sf(spark):
+    """The entry's one cell table is shared by every sf_dir: coming back
+    to an sf after another one wrote the table must rebuild it, not
+    read the other corpus's cells."""
+    import __spark_entry__ as m
+    from tests.conftest import SF_MED, SF_SMALL
+
+    entry = m.queries()["semantic_dedup_indexed"]
+
+    def rows(sf):
+        return sorted(map(tuple, entry(spark, sf).collect()))
+
+    first = rows(SF_SMALL)
+    assert rows(SF_MED) != first  # the pin needs corpora that differ
+    assert rows(SF_SMALL) == first
 
 
 def test_dedup_components_gated_path_equals_loop(spark):

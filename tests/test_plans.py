@@ -78,13 +78,16 @@ def test_no_quadratic_join_shapes(spark, build):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_graph_lsh_candidates_shuffle_ids_only(spark):
+def test_graph_lsh_candidates_shuffle_ids_only(spark, monkeypatch):
     """The LSH candidate path's pair-dedup exchange must move 16-byte id
     pairs, never the ~1 KB embedding arrays (the round-3 shuffle-width
     flaw): embeddings re-join by id only AFTER the candidate set has
-    collapsed to distinct pairs."""
+    collapsed to distinct pairs. The broadcast gate is forced to the
+    LSH route (test_autogate's monkeypatch)."""
     emb = load_tables(spark, SF)["embeddings"]
-    cand = graph._candidate_pairs_lsh(emb, 64, 8, 6)
+    monkeypatch.setattr(similarity, "corpus_bytes_estimate",
+                        lambda emb, *a, **kw: (1 << 60, 500, 64))
+    cand = graph.graph_dedup(emb)
     plan = cand._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"))

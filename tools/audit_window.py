@@ -7,8 +7,8 @@ r4 ran this at module granularity, which flagged 27 entries when the
 real diff was 1 — so prose tail comments became the arbiter, and one
 of them was wrong (the dedup_embedding incident). This version compares
 at FUNCTION granularity: for each tail entry it walks every reachable
-resin_spark function (transitively, through closures and module
-globals), plus the module-level constants those functions reference,
+resin_spark function and class (transitively, through closures, module
+globals and class methods), plus the module-level constants those functions reference,
 plus the entry's oracle function (resolved from oracle_sql()'s own
 AST), and AST-compares each against the base ref with docstrings
 stripped. A tail entry is flagged iff some function/constant it can
@@ -159,6 +159,22 @@ def _contrib(f) -> tuple[set, set, list]:
     consts: set[tuple[str, str]] = set()
     stack: list = []
     relpath_of = _relpath_of
+    if isinstance(f, type):
+        # A class has no __code__: a resin_spark class counts as its own
+        # top-level def (its dump holds every method and class constant)
+        # and the walk continues through its methods and base classes.
+        rel = relpath_of(sys.modules.get(f.__module__))
+        if rel is None:
+            return funcs, consts, stack
+        funcs.add((rel, f.__qualname__.split(".")[0]))
+        stack.extend(f.__bases__)
+        for v in vars(f).values():
+            v = getattr(v, "__func__", v)  # staticmethod / classmethod
+            if isinstance(v, property):
+                stack.extend(a for a in (v.fget, v.fset, v.fdel) if a)
+            elif callable(v):
+                stack.append(v)
+        return funcs, consts, stack
     if True:  # keep the original body's indentation/diff minimal
         code = getattr(f, "__code__", None)
         mod = sys.modules.get(getattr(f, "__module__", ""))
@@ -221,7 +237,7 @@ def _contrib(f) -> tuple[set, set, list]:
                                   m2)
         # NESTED code objects (lambdas / inner defs) carry their own
         # co_names, invisible from the enclosing co_names — an entry
-        # wrapper doing `_build_once(key, lambda: dedup.write_x(...))`
+        # wrapper doing `memo(spark, key, lambda: dedup.write_x(...))`
         # must still surface write_x (r7 find, the same class as the
         # r6 function-local-import blind spot).
         def _code_names(c) -> tuple:

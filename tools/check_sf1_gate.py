@@ -40,7 +40,7 @@ from resin_spark.operators import (dedup, extract, health, kv, pipeline,
                                    retrieval, similarity, textindex as ti,
                                    textops, traindata)
 from resin_spark.plans import tpch
-from resin_spark.session import get_spark
+from resin_spark.session import get_spark, memo
 
 GATE = 1.5
 EXPECT_PATH = os.path.join(os.path.dirname(os.path.dirname(
@@ -205,27 +205,23 @@ def main() -> None:
         docs = extract.warc_extract_text(read_warc(spark, warc_glob))
         return extract.boilerplate_card(docs)
 
-    # Shared pair relations, mirroring the driver entries' _pairs_once
-    # memo (r11, VERDICT r9 item 4): the warm run pays the one-time
-    # localCheckpoint build, the timed runs price the steady state —
-    # the same "bench reruns time the query" economics as the
-    # _build_once index entries. The honest pair-stage cost stays
-    # priced by the dedup_ngram_jaccard / dedup_embedding rows, which
+    # Shared pair relations in the session memo, as the driver entries
+    # share theirs (r11, VERDICT r9 item 4): the warm run pays the
+    # one-time localCheckpoint build, the timed runs price the steady
+    # state — the same "bench reruns time the query" economics as the
+    # persisted-index entries. The honest pair-stage cost stays priced
+    # by the dedup_ngram_jaccard / dedup_embedding rows, which
     # deliberately do NOT share the memo.
-    _pair_memo: dict = {}
-
     def _jp():
-        if "jp" not in _pair_memo:
-            _pair_memo["jp"] = dedup.ngram_jaccard_pairs(
-                d10, pipeline.LEAK_N,
-                pipeline.LEAK_TAU).localCheckpoint(eager=True)
-        return _pair_memo["jp"]
+        return memo(spark, ("sf1_gate", "jp"),
+                    lambda: dedup.ngram_jaccard_pairs(
+                        d10, pipeline.LEAK_N,
+                        pipeline.LEAK_TAU).localCheckpoint(eager=True))
 
     def _ep():
-        if "ep" not in _pair_memo:
-            _pair_memo["ep"] = dedup.embedding_dedup_pairs(
-                e10, pipeline.SEM_LEAK_TAU).localCheckpoint(eager=True)
-        return _pair_memo["ep"]
+        return memo(spark, ("sf1_gate", "ep"),
+                    lambda: dedup.embedding_dedup_pairs(
+                        e10, pipeline.SEM_LEAK_TAU).localCheckpoint(eager=True))
 
     # entry -> zero-arg thunk running the sf1-scale job end-to-end.
     # Same operating points as the recorded sweeps (SCALING.md r8-r10).
