@@ -749,12 +749,13 @@ def queries() -> dict[str, Query]:
         # r12 DELIBERATE CONTRACT EXCEPTION (plan_window 210aee4 read
         # INFEASIBLE: 16 edited + 50 due = 66 > 50; +2 in the second
         # session when the _probe_dims memo re-windowed the two
-        # persisted-ANN entries): the 16 entries below plus
+        # persisted-ANN entries): the 15 entries below plus
         # doc_fingerprint and token_count_bpe (further down) are
-        # rotation-due (last driver-checked in CORRECTNESS_r10) but
-        # deferred ONE round because the edit re-windows displaced
-        # them. Chosen as the lowest-risk defers: all 18 are
-        # early-round kv/events/lexicon/string/text utilities,
+        # rotation-due (last driver-checked in CORRECTNESS_r10;
+        # unicode_range, doc_fingerprint and token_count_bpe in
+        # CORRECTNESS_r09) but deferred ONE round because the edit
+        # re-windows displaced them. Chosen as the lowest-risk defers:
+        # all 17 are early-round kv/events/lexicon/string/text utilities,
         # AST-identical to their r10-checked green form since r9 or
         # earlier, each also covered by the sf0.001 parity pass in
         # tests/test_oracle_parity.py and the edge/fuzz batteries;

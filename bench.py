@@ -16,35 +16,30 @@ import re
 import sys
 import time
 
+import pandas as pd
+from pyspark.sql.functions import col, pandas_udf
+
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import SparkSession
-
 import __spark_entry__ as entry_mod
+from resin_spark.session import get_spark
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else None
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("resin-spark-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.session.timeZone", "UTC")
-        # executors import resin_spark whatever the driver's cwd
-        .config("spark.executorEnv.PYTHONPATH",
-                os.path.dirname(os.path.abspath(__file__)))
-        # no console progress bars: the driver captures a bounded tail
-        # of output, and r4's progress noise truncated the JSON line
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+    # no console progress bars: the JSON line is read from a bounded
+    # tail of the output, and r4's progress noise truncated it. PySpark
+    # launches its JVM as a shell, which turns them on unless the conf
+    # is given at launch.
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        "--conf spark.ui.showConsoleProgress=false "
+        + os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell"))
+    spark = get_spark("resin-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     queries = entry_mod.queries()
     timings: dict[str, float] = {}
@@ -55,14 +50,14 @@ def main() -> None:
         entry_mod.queries()["q1_pricing_summary"](spark, sf_dir).write.format(
             "noop"
         ).mode("overwrite").save()
-        import pandas as pd
-        from pyspark.sql.functions import col, pandas_udf
 
+        # the hints resolve against module globals (postponed
+        # annotations), so pandas is imported at the top
         @pandas_udf("double")
         def _warm(x: pd.Series) -> pd.Series:
             return x * 1.0
 
-        spark.range(0, 10000, 1, int(cpus)).select(
+        spark.range(0, 10000, 1, cpus).select(
             _warm(col("id").cast("double"))
         ).write.format("noop").mode("overwrite").save()
     except Exception as e:
@@ -83,7 +78,7 @@ def main() -> None:
         # avg, NOT sum: xxhash64 is full-range int64, and summing 20M of
         # them overflows under ANSI mode (ARITHMETIC_OVERFLOW); avg's
         # double accumulator cannot overflow and costs the same hashing.
-        spark.range(0, 20_000_000, 1, int(cpus)).selectExpr(
+        spark.range(0, 20_000_000, 1, cpus).selectExpr(
             "avg(xxhash64(id)) as s"
         ).write.format("noop").mode("overwrite").save()
         return time.monotonic() - t0

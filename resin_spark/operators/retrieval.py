@@ -193,13 +193,12 @@ MMR_MAX_K = 10_000
 
 
 def mmr_rerank(results: DataFrame, emb: DataFrame, k: int | None = None,
-               lam: float = MMR_LAMBDA,
-               id_col: str = "doc_id") -> DataFrame:
+               lam: float = MMR_LAMBDA) -> DataFrame:
     """Maximal-marginal-relevance diversity re-rank (Carbonell &
     Goldstein 1998) of a fused result page: greedily pick the doc
     maximising lam·relevance − (1−lam)·max-cosine-to-already-picked,
     so near-duplicate hits stop crowding the page. Input: a relation
-    with (id_col, rrf_score) — hybrid_search_rrf's output shape — plus
+    with (doc_id, rrf_score) — hybrid_search_rrf's output shape — plus
     the embeddings table; output (mmr_rank, doc_id, rrf_score,
     max_sim_selected).
 
@@ -212,7 +211,7 @@ def mmr_rerank(results: DataFrame, emb: DataFrame, k: int | None = None,
     keep relevance order and contribute zero similarity (they cannot
     crowd anything).
     """
-    rows = results.select(id_col, "rrf_score").collect()
+    rows = results.select("doc_id", "rrf_score").collect()
     if len(rows) > MMR_MAX_K:
         raise ValueError(
             f"{len(rows)} result rows exceed MMR_MAX_K={MMR_MAX_K}: "
@@ -225,7 +224,7 @@ def mmr_rerank(results: DataFrame, emb: DataFrame, k: int | None = None,
                 "max_sim_selected double")
     import numpy as np
 
-    ids = [r[id_col] for r in rows]
+    ids = [r["doc_id"] for r in rows]
     vec_rows = {
         r[0]: np.asarray(r[1], dtype=np.float64)
         for r in emb.filter(F.col("vec_id").isin(ids))

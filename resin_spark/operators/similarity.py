@@ -18,6 +18,12 @@ is the wrong physical shape for Spark, so the same query semantics —
                     batch model building over vector columns).
 - closest_match   — rank-1 hit per query + FoldAngle gate, the direct
                     GraphIndex.Search analog.
+
+Every operator reads one schema: the corpus is ``(vec_id, embedding)``
+and the queries are ``(query_id, q_vec)``; callers rename before
+calling. The LSH store hashes with one hyperplane family
+(:data:`LSH_SEED0`), so its writer, appender, validator and probes
+agree by construction.
 """
 
 from __future__ import annotations
@@ -34,6 +40,10 @@ from resin_spark.session import memo
 
 FOLD_ANGLE = 0.55  # GraphOptions.cs defaults
 IDENTICAL_ANGLE = 0.99
+
+# Hyperplane seed of the LSH store and the in-memory LSH probes; the
+# self-join threshold candidates use their own family (101).
+LSH_SEED0 = 7
 
 # Cosine discrepancy bound between numpy (pairwise/SIMD summation) and the
 # strict left-to-right JVM/DuckDB fold: for unit vectors of dim d the
@@ -59,8 +69,7 @@ VALID_VECTORS_SQL = ("embedding IS NOT NULL"
                      " AND len(list_filter(embedding, x -> isnan(x))) = 0")
 
 
-def broadcast_unit_matrix(emb: DataFrame, id_col: str = "vec_id",
-                          vec_col: str = "embedding"):
+def broadcast_unit_matrix(emb: DataFrame):
     """Collect the corpus as an L2-normalised float64 matrix (sorted by id)
     and ship it to executors as a broadcast variable.
 
@@ -71,15 +80,15 @@ def broadcast_unit_matrix(emb: DataFrame, id_col: str = "vec_id",
     the LSH-bucketed path (lsh_topk) is the scale route, same as any
     broadcast-vs-shuffle join decision.
     """
-    pdf = emb.select(id_col, vec_col).toPandas()
-    ids = pdf[id_col].to_numpy(dtype=np.int64)
+    pdf = emb.select("vec_id", "embedding").toPandas()
+    ids = pdf["vec_id"].to_numpy(dtype=np.int64)
     if len(ids) == 0:
         # zero valid vectors: np.array([]) would be 1-dim and the norm
         # reduction below raises AxisError — ship an explicit empty
         # matrix so candidate gens yield an empty pair relation instead
         return emb.sparkSession.sparkContext.broadcast(
             (ids, np.zeros((0, 0))))
-    mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+    mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
     order = np.argsort(ids)
     ids, mat = ids[order], mat[order]
     norms = np.sqrt((mat * mat).sum(axis=1))
@@ -121,9 +130,7 @@ def _plan_size_bytes(df: DataFrame):
     return size if 0 <= size < (1 << 60) else None
 
 
-def corpus_bytes_estimate(emb: DataFrame, id_col: str = "vec_id",
-                          vec_col: str = "embedding",
-                          ceiling_bytes: int | None = None):
+def corpus_bytes_estimate(emb: DataFrame, ceiling_bytes: int | None = None):
     """(est_bytes, n_rows, dims) of the corpus as a unit matrix.
 
     The gate itself must stay cheap at 100 TB, so it runs zero full
@@ -132,19 +139,19 @@ def corpus_bytes_estimate(emb: DataFrame, id_col: str = "vec_id",
     already exceeds ``ceiling_bytes``, the answer is decided without
     any count job and n_rows is a plane-sizing estimate derived from
     the plan bytes. Only corpora under the ceiling pay an exact
-    count(), and results are memoized per (plan semanticHash, columns,
-    ceiling) so repeated candidate-generation calls in one session cost
+    count(), and results are memoized per (plan semanticHash, ceiling)
+    so repeated candidate-generation calls in one session cost
     nothing. dims is _probe_dims' memoized single-row probe.
     """
     def stats():
-        dims = _probe_dims(emb, vec_col)
+        dims = _probe_dims(emb, "embedding")
         plan_bytes = _plan_size_bytes(emb)
         if (ceiling_bytes is not None and plan_bytes is not None
                 and dims > 0 and plan_bytes > ceiling_bytes):
             return plan_bytes, max(1, plan_bytes // (dims * 8 + 8)), dims
         n = emb.count()
         return n * (dims * 8 + 8), n, dims
-    return _plan_memo(emb, ("stats", id_col, vec_col, ceiling_bytes), stats)
+    return _plan_memo(emb, ("stats", ceiling_bytes), stats)
 
 
 def adaptive_planes(n_rows: int, target_bucket: int = 1024) -> int:
@@ -161,55 +168,46 @@ def adaptive_planes(n_rows: int, target_bucket: int = 1024) -> int:
     return min(24, max(6, math.ceil(math.log2(n_rows / target_bucket))))
 
 
-def self_topk_candidates_lsh(emb: DataFrame, dims: int, n_planes: int = 8,
-                             n_tables: int = 4, probe_radius: int = 2,
-                             id_col: str = "vec_id",
-                             vec_col: str = "embedding") -> DataFrame:
-    """(id, nb_id) self-kNN candidates via banded hyperplane buckets —
-    the past-the-broadcast-ceiling stage 1. Both sides hash in one Arrow
-    pass; the probe side additionally expands its Hamming-``radius``
-    ball (multi-probe), and the single equi-join key is (tbl, bucket).
-    No broadcast, no cartesian — a plain shuffle join that scales with
-    bucket occupancy, not corpus². Recall is approximate (measured 0.80
-    at the defaults on the 500-vector test corpus); downstream exact
-    rescoring keeps returned scores oracle-grade."""
-    emb = valid_vectors(emb, vec_col)
-    h = hyperplane_buckets_udf(dims, n_planes, n_tables)
-    eb = emb.select(
-        F.col(id_col).alias("nb_id"),
-        F.posexplode(h(F.col(vec_col))).alias("tbl", "bucket"),
-    )
-    qb = _multi_probe(
-        emb.select(F.col(id_col),
-                   F.posexplode(h(F.col(vec_col))).alias("tbl", "bucket")),
-        n_planes, probe_radius,
-    )
+def self_topk_candidates_lsh(emb: DataFrame, n_planes: int = 8,
+                             n_tables: int = 4,
+                             probe_radius: int = 2) -> DataFrame:
+    """(vec_id, nb_id) self-kNN candidates via banded hyperplane buckets —
+    the past-the-broadcast-ceiling stage 1. Both sides read one
+    _lsh_postings relation with the vectors pruned; the probe side
+    additionally expands its Hamming-``radius`` ball (multi-probe), and
+    the single equi-join key is (tbl, bucket). No broadcast, no
+    cartesian — a plain shuffle join that scales with bucket occupancy,
+    not corpus². Recall is approximate (measured 0.80 at the defaults on
+    the 500-vector test corpus); downstream exact rescoring keeps
+    returned scores oracle-grade."""
+    h = hyperplane_buckets_udf(_probe_dims(emb, "embedding"), n_planes,
+                               n_tables)
+    hashed = _lsh_postings(valid_vectors(emb), h, "vec_id", "embedding") \
+        .select("vec_id", "tbl", "bucket")
+    eb = hashed.select(F.col("vec_id").alias("nb_id"), "tbl", "bucket")
+    qb = _multi_probe(hashed, n_planes, probe_radius)
     return (
         qb.join(eb, ["tbl", "bucket"])
-        .filter(F.col(id_col) != F.col("nb_id"))
-        .select(id_col, "nb_id")
-        .dropDuplicates([id_col, "nb_id"])
+        .filter(F.col("vec_id") != F.col("nb_id"))
+        .select("vec_id", "nb_id")
+        .dropDuplicates(["vec_id", "nb_id"])
     )
 
 
-def self_threshold_candidates_lsh(emb: DataFrame, dims: int,
-                                  n_planes: int = 8, n_tables: int = 6,
-                                  probe_radius: int = 2,
-                                  id_col: str = "vec_id",
-                                  vec_col: str = "embedding") -> DataFrame:
+def self_threshold_candidates_lsh(emb: DataFrame, n_planes: int = 8,
+                                  n_tables: int = 6,
+                                  probe_radius: int = 2) -> DataFrame:
     """(vec_a < vec_b) threshold candidates via hyperplane buckets with
     multi-probe on one side. Recall rises with cos threshold: ≥ 1-5e-5
     at IdenticalAngle 0.99, ≈ 0.95 at tau 0.4 with these defaults
     (P[Hamming ≤ 2 of 8 planes] per table, 6 tables)."""
-    emb = valid_vectors(emb, vec_col)
-    h = hyperplane_buckets_udf(dims, n_planes, n_tables, seed0=101)
-    hashed = emb.select(
-        F.col(id_col),
-        F.posexplode(h(F.col(vec_col))).alias("tbl", "bucket"),
-    )
+    h = hyperplane_buckets_udf(_probe_dims(emb, "embedding"), n_planes,
+                               n_tables, seed0=101)
+    hashed = _lsh_postings(valid_vectors(emb), h, "vec_id", "embedding") \
+        .select("vec_id", "tbl", "bucket")
     a_side = _multi_probe(hashed, n_planes, probe_radius).select(
-        F.col(id_col).alias("vec_a"), "tbl", "bucket")
-    b_side = hashed.select(F.col(id_col).alias("vec_b"), "tbl", "bucket")
+        F.col("vec_id").alias("vec_a"), "tbl", "bucket")
+    b_side = hashed.select(F.col("vec_id").alias("vec_b"), "tbl", "bucket")
     return (
         a_side.join(b_side, ["tbl", "bucket"])
         .filter(F.col("vec_a") < F.col("vec_b"))
@@ -219,8 +217,6 @@ def self_threshold_candidates_lsh(emb: DataFrame, dims: int,
 
 
 def cosine_topk_candidates_auto(emb: DataFrame, k: int,
-                                id_col: str = "vec_id",
-                                vec_col: str = "embedding",
                                 ceiling_bytes: int = BROADCAST_CEILING_BYTES,
                                 n_planes: int | None = None,
                                 n_tables: int = 8, probe_radius: int = 2):
@@ -231,30 +227,27 @@ def cosine_topk_candidates_auto(emb: DataFrame, k: int,
     be broadcast in its own downstream joins. On the bucketed route the
     plane count is sized to the measured row count (adaptive_planes)
     unless the caller pins ``n_planes``."""
-    est, n, dims = corpus_bytes_estimate(emb, id_col, vec_col, ceiling_bytes)
+    est, n, _dims = corpus_bytes_estimate(emb, ceiling_bytes)
     if est <= ceiling_bytes:
-        bc = broadcast_unit_matrix(emb, id_col, vec_col)
-        return cosine_topk_candidates(emb, bc, k, id_col, vec_col), True
+        return cosine_topk_candidates(emb, broadcast_unit_matrix(emb), k), True
     planes = n_planes if n_planes is not None else adaptive_planes(n)
-    return self_topk_candidates_lsh(emb, dims, planes, n_tables,
-                                    probe_radius, id_col, vec_col), False
+    return self_topk_candidates_lsh(emb, planes, n_tables,
+                                    probe_radius), False
 
 
 def cosine_threshold_candidates_auto(emb: DataFrame, tau: float,
-                                     id_col: str = "vec_id",
-                                     vec_col: str = "embedding",
                                      ceiling_bytes: int = BROADCAST_CEILING_BYTES,
                                      n_planes: int | None = None,
                                      n_tables: int = 6, probe_radius: int = 2):
     """Threshold-pair stage 1 with the same statistics-driven routing as
     cosine_topk_candidates_auto. Returns (candidates, fits)."""
-    est, n, dims = corpus_bytes_estimate(emb, id_col, vec_col, ceiling_bytes)
+    est, n, _dims = corpus_bytes_estimate(emb, ceiling_bytes)
     if est <= ceiling_bytes:
-        bc = broadcast_unit_matrix(emb, id_col, vec_col)
-        return cosine_threshold_candidates(emb, bc, tau, id_col, vec_col), True
+        return cosine_threshold_candidates(
+            emb, broadcast_unit_matrix(emb), tau), True
     planes = n_planes if n_planes is not None else adaptive_planes(n)
-    return self_threshold_candidates_lsh(emb, dims, planes, n_tables,
-                                         probe_radius, id_col, vec_col), False
+    return self_threshold_candidates_lsh(emb, planes, n_tables,
+                                         probe_radius), False
 
 
 def maybe_broadcast(df: DataFrame, fits: bool) -> DataFrame:
@@ -264,9 +257,8 @@ def maybe_broadcast(df: DataFrame, fits: bool) -> DataFrame:
 
 
 def cosine_topk_candidates(emb: DataFrame, bc, k: int,
-                           id_col: str = "vec_id", vec_col: str = "embedding",
                            exclude_self: bool = True) -> DataFrame:
-    """(id, nb_id) candidate pairs guaranteed to contain each row's exact
+    """(vec_id, nb_id) candidate pairs guaranteed to contain each row's exact
     cosine top-k against the broadcast corpus.
 
     mapInPandas + matmul: each Arrow batch scores against the whole
@@ -281,11 +273,11 @@ def cosine_topk_candidates(emb: DataFrame, bc, k: int,
         for pdf in batches:
             if len(pdf) == 0 or bunit.shape[0] == 0:
                 continue
-            q = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            q = np.array([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
             qn = np.sqrt((q * q).sum(axis=1))
             qn[qn == 0] = 1.0
             s = (q / qn[:, None]) @ bunit.T
-            qids = pdf[id_col].to_numpy(dtype=np.int64)
+            qids = pdf["vec_id"].to_numpy(dtype=np.int64)
             if exclude_self:
                 pos = np.searchsorted(bids, qids)
                 ok = (pos < len(bids)) & (bids[np.clip(pos, 0, len(bids) - 1)] == qids)
@@ -296,16 +288,14 @@ def cosine_topk_candidates(emb: DataFrame, bc, k: int,
             kth = np.partition(s, -kk, axis=1)[:, -kk]
             sel = s >= (kth[:, None] - _NUMERIC_MARGIN)
             rr, cc = np.nonzero(sel)
-            yield pd.DataFrame({id_col: qids[rr], "nb_id": bids[cc]})
+            yield pd.DataFrame({"vec_id": qids[rr], "nb_id": bids[cc]})
 
-    return emb.select(id_col, vec_col).mapInPandas(
-        gen, f"{id_col} long, nb_id long"
+    return emb.select("vec_id", "embedding").mapInPandas(
+        gen, "vec_id long, nb_id long"
     )
 
 
-def cosine_threshold_candidates(emb: DataFrame, bc, tau: float,
-                                id_col: str = "vec_id",
-                                vec_col: str = "embedding") -> DataFrame:
+def cosine_threshold_candidates(emb: DataFrame, bc, tau: float) -> DataFrame:
     """(vec_a < vec_b) pairs whose numpy cosine reaches tau − margin —
     a guaranteed superset of the exact cos ≥ tau pairs, for downstream
     JVM-exact verification. Same one-pass matmul shape as
@@ -316,47 +306,47 @@ def cosine_threshold_candidates(emb: DataFrame, bc, tau: float,
         for pdf in batches:
             if len(pdf) == 0 or bunit.shape[0] == 0:
                 continue
-            q = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            q = np.array([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
             qn = np.sqrt((q * q).sum(axis=1))
             qn[qn == 0] = 1.0
             s = (q / qn[:, None]) @ bunit.T
-            qids = pdf[id_col].to_numpy(dtype=np.int64)
+            qids = pdf["vec_id"].to_numpy(dtype=np.int64)
             sel = (s >= tau - _NUMERIC_MARGIN) & (bids[None, :] > qids[:, None])
             rr, cc = np.nonzero(sel)
             yield pd.DataFrame({"vec_a": qids[rr], "vec_b": bids[cc]})
 
-    return emb.select(id_col, vec_col).mapInPandas(gen, "vec_a long, vec_b long")
+    return emb.select("vec_id", "embedding").mapInPandas(
+        gen, "vec_a long, vec_b long")
 
 
-def _score_candidates(pairs: DataFrame, id_col: str, vec_col: str,
-                      q_id: str, q_vec: str) -> DataFrame:
-    """(q_id, neighbor_id, score) for the (query, vector) pairs an ANN
-    probe generated: self-pairs dropped, every survivor scored with the
-    exact JVM cosine — candidate generation only prunes, it never
+def _score_candidates(pairs: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, score) for the (query, vector) pairs an
+    ANN probe generated: self-pairs dropped, every survivor scored with
+    the exact JVM cosine — candidate generation only prunes, it never
     changes a score."""
-    return pairs.filter(F.col(id_col) != F.col(q_id)).select(
-        F.col(q_id),
-        F.col(id_col).alias("neighbor_id"),
-        V.cosine_gated(vec_col, q_vec).alias("score"),
+    return pairs.filter(F.col("vec_id") != F.col("query_id")).select(
+        F.col("query_id"),
+        F.col("vec_id").alias("neighbor_id"),
+        V.cosine_gated("embedding", "q_vec").alias("score"),
     )
 
 
-def _topk_by_query(scored: DataFrame, k: int, q_id: str) -> DataFrame:
+def _topk_by_query(scored: DataFrame, k: int) -> DataFrame:
     """The ranked tail every top-k search shares: per-query row_number
     over (score desc, neighbor_id) — the oracle's tie-break — cut at k,
     score rounded to 9 decimals."""
-    w = Window.partitionBy(q_id).orderBy(F.col("score").desc(), F.col("neighbor_id"))
+    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(),
+                                               F.col("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(q_id, "rank", "neighbor_id", F.round("score", 9).alias("score"))
-        .orderBy(q_id, "rank")
+        .select("query_id", "rank", "neighbor_id",
+                F.round("score", 9).alias("score"))
+        .orderBy("query_id", "rank")
     )
 
 
-def brute_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
-               id_col: str = "vec_id", vec_col: str = "embedding",
-               q_id: str = "query_id", q_vec: str = "q_vec") -> DataFrame:
+def brute_topk(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact cosine top-k per query vector.
 
     The query side is broadcast — the corpus is scanned exactly once
@@ -364,19 +354,19 @@ def brute_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
     (n_queries × n_corpus) scored rows, which AQE coalesces. Scoring is
     a JVM fold (functions/vectors.py), never per-row Python.
     """
-    emb = valid_vectors(emb, vec_col)
-    queries = valid_vectors(queries, q_vec)
+    emb = valid_vectors(emb)
+    queries = valid_vectors(queries, "q_vec")
     scored = (
-        emb.select(id_col, vec_col)
-        .join(broadcast(queries.select(q_id, q_vec)),
-              F.col(id_col) != F.col(q_id))
+        emb.select("vec_id", "embedding")
+        .join(broadcast(queries.select("query_id", "q_vec")),
+              F.col("vec_id") != F.col("query_id"))
         .select(
-            F.col(q_id),
-            F.col(id_col).alias("neighbor_id"),
-            V.cosine_gated(vec_col, q_vec).alias("score"),
+            F.col("query_id"),
+            F.col("vec_id").alias("neighbor_id"),
+            V.cosine_gated("embedding", "q_vec").alias("score"),
         )
     )
-    return _topk_by_query(scored, k, q_id)
+    return _topk_by_query(scored, k)
 
 
 def brute_topk_oracle(k: int = 10, n_queries: int = 5) -> str:
@@ -401,7 +391,7 @@ def brute_topk_oracle(k: int = 10, n_queries: int = 5) -> str:
 
 
 def hyperplane_buckets_udf(dims: int, n_planes: int, n_tables: int,
-                           seed0: int = 7):
+                           seed0: int = LSH_SEED0):
     """All n_tables bucket ids in ONE Arrow pass: a single
     (batch × dims) @ (dims × tables·planes) matmul, bits packed per
     table. One UDF stage instead of n_tables — the corpus is read and
@@ -451,59 +441,58 @@ def _multi_probe(qb: DataFrame, n_planes: int, radius: int) -> DataFrame:
     )
 
 
-def _probe_dims(emb: DataFrame, vec_col: str) -> int:
-    """Vector width from a single-row probe — schemas don't carry array
-    length, and a hardcoded dims crashes the hyperplane matmul on any
+def _probe_dims(df: DataFrame, vec_col: str) -> int:
+    """Vector width from a single-row probe of ``vec_col`` (the corpus's
+    ``embedding`` or the queries' ``q_vec``) — schemas don't carry array
+    length, and a hardcoded width crashes the hyperplane matmul on any
     corpus whose width differs.
 
     Memoized per (plan semanticHash, column) in the session memo, so
     repeated LSH/IVF/incremental calls and corpus_bytes_estimate pay
     the probe job once; a fresh session always re-probes."""
     def probe() -> int:
-        first = emb.select(F.size(F.col(vec_col)).alias("d")).first()
+        first = df.select(F.size(F.col(vec_col)).alias("d")).first()
         return int(first["d"]) if first and first["d"] is not None else 0
-    return _plan_memo(emb, ("dims", vec_col), probe)
+    return _plan_memo(df, ("dims", vec_col), probe)
 
 
-def _lsh_postings(emb: DataFrame, h, id_col: str, vec_col: str) -> DataFrame:
+def _lsh_postings(df: DataFrame, h, id_col: str, vec_col: str) -> DataFrame:
     """The LSH store's relation: one (id, vector, tbl, bucket) posting
     per hash table, all tables from ONE Arrow pass of ``h``
-    (hyperplane_buckets_udf). write_ann_index persists it, lsh_topk
-    probes it in memory, the validator recomputes it, and the query
-    side of every probe starts from it (_lsh_probes)."""
-    return emb.select(
+    (hyperplane_buckets_udf). Over the corpus (vec_id, embedding) it is
+    what write_ann_index persists, lsh_topk probes in memory and the
+    validator recomputes; over the queries (query_id, q_vec) it starts
+    every probe's query side (_lsh_probes)."""
+    return df.select(
         F.col(id_col), F.col(vec_col),
         F.posexplode(h(F.col(vec_col))).alias("tbl", "bucket"),
     )
 
 
-def _lsh_probes(queries: DataFrame, h, n_planes: int, probe_radius: int,
-                q_id: str, q_vec: str) -> DataFrame:
+def _lsh_probes(queries: DataFrame, h, n_planes: int,
+                probe_radius: int) -> DataFrame:
     """Multi-probe query side: each query's own postings, expanded to
     every bucket within Hamming ``probe_radius`` (_multi_probe)."""
-    return _multi_probe(_lsh_postings(queries, h, q_id, q_vec),
+    return _multi_probe(_lsh_postings(queries, h, "query_id", "q_vec"),
                         n_planes, probe_radius)
 
 
 def _lsh_scored(index: DataFrame, queries: DataFrame, h, n_planes: int,
-                probe_radius: int, id_col: str, vec_col: str, q_id: str,
-                q_vec: str) -> DataFrame:
+                probe_radius: int) -> DataFrame:
     """The LSH probe: broadcast the multi-probe query side, equi-join
     the postings on (tbl, bucket), keep each (query, vector) pair once
     however many tables/probes matched it, and score it exactly."""
-    qb = _lsh_probes(queries, h, n_planes, probe_radius, q_id, q_vec)
+    qb = _lsh_probes(queries, h, n_planes, probe_radius)
     pairs = (
         index.join(broadcast(qb), on=["tbl", "bucket"])
-        .dropDuplicates([q_id, id_col])
+        .dropDuplicates(["query_id", "vec_id"])
     )
-    return _score_candidates(pairs, id_col, vec_col, q_id, q_vec)
+    return _score_candidates(pairs)
 
 
 def lsh_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
-             dims: int | None = None,
-             n_planes: int = 8, n_tables: int = 4, probe_radius: int = 2,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             q_id: str = "query_id", q_vec: str = "q_vec") -> DataFrame:
+             n_planes: int = 8, n_tables: int = 4,
+             probe_radius: int = 2) -> DataFrame:
     """Approximate top-k: random-hyperplane buckets, scored within-bucket.
 
     n_tables independent hash tables (seeded deterministically) union
@@ -518,24 +507,20 @@ def lsh_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
     tables, never corpus².
 
     The in-memory corpus is the relation write_ann_index would persist
-    (_lsh_postings), probed by lsh_topk_indexed itself — one probe path
-    for both. ``dims=None`` (default) probes the vector width from the
-    data.
+    (_lsh_postings), probed by the scored join lsh_topk_indexed runs —
+    one probe path for both, hashing at the corpus's measured width.
     """
-    emb = valid_vectors(emb, vec_col)
-    if dims is None:
-        dims = _probe_dims(emb, vec_col)
-    h = hyperplane_buckets_udf(dims, n_planes, n_tables)
-    return lsh_topk_indexed(
-        _lsh_postings(emb, h, id_col, vec_col), queries, k, dims=dims,
-        n_planes=n_planes, n_tables=n_tables, seed0=7,
-        probe_radius=probe_radius, id_col=id_col, vec_col=vec_col,
-        q_id=q_id, q_vec=q_vec)
+    emb = valid_vectors(emb)
+    h = hyperplane_buckets_udf(_probe_dims(emb, "embedding"), n_planes,
+                               n_tables)
+    return _topk_by_query(
+        _lsh_scored(_lsh_postings(emb, h, "vec_id", "embedding"),
+                    valid_vectors(queries, "q_vec"), h, n_planes,
+                    probe_radius), k)
 
 
-def write_ann_index(emb: DataFrame, path: str, dims: int | None = None,
-                    n_planes: int = 8, n_tables: int = 4, seed0: int = 7,
-                    id_col: str = "vec_id", vec_col: str = "embedding") -> None:
+def write_ann_index(emb: DataFrame, path: str, n_planes: int = 8,
+                    n_tables: int = 4) -> None:
     """Persist the LSH index as a partitioned parquet relation — the
     Spark-first analog of the reference's on-disk graph index
     (GraphSerializer.cs writes node pages; SeekableGraphReader.cs seeks
@@ -543,15 +528,15 @@ def write_ann_index(emb: DataFrame, path: str, dims: int | None = None,
     is (tbl, bucket, id, vector) partitioned by tbl and sorted by bucket
     within files, so a probe reads only its table's directory and skips
     row groups via bucket min/max statistics — seek-equivalent I/O with
-    zero custom file format. ``dims=None`` probes the vector width; the
-    reader side must hash queries with the SAME dims/planes/seed.
+    zero custom file format. The hyperplanes take the probed vector
+    width and :data:`LSH_SEED0`; the reader must pass the same
+    ``n_planes``/``n_tables``.
     """
-    emb = valid_vectors(emb, vec_col)
-    if dims is None:
-        dims = _probe_dims(emb, vec_col)
-    h = hyperplane_buckets_udf(dims, n_planes, n_tables, seed0)
+    emb = valid_vectors(emb)
+    h = hyperplane_buckets_udf(_probe_dims(emb, "embedding"), n_planes,
+                               n_tables)
     (
-        _lsh_postings(emb, h, id_col, vec_col)
+        _lsh_postings(emb, h, "vec_id", "embedding")
         .repartition("tbl")
         .sortWithinPartitions("bucket")
         .write.mode("overwrite").partitionBy("tbl").parquet(path)
@@ -564,29 +549,23 @@ def read_ann_index(spark, path: str) -> DataFrame:
 
 
 def lsh_topk_indexed(index: DataFrame, queries: DataFrame, k: int = 10,
-                     dims: int | None = None, n_planes: int = 8,
-                     n_tables: int = 4,
-                     seed0: int = 7, probe_radius: int = 2,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     q_id: str = "query_id", q_vec: str = "q_vec") -> DataFrame:
-    """Top-k probe of an LSH postings relation — a persisted index
-    (read_ann_index) or lsh_topk's in-memory one: queries hash with
-    the same seeds (including the multi-probe ball), and the
-    (tbl, bucket) equi-join prunes a stored scan to the probed
-    partitions/row groups. ``dims=None`` probes the query width — it
-    must equal the width the index was written with."""
-    queries = valid_vectors(queries, q_vec)
-    if dims is None:
-        dims = _probe_dims(queries, q_vec)
-    h = hyperplane_buckets_udf(dims, n_planes, n_tables, seed0)
+                     n_planes: int = 8, n_tables: int = 4,
+                     probe_radius: int = 2) -> DataFrame:
+    """Top-k probe of a persisted LSH index (read_ann_index): queries
+    hash with the store's hyperplane family (:data:`LSH_SEED0`, at the
+    queries' measured width) and expand their multi-probe ball, and the
+    (tbl, bucket) equi-join prunes the stored scan to the probed
+    partitions/row groups. ``n_planes``/``n_tables`` must match the
+    write."""
+    queries = valid_vectors(queries, "q_vec")
+    h = hyperplane_buckets_udf(_probe_dims(queries, "q_vec"), n_planes,
+                               n_tables)
     return _topk_by_query(
-        _lsh_scored(index, queries, h, n_planes, probe_radius,
-                    id_col, vec_col, q_id, q_vec), k, q_id)
+        _lsh_scored(index, queries, h, n_planes, probe_radius), k)
 
 
 def _train_ivf_centroids(emb: DataFrame, n_cells: int,
-                         sample_cap: int, seed: int,
-                         id_col: str, vec_col: str) -> np.ndarray:
+                         sample_cap: int, seed: int) -> np.ndarray:
     """Spherical k-means coarse quantizer on a deterministic sample.
 
     The sample is a hash-THRESHOLD subset: keep rows whose
@@ -601,18 +580,17 @@ def _train_ivf_centroids(emb: DataFrame, n_cells: int,
     iterations run in numpy on unit vectors (assign by dot, re-mean,
     re-normalise); empty cells re-seed deterministically.
     """
-    _est, n_rows, _d = corpus_bytes_estimate(
-        emb, id_col, vec_col, ceiling_bytes=BROADCAST_CEILING_BYTES)
-    sampled = emb.select(id_col, vec_col)
+    _est, n_rows, _d = corpus_bytes_estimate(emb, BROADCAST_CEILING_BYTES)
+    sampled = emb.select("vec_id", "embedding")
     if n_rows > sample_cap:
         m = 1 << 20
         keep = min(m, int(m * 1.1 * sample_cap / n_rows) + 1)
         sampled = sampled.filter(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(m)) < keep)
+            F.pmod(F.xxhash64(F.col("vec_id")), F.lit(m)) < keep)
     # id-sort the driver-sized frame so the seeded k-means init sees the
     # same row order whatever the scan's partitioning produced
-    sample = sampled.toPandas().sort_values(id_col).reset_index(drop=True)
-    m = np.array([np.asarray(v, dtype=np.float64) for v in sample[vec_col]])
+    sample = sampled.toPandas().sort_values("vec_id").reset_index(drop=True)
+    m = np.array([np.asarray(v, dtype=np.float64) for v in sample["embedding"]])
     norms = np.linalg.norm(m, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     u = m / norms
@@ -658,40 +636,35 @@ def _ivf_probe_udf(cent: np.ndarray, probe_n: int):
     return probe_cells
 
 
-def _ivf_entries(emb: DataFrame, cent: np.ndarray, id_col: str,
-                 vec_col: str) -> DataFrame:
-    """The IVF store's relation: (id, vector, cell) — what
+def _ivf_entries(emb: DataFrame, cent: np.ndarray) -> DataFrame:
+    """The IVF store's relation: (vec_id, embedding, cell) — what
     write_ivf_index persists (partitioned by the int cell) and what
     ann_topk_ivf probes in memory."""
     return emb.select(
-        F.col(id_col), F.col(vec_col),
-        _ivf_cell_udf(cent)(F.col(vec_col)).cast("int").alias("cell"))
+        "vec_id", "embedding",
+        _ivf_cell_udf(cent)(F.col("embedding")).cast("int").alias("cell"))
 
 
-def _ivf_probes(queries: DataFrame, cent: np.ndarray, n_probe: int,
-                q_id: str, q_vec: str) -> DataFrame:
-    """Query side: one (query, vector, cell) row per probed cell."""
+def _ivf_probes(queries: DataFrame, cent: np.ndarray,
+                n_probe: int) -> DataFrame:
+    """Query side: one (query_id, q_vec, cell) row per probed cell."""
     probe_n = min(n_probe, len(cent))
     return queries.select(
-        F.col(q_id), F.col(q_vec),
-        F.explode(_ivf_probe_udf(cent, probe_n)(F.col(q_vec))).alias("cell"),
+        "query_id", "q_vec",
+        F.explode(_ivf_probe_udf(cent, probe_n)(F.col("q_vec"))).alias("cell"),
     ).withColumn("cell", F.col("cell").cast("int"))
 
 
-def _ivf_scored(entries: DataFrame, qb: DataFrame, id_col: str,
-                vec_col: str, q_id: str, q_vec: str) -> DataFrame:
+def _ivf_scored(entries: DataFrame, qb: DataFrame) -> DataFrame:
     """The IVF probe: broadcast the probed cells, equi-join the entries
     on cell, score exactly. A vector sits in one cell and a query's
     probed cells are distinct, so no pair repeats."""
-    return _score_candidates(entries.join(broadcast(qb), "cell"),
-                             id_col, vec_col, q_id, q_vec)
+    return _score_candidates(entries.join(broadcast(qb), "cell"))
 
 
 def ann_topk_ivf(emb: DataFrame, queries: DataFrame, k: int = 10,
                  n_cells: int = 64, n_probe: int = 8,
-                 sample_cap: int = 100_000, seed: int = 33,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 q_id: str = "query_id", q_vec: str = "q_vec") -> DataFrame:
+                 sample_cap: int = 100_000, seed: int = 33) -> DataFrame:
     """IVF (inverted-file) approximate top-k — the clustered scale path
     beside the hyperplane LSH one.
 
@@ -710,14 +683,12 @@ def ann_topk_ivf(emb: DataFrame, queries: DataFrame, k: int = 10,
     has no directories to repay).
     n_probe = n_cells degrades gracefully to exact brute force (tested).
     """
-    emb = valid_vectors(emb, vec_col)
-    queries = valid_vectors(queries, q_vec)
-    cent = _train_ivf_centroids(emb, n_cells, sample_cap, seed,
-                                id_col, vec_col)
+    emb = valid_vectors(emb)
+    queries = valid_vectors(queries, "q_vec")
+    cent = _train_ivf_centroids(emb, n_cells, sample_cap, seed)
     return _topk_by_query(
-        _ivf_scored(_ivf_entries(emb, cent, id_col, vec_col),
-                    _ivf_probes(queries, cent, n_probe, q_id, q_vec),
-                    id_col, vec_col, q_id, q_vec), k, q_id)
+        _ivf_scored(_ivf_entries(emb, cent),
+                    _ivf_probes(queries, cent, n_probe)), k)
 
 
 def knn_classify(emb: DataFrame, k: int = 10) -> DataFrame:
@@ -949,9 +920,7 @@ def label_centroids_oracle() -> str:
 
 
 def closest_match(emb: DataFrame, queries: DataFrame,
-                  fold_angle: float = FOLD_ANGLE,
-                  id_col: str = "vec_id", vec_col: str = "embedding",
-                  q_id: str = "query_id", q_vec: str = "q_vec") -> DataFrame:
+                  fold_angle: float = FOLD_ANGLE) -> DataFrame:
     """The single best hit per query, with the FoldAngle acceptance
     gate reported as a flag (GraphOptions.cs FoldAngle=0.55).
 
@@ -963,14 +932,13 @@ def closest_match(emb: DataFrame, queries: DataFrame,
     that cheaper approximate descent is the LSH/IVF candidate route
     (ann_topk_lsh / ann_topk_ivf), where the recall trade is measured
     instead of implicit."""
-    best = brute_topk(emb, queries, k=1, id_col=id_col, vec_col=vec_col,
-                      q_id=q_id, q_vec=q_vec)
+    best = brute_topk(emb, queries, k=1)
     return best.select(
-        F.col(q_id),
+        F.col("query_id"),
         F.col("neighbor_id").alias("best_id"),
         F.col("score"),
         (F.col("score") > fold_angle).alias("above_fold"),
-    ).orderBy(q_id)
+    ).orderBy("query_id")
 
 
 def closest_match_oracle(fold_angle: float = FOLD_ANGLE, n_queries: int = 5) -> str:
@@ -996,8 +964,7 @@ def closest_match_oracle(fold_angle: float = FOLD_ANGLE, n_queries: int = 5) -> 
 # --- E12: product-quantization ANN (ADC + exact rerank) -----------------------
 
 def _train_pq_codebooks(emb: DataFrame, m_sub: int, n_codes: int,
-                        dims: int | None, sample_cap: int, seed: int,
-                        id_col: str, vec_col: str) -> np.ndarray:
+                        sample_cap: int, seed: int) -> np.ndarray:
     """(m_sub, n_codes, dims/m_sub) PQ codebooks: independent L2 k-means
     per subspace over L2-normalised corpus vectors, trained on the same
     deterministic hash-threshold sample the IVF trainer uses (a pure
@@ -1007,22 +974,19 @@ def _train_pq_codebooks(emb: DataFrame, m_sub: int, n_codes: int,
     matmul per subspace; empty codes re-seed deterministically.
 
     ONE stats probe (corpus_bytes_estimate, memoized per plan) serves
-    both the sample gate and ``dims=None`` (the probed width), and
-    ``m_sub`` must divide the width — checked before any sample ships."""
-    _est, n_rows, est_dims = corpus_bytes_estimate(
-        emb, id_col, vec_col, ceiling_bytes=BROADCAST_CEILING_BYTES)
-    if dims is None:
-        dims = est_dims
+    both the sample gate and the vector width, and ``m_sub`` must
+    divide the width — checked before any sample ships."""
+    _est, n_rows, dims = corpus_bytes_estimate(emb, BROADCAST_CEILING_BYTES)
     if m_sub <= 0 or dims % m_sub != 0:
         raise ValueError(f"m_sub={m_sub} must divide the vector width {dims}")
-    sampled = emb.select(id_col, vec_col)
+    sampled = emb.select("vec_id", "embedding")
     if n_rows > sample_cap:
         mm = 1 << 20
         keep = min(mm, int(mm * 1.1 * sample_cap / n_rows) + 1)
         sampled = sampled.filter(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(mm)) < keep)
-    sample = sampled.toPandas().sort_values(id_col).reset_index(drop=True)
-    m = np.array([np.asarray(v, dtype=np.float64) for v in sample[vec_col]])
+            F.pmod(F.xxhash64(F.col("vec_id")), F.lit(mm)) < keep)
+    sample = sampled.toPandas().sort_values("vec_id").reset_index(drop=True)
+    m = np.array([np.asarray(v, dtype=np.float64) for v in sample["embedding"]])
     norms = np.linalg.norm(m, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     u = m / norms
@@ -1046,10 +1010,7 @@ def _train_pq_codebooks(emb: DataFrame, m_sub: int, n_codes: int,
 
 def ann_topk_pq(emb: DataFrame, queries: DataFrame, k: int = 10,
                 m_sub: int = 8, n_codes: int = 16, rerank: int | None = 100,
-                dims: int | None = None, sample_cap: int = 100_000,
-                seed: int = 51,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                q_id: str = "query_id", q_vec: str = "q_vec") -> DataFrame:
+                sample_cap: int = 100_000, seed: int = 51) -> DataFrame:
     """Product-quantization ANN: asymmetric-distance (ADC) candidate
     ranking over an m_sub-byte code per vector, exact cosine rerank of
     the top ``rerank`` candidates per query.
@@ -1081,14 +1042,11 @@ def ann_topk_pq(emb: DataFrame, queries: DataFrame, k: int = 10,
        about PQ, which is why the oracle entry uses a finite rerank.
        Lean-rerank recall is pinned in tests/test_ann.py.
     """
-    emb = valid_vectors(emb, vec_col)
-    queries = valid_vectors(queries, q_vec)
-    books = _train_pq_codebooks(emb, m_sub, n_codes, dims, sample_cap, seed,
-                                id_col, vec_col)
-    encoded = emb.select(
-        F.col(id_col), _pq_encode_udf(books)(F.col(vec_col)).alias("codes"))
-    return _pq_adc_topk(encoded, books, queries, emb, k, rerank,
-                        id_col, vec_col, q_id, q_vec)
+    emb = valid_vectors(emb)
+    queries = valid_vectors(queries, "q_vec")
+    books = _train_pq_codebooks(emb, m_sub, n_codes, sample_cap, seed)
+    return _pq_adc_topk(_pq_codes(emb, books), books, queries, emb, k,
+                        rerank)
 
 
 def _pq_encode_udf(books: np.ndarray):
@@ -1111,9 +1069,15 @@ def _pq_encode_udf(books: np.ndarray):
     return encode
 
 
+def _pq_codes(emb: DataFrame, books: np.ndarray) -> DataFrame:
+    """The PQ store's codes relation: (vec_id, codes) — what
+    write_pq_index persists and ann_topk_pq scans in memory."""
+    return emb.select(
+        "vec_id", _pq_encode_udf(books)(F.col("embedding")).alias("codes"))
+
+
 def _pq_adc_topk(encoded: DataFrame, books: np.ndarray, queries: DataFrame,
-                 emb: DataFrame, k: int, rerank: int | None,
-                 id_col: str, vec_col: str, q_id: str, q_vec: str) -> DataFrame:
+                 emb: DataFrame, k: int, rerank: int | None) -> DataFrame:
     """Shared ADC + exact-rerank tail: used by ann_topk_pq (fresh
     encode) and pq_topk_indexed (codes read from a persisted index)."""
     m_sub, n_codes, d_sub = books.shape
@@ -1128,7 +1092,7 @@ def _pq_adc_topk(encoded: DataFrame, books: np.ndarray, queries: DataFrame,
         lut = np.einsum("bmd,mcd->bmc", u, books).reshape(len(m), -1)
         return pd.Series(list(lut))
 
-    qtab = queries.select(F.col(q_id), query_lut(F.col(q_vec)).alias("lut"))
+    qtab = queries.select("query_id", query_lut(F.col("q_vec")).alias("lut"))
     adc = F.aggregate(
         F.sequence(F.lit(0), F.lit(m_sub - 1)),
         F.lit(0.0),
@@ -1138,32 +1102,31 @@ def _pq_adc_topk(encoded: DataFrame, books: np.ndarray, queries: DataFrame,
             .cast("int")),
     )
     adc_scored = (
-        encoded.join(broadcast(qtab), F.col(id_col) != F.col(q_id))
-        .select(F.col(q_id), F.col(id_col).alias("neighbor_id"),
+        encoded.join(broadcast(qtab), F.col("vec_id") != F.col("query_id"))
+        .select("query_id", F.col("vec_id").alias("neighbor_id"),
                 adc.alias("adc_score"))
     )
     if rerank is not None:
-        wa = Window.partitionBy(q_id).orderBy(
+        wa = Window.partitionBy("query_id").orderBy(
             F.col("adc_score").desc(), F.col("neighbor_id"))
         adc_scored = (
             adc_scored.withColumn("arn", F.row_number().over(wa))
             .filter(F.col("arn") <= rerank)
         )
-    cand = adc_scored.select(q_id, "neighbor_id")
+    cand = adc_scored.select("query_id", "neighbor_id")
     rescored = (
-        cand.join(emb.select(F.col(id_col).alias("neighbor_id"),
-                             F.col(vec_col).alias("n_vec")), "neighbor_id")
-        .join(broadcast(queries.select(q_id, q_vec)), q_id)
-        .select(F.col(q_id), F.col("neighbor_id"),
-                V.cosine_gated("n_vec", q_vec).alias("score"))
+        cand.join(emb.select(F.col("vec_id").alias("neighbor_id"),
+                             F.col("embedding").alias("n_vec")), "neighbor_id")
+        .join(broadcast(queries.select("query_id", "q_vec")), "query_id")
+        .select("query_id", "neighbor_id",
+                V.cosine_gated("n_vec", "q_vec").alias("score"))
     )
-    return _topk_by_query(rescored, k, q_id)
+    return _topk_by_query(rescored, k)
 
 
 def write_pq_index(emb: DataFrame, path: str, m_sub: int = 8,
-                   n_codes: int = 16, dims: int | None = None,
-                   sample_cap: int = 100_000, seed: int = 51,
-                   id_col: str = "vec_id", vec_col: str = "embedding") -> None:
+                   n_codes: int = 16, sample_cap: int = 100_000,
+                   seed: int = 51) -> None:
     """Persist a PQ index: ``{path}/codes`` holds (id, m_sub code ids) —
     the compressed relation the candidate scan reads (~m_sub bytes of
     payload per vector instead of 4·dims) — and ``{path}/codebooks``
@@ -1174,17 +1137,14 @@ def write_pq_index(emb: DataFrame, path: str, m_sub: int = 8,
     hash-threshold sample, seeded k-means).
     The raw-vector corpus stays wherever it lives — the exact rerank
     joins it back by id at query time."""
-    emb = valid_vectors(emb, vec_col)
-    books = _train_pq_codebooks(emb, m_sub, n_codes, dims, sample_cap, seed,
-                                id_col, vec_col)
+    emb = valid_vectors(emb)
+    books = _train_pq_codebooks(emb, m_sub, n_codes, sample_cap, seed)
     spark = emb.sparkSession
     rows = [(int(mi), int(c), [float(x) for x in books[mi, c]])
             for mi in range(books.shape[0]) for c in range(books.shape[1])]
     spark.createDataFrame(rows, "m int, c int, centroid array<double>") \
         .coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
-    emb.select(F.col(id_col),
-               _pq_encode_udf(books)(F.col(vec_col)).alias("codes")) \
-        .write.mode("overwrite").parquet(f"{path}/codes")
+    _pq_codes(emb, books).write.mode("overwrite").parquet(f"{path}/codes")
 
 
 def read_pq_index(spark, path: str):
@@ -1200,16 +1160,14 @@ def read_pq_index(spark, path: str):
 
 
 def pq_topk_indexed(codes: DataFrame, books: np.ndarray, queries: DataFrame,
-                    emb: DataFrame, k: int = 10, rerank: int | None = 100,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    q_id: str = "query_id", q_vec: str = "q_vec") -> DataFrame:
+                    emb: DataFrame, k: int = 10,
+                    rerank: int | None = 100) -> DataFrame:
     """ann_topk_pq against a persisted index: the ADC candidate scan
     reads ONLY the compressed codes relation; ``emb`` (the raw corpus)
     is touched just for the exact rerank of the surviving candidates.
     Identical output to ann_topk_pq with the same codebooks."""
-    return _pq_adc_topk(codes, books, valid_vectors(queries, q_vec),
-                        valid_vectors(emb, vec_col), k, rerank,
-                        id_col, vec_col, q_id, q_vec)
+    return _pq_adc_topk(codes, books, valid_vectors(queries, "q_vec"),
+                        valid_vectors(emb), k, rerank)
 
 
 # --- recall / cost report (r6) ------------------------------------------------
@@ -1227,10 +1185,7 @@ ANN_REPORT_CONFIGS = (
 
 
 def ann_recall_report(emb: DataFrame, queries: DataFrame,
-                      configs=ANN_REPORT_CONFIGS, k: int = 10,
-                      id_col: str = "vec_id", vec_col: str = "embedding",
-                      q_id: str = "query_id",
-                      q_vec: str = "q_vec") -> DataFrame:
+                      configs=ANN_REPORT_CONFIGS, k: int = 10) -> DataFrame:
     """Measured recall@k and candidate-scan cost for ANN operating
     points vs exact brute force — the eyes-open trade table a 100 TB
     operator reads before picking a NON-complete configuration (the
@@ -1253,9 +1208,9 @@ def ann_recall_report(emb: DataFrame, queries: DataFrame,
     config) — every job bounded by the config's own candidates; the
     collected report is |configs| rows of scalars.
     """
-    emb = valid_vectors(emb, vec_col)
-    queries = valid_vectors(queries, q_vec)
-    dims = _probe_dims(emb, vec_col)
+    emb = valid_vectors(emb)
+    queries = valid_vectors(queries, "q_vec")
+    dims = _probe_dims(emb, "embedding")
     n_corpus = emb.count()
     n_queries = queries.count()
     exhaustive = n_queries * max(0, n_corpus - 1)
@@ -1263,11 +1218,10 @@ def ann_recall_report(emb: DataFrame, queries: DataFrame,
     def pair_set(df: DataFrame) -> dict:
         by_q: dict = {}
         for r in df.collect():
-            by_q.setdefault(r[q_id], set()).add(r["neighbor_id"])
+            by_q.setdefault(r["query_id"], set()).add(r["neighbor_id"])
         return by_q
 
-    exact = pair_set(brute_topk(emb, queries, k=k, id_col=id_col,
-                                vec_col=vec_col, q_id=q_id, q_vec=q_vec))
+    exact = pair_set(brute_topk(emb, queries, k=k))
 
     def recall_of(approx: dict) -> float:
         if not exact:
@@ -1284,28 +1238,23 @@ def ann_recall_report(emb: DataFrame, queries: DataFrame,
         method = cfg.pop("method")
         if method == "pq":
             n_cand = n_queries * min(cfg["rerank"], max(0, n_corpus - 1))
-            top = ann_topk_pq(
-                emb, queries, k=k, dims=dims, id_col=id_col,
-                vec_col=vec_col, q_id=q_id, q_vec=q_vec, **cfg)
+            top = ann_topk_pq(emb, queries, k=k, **cfg)
         else:
             if method == "lsh":
                 h = hyperplane_buckets_udf(dims, cfg["n_planes"],
                                            cfg["n_tables"])
                 scored = _lsh_scored(
-                    _lsh_postings(emb, h, id_col, vec_col), queries, h,
-                    cfg["n_planes"], cfg["probe_radius"],
-                    id_col, vec_col, q_id, q_vec)
+                    _lsh_postings(emb, h, "vec_id", "embedding"), queries,
+                    h, cfg["n_planes"], cfg["probe_radius"])
             elif method == "ivf":
-                cent = _train_ivf_centroids(
-                    emb, cfg["n_cells"], 100_000, 33, id_col, vec_col)
-                scored = _ivf_scored(
-                    _ivf_entries(emb, cent, id_col, vec_col),
-                    _ivf_probes(queries, cent, cfg["n_probe"], q_id, q_vec),
-                    id_col, vec_col, q_id, q_vec)
+                cent = _train_ivf_centroids(emb, cfg["n_cells"], 100_000, 33)
+                scored = _ivf_scored(_ivf_entries(emb, cent),
+                                     _ivf_probes(queries, cent,
+                                                 cfg["n_probe"]))
             else:
                 raise ValueError(f"unknown ANN method {method!r}")
             n_cand = scored.count()
-            top = _topk_by_query(scored, k, q_id)
+            top = _topk_by_query(scored, k)
         approx = pair_set(top)
         cfg_str = ",".join(f"{kk}={vv}" for kk, vv in sorted(cfg.items()))
         rows.append((
@@ -1325,9 +1274,7 @@ def ann_recall_report(emb: DataFrame, queries: DataFrame,
 # --- persisted IVF index (r6) -------------------------------------------------
 
 def write_ivf_index(emb: DataFrame, path: str, n_cells: int = 64,
-                    sample_cap: int = 100_000,
-                    seed: int = 33, id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> None:
+                    sample_cap: int = 100_000, seed: int = 33) -> None:
     """Persist an IVF index: ``{path}/centroids`` = (cell, centroid)
     — the trained spherical-k-means cells — and ``{path}/entries`` =
     (id, vector, cell) PARTITIONED BY cell, so a probe reads only its
@@ -1337,16 +1284,15 @@ def write_ivf_index(emb: DataFrame, path: str, n_cells: int = 64,
     the relation ann_topk_ivf probes in memory — so probing a stored
     index at the same parameters is row-identical to the in-memory
     operator (pinned)."""
-    emb = valid_vectors(emb, vec_col)
-    cent = _train_ivf_centroids(emb, n_cells, sample_cap, seed,
-                                id_col, vec_col)
+    emb = valid_vectors(emb)
+    cent = _train_ivf_centroids(emb, n_cells, sample_cap, seed)
     spark = emb.sparkSession
     spark.createDataFrame(
         [(i, [float(x) for x in cent[i]]) for i in range(len(cent))],
         "cell int, centroid array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
     (
-        _ivf_entries(emb, cent, id_col, vec_col)
+        _ivf_entries(emb, cent)
         .repartition("cell")
         .write.mode("overwrite").partitionBy("cell")
         .parquet(f"{path}/entries")
@@ -1364,10 +1310,8 @@ def read_ivf_index(spark, path: str):
 
 
 def ivf_topk_indexed(entries: DataFrame, cent: np.ndarray,
-                     queries: DataFrame, k: int = 10, n_probe: int = 8,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     q_id: str = "query_id",
-                     q_vec: str = "q_vec") -> DataFrame:
+                     queries: DataFrame, k: int = 10,
+                     n_probe: int = 8) -> DataFrame:
     """ann_topk_ivf's probe against a persisted index: each query
     expands to its n_probe nearest stored centroids, the probed cell
     ids (≤ |queries| × n_probe scalars, one collect job) prune the
@@ -1375,17 +1319,13 @@ def ivf_topk_indexed(entries: DataFrame, cent: np.ndarray,
     cell-join → exact score → top-k step does the rest — so the
     output is ann_topk_ivf's at the same training parameters;
     n_probe = n_cells still degrades to brute force."""
-    queries = valid_vectors(queries, q_vec)
-    qb = _ivf_probes(queries, cent, n_probe, q_id, q_vec)
+    qb = _ivf_probes(valid_vectors(queries, "q_vec"), cent, n_probe)
     probed = [r["cell"] for r in qb.select("cell").distinct().collect()]
     return _topk_by_query(
-        _ivf_scored(entries.filter(F.col("cell").isin(probed)), qb,
-                    id_col, vec_col, q_id, q_vec), k, q_id)
+        _ivf_scored(entries.filter(F.col("cell").isin(probed)), qb), k)
 
 
-def append_ivf_index(emb_new: DataFrame, path: str,
-                     id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> None:
+def append_ivf_index(emb_new: DataFrame, path: str) -> None:
     """Merge a NEW batch of vectors into a stored IVF index — the
     continuous-ingest maintenance shape (append_text_index /
     append_dedup_index's sibling for the vector store): a crawl's
@@ -1412,18 +1352,17 @@ def append_ivf_index(emb_new: DataFrame, path: str,
     if not len(cent):
         raise ValueError(f"{path}: empty centroid relation — not an "
                          "IVF store")
-    new = valid_vectors(emb_new, vec_col).select(
-        F.col(id_col), F.col(vec_col))
+    new = valid_vectors(emb_new).select("vec_id", "embedding")
     dup = (
-        new.select(F.col(id_col))
-        .join(entries.select(F.col(id_col)), id_col, "inner")
+        new.select("vec_id")
+        .join(entries.select("vec_id"), "vec_id", "inner")
         .limit(1).collect()
     )
     if dup:
         raise ValueError(
             f"append_ivf_index: id {dup[0][0]} already stored in "
             f"{path} — appending would double its entry")
-    assigned = _ivf_entries(new, cent, id_col, vec_col)
+    assigned = _ivf_entries(new, cent)
     # eagerly materialise before writing into the directory tree the
     # plan is still lazily reading from (the append_text_index lesson)
     assigned = assigned.localCheckpoint()
@@ -1434,9 +1373,7 @@ def append_ivf_index(emb_new: DataFrame, path: str,
     )
 
 
-def append_pq_index(emb_new: DataFrame, path: str,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> None:
+def append_pq_index(emb_new: DataFrame, path: str) -> None:
     """Merge a NEW batch of vectors into a stored PQ index: encode the
     batch with the STORED codebooks (the exact _pq_encode_udf kernel
     the writer used) and append the code rows — append_ivf_index's
@@ -1449,65 +1386,54 @@ def append_pq_index(emb_new: DataFrame, path: str,
     """
     spark = emb_new.sparkSession
     codes, books = read_pq_index(spark, path)
-    new = valid_vectors(emb_new, vec_col).select(
-        F.col(id_col), F.col(vec_col))
+    new = valid_vectors(emb_new).select("vec_id", "embedding")
     dup = (
-        new.select(F.col(id_col))
-        .join(codes.select(F.col(id_col)), id_col, "inner")
+        new.select("vec_id")
+        .join(codes.select("vec_id"), "vec_id", "inner")
         .limit(1).collect()
     )
     if dup:
         raise ValueError(
             f"append_pq_index: id {dup[0][0]} already coded in {path}")
-    (
-        new.select(F.col(id_col),
-                   _pq_encode_udf(books)(F.col(vec_col)).alias("codes"))
-        .write.mode("append").parquet(f"{path}/codes")
-    )
+    _pq_codes(new, books).write.mode("append").parquet(f"{path}/codes")
 
 
-def append_ann_index(emb_new: DataFrame, path: str,
-                     dims: int | None = None, n_planes: int = 8,
-                     n_tables: int = 4, seed0: int = 7,
-                     id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> None:
+def append_ann_index(emb_new: DataFrame, path: str, n_planes: int = 8,
+                     n_tables: int = 4) -> None:
     """Merge a NEW batch of vectors into a stored LSH index. The
-    hyperplanes are SEED-deterministic (no training state), so an
-    append with the writer's (dims, n_planes, n_tables, seed0) makes
-    the store relation-equal to a full write_ann_index over old ∪ new
-    — the strongest append contract of the four stores (pinned in
-    tests). The store is not self-describing (the reader passes the
-    same params — lsh_topk_indexed's existing contract), so the caller
-    MUST pass the write-time values; a mismatch would file the batch
-    under different hyperplanes. Duplicate ids raise. Existing tbl
-    partition files are never rewritten — only new files land.
+    hyperplanes are seed-deterministic (no training state: the stored
+    width and :data:`LSH_SEED0`), so an append with the writer's
+    (n_planes, n_tables) makes the store relation-equal to a full
+    write_ann_index over old ∪ new — the strongest append contract of
+    the four stores (pinned in tests). ``n_planes``/``n_tables`` must
+    match the write, as for lsh_topk_indexed; a mismatch would file the
+    batch under different hyperplanes. Duplicate ids raise. Existing
+    tbl partition files are never rewritten — only new files land.
     """
     spark = emb_new.sparkSession
     index = read_ann_index(spark, path)
-    # the store is not self-describing for (planes, tables, seed), but
-    # its WIDTH is observable: refuse a batch whose vectors differ from
-    # the stored width — a mismatched batch would hash under a different
+    # the store does not record (planes, tables), but its WIDTH is
+    # observable: refuse a batch whose vectors differ from the stored
+    # width — a mismatched batch would hash under a different
     # hyperplane family and become silently unfindable (review r6)
-    stored_dims = _probe_dims(index, vec_col)
-    new = valid_vectors(emb_new, vec_col)
-    batch_dims = _probe_dims(new, vec_col)
+    stored_dims = _probe_dims(index, "embedding")
+    new = valid_vectors(emb_new)
+    batch_dims = _probe_dims(new, "embedding")
     if batch_dims != stored_dims:
         raise ValueError(
             f"append_ann_index: batch vectors are {batch_dims}-wide but "
             f"{path} stores {stored_dims}-wide vectors")
-    if dims is None:
-        dims = stored_dims
     dup = (
-        new.select(F.col(id_col))
-        .join(index.select(F.col(id_col)).distinct(), id_col, "inner")
+        new.select("vec_id")
+        .join(index.select("vec_id").distinct(), "vec_id", "inner")
         .limit(1).collect()
     )
     if dup:
         raise ValueError(
             f"append_ann_index: id {dup[0][0]} already indexed in {path}")
-    h = hyperplane_buckets_udf(dims, n_planes, n_tables, seed0)
+    h = hyperplane_buckets_udf(stored_dims, n_planes, n_tables)
     (
-        _lsh_postings(new, h, id_col, vec_col)
+        _lsh_postings(new, h, "vec_id", "embedding")
         .repartition("tbl")
         .sortWithinPartitions("bucket")
         .write.mode("append").partitionBy("tbl").parquet(path)

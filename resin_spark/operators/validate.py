@@ -69,36 +69,33 @@ def _posting_compare(recomputed: DataFrame, stored: DataFrame,
     return row["missing"], row["extra"], row["unfindable"]
 
 
-def validate_ann_index(spark: SparkSession, path: str,
-                       dims: int | None = None, n_planes: int = 8,
-                       n_tables: int = 4, seed0: int = 7,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> DataFrame:
-    """Re-hash every stored vector with the index's own parameters and
-    assert its (tbl, bucket) posting exists — a stored vector whose
-    recomputed posting is missing would be unreachable by the very
-    self-probe GraphIndexValidator runs. Params must match the write;
-    a parameter mismatch shows up as mass posting mismatches, which is
-    the desired loud failure."""
+def validate_ann_index(spark: SparkSession, path: str, n_planes: int = 8,
+                       n_tables: int = 4) -> DataFrame:
+    """Re-hash every stored vector with the store's hyperplane family
+    (the stored width and similarity.LSH_SEED0) and assert its
+    (tbl, bucket) posting exists — a stored vector whose recomputed
+    posting is missing would be unreachable by the very self-probe
+    GraphIndexValidator runs. ``n_planes``/``n_tables`` must match the
+    write; a mismatch shows up as mass posting mismatches, which is the
+    desired loud failure."""
     from resin_spark.operators.similarity import (
         _lsh_postings, _probe_dims, hyperplane_buckets_udf, read_ann_index,
     )
 
     idx = read_ann_index(spark, path)
-    entries = idx.select(id_col, vec_col).distinct().localCheckpoint()
-    if dims is None:
-        dims = _probe_dims(entries, vec_col)
-    h = hyperplane_buckets_udf(dims, n_planes, n_tables, seed0)
-    recomputed = _lsh_postings(entries, h, id_col, vec_col)
-    stored = idx.select(id_col, F.col("tbl").cast("int").alias("tbl"),
+    entries = idx.select("vec_id", "embedding").distinct().localCheckpoint()
+    h = hyperplane_buckets_udf(_probe_dims(entries, "embedding"), n_planes,
+                               n_tables)
+    recomputed = _lsh_postings(entries, h, "vec_id", "embedding")
+    stored = idx.select("vec_id", F.col("tbl").cast("int").alias("tbl"),
                         "bucket")
     n_missing, n_extra, unfindable = _posting_compare(
-        recomputed, stored, [id_col, "tbl", "bucket"], id_col)
+        recomputed, stored, ["vec_id", "tbl", "bucket"], "vec_id")
     # per-id integrity in ONE pass over the stored relation: row fanout
     # (= n_tables postings per id) and vector consistency together
-    per_id = idx.groupBy(id_col).agg(
+    per_id = idx.groupBy("vec_id").agg(
         F.count(F.lit(1)).alias("np"),
-        F.count_distinct(F.col(vec_col)).alias("nv"),
+        F.count_distinct(F.col("embedding")).alias("nv"),
     )
     stats = per_id.agg(
         F.count(F.lit(1)).alias("n_entries"),
@@ -118,9 +115,7 @@ def validate_ann_index(spark: SparkSession, path: str,
 
 
 def validate_pq_index(spark: SparkSession, path: str,
-                      emb: DataFrame | None = None,
-                      id_col: str = "vec_id",
-                      vec_col: str = "embedding") -> DataFrame:
+                      emb: DataFrame | None = None) -> DataFrame:
     """Codebook grid completeness + code validity; with the raw corpus
     supplied, re-encode every vector and assert the stored codes match
     (the full "the index would reconstruct what I indexed" check)."""
@@ -135,7 +130,7 @@ def validate_pq_index(spark: SparkSession, path: str,
     bad_len = F.col("codes").isNull() | (F.size("codes") != int(m_sub))
     bad_rng = F.exists("codes", lambda c: c.isNull() | (c < 0)
                        | (c >= int(n_codes)))
-    per_id = codes.groupBy(id_col).agg(
+    per_id = codes.groupBy("vec_id").agg(
         F.count(F.lit(1)).alias("c"),
         _n(bad_len).alias("bl"),
         _n(F.when(bad_len, F.lit(False)).otherwise(bad_rng)).alias("br"),
@@ -156,14 +151,13 @@ def validate_pq_index(spark: SparkSession, path: str,
          not stats["bad_range"]),
     ]
     if emb is not None:
-        emb = valid_vectors(emb, vec_col)
-        reenc = emb.select(
-            F.col(id_col),
-            _pq_encode_udf(books)(F.col(vec_col)).alias("recodes"),
+        reenc = valid_vectors(emb).select(
+            "vec_id",
+            _pq_encode_udf(books)(F.col("embedding")).alias("recodes"),
         )
         row = (
             codes.withColumn("_c", F.lit(1))
-            .join(reenc.withColumn("_r", F.lit(1)), id_col, "full_outer")
+            .join(reenc.withColumn("_r", F.lit(1)), "vec_id", "full_outer")
             .agg(
                 _n(F.col("_c").isNotNull() & F.col("_r").isNotNull()
                    & ~F.col("codes").eqNullSafe(F.col("recodes"))).alias("mm"),

@@ -23,10 +23,8 @@ from resin_spark.operators import similarity as S
 
 
 def stream_ann_topk(spark: SparkSession, queries_parquet_dir: str,
-                    index_emb, k: int = 10, dims: int | None = None,
-                    n_planes: int = 8, n_tables: int = 4,
-                    probe_radius: int = 2, seed0: int = 7,
-                    id_col: str = "vec_id", vec_col: str = "embedding"):
+                    index_emb, k: int = 10, n_planes: int = 8,
+                    n_tables: int = 4, probe_radius: int = 2):
     """Streaming twin of :func:`similarity.lsh_topk`: query vectors
     arrive as a parquet file stream (columns ``vec_id, embedding``) and
     each micro-batch gets its top-k neighbors from a static corpus.
@@ -51,31 +49,27 @@ def stream_ann_topk(spark: SparkSession, queries_parquet_dir: str,
 
     Output (update mode): (query_id, neighbors array<struct<rank,
     neighbor_id, score>>) — ``score`` rounded to 9 decimals like the
-    batch path. ``dims=None`` (default) probes the corpus width, as
-    lsh_topk does.
+    batch path. The hyperplanes take the corpus's measured width, as
+    lsh_topk's do.
     """
-    if dims is None:
-        dims = S._probe_dims(index_emb, vec_col)
-    h = S.hyperplane_buckets_udf(dims, n_planes, n_tables, seed0)
-    idx = S._lsh_postings(index_emb, h, id_col, vec_col) \
+    h = S.hyperplane_buckets_udf(S._probe_dims(index_emb, "embedding"),
+                                 n_planes, n_tables)
+    idx = S._lsh_postings(index_emb, h, "vec_id", "embedding") \
         .localCheckpoint(eager=False)
-    qb = S._lsh_probes(_query_stream(spark, queries_parquet_dir, id_col,
-                                     vec_col),
-                       h, n_planes, probe_radius, "query_id", "q_vec")
+    qb = S._lsh_probes(_query_stream(spark, queries_parquet_dir), h,
+                       n_planes, probe_radius)
     pairs = qb.join(idx, on=["tbl", "bucket"]) \
-        .dropDuplicates(["query_id", id_col])
-    return _topk_update_agg(
-        S._score_candidates(pairs, id_col, vec_col, "query_id", "q_vec"), k)
+        .dropDuplicates(["query_id", "vec_id"])
+    return _topk_update_agg(S._score_candidates(pairs), k)
 
 
-def _query_stream(spark: SparkSession, queries_parquet_dir: str,
-                  id_col: str, vec_col: str):
+def _query_stream(spark: SparkSession, queries_parquet_dir: str):
     """The query file stream, one file per trigger, as the batch
     probes' (query_id, q_vec) side."""
     return (
         file_stream(spark, queries_parquet_dir)
-        .select(F.col(id_col).alias("query_id"),
-                F.col(vec_col).alias("q_vec"))
+        .select(F.col("vec_id").alias("query_id"),
+                F.col("embedding").alias("q_vec"))
     )
 
 
@@ -118,8 +112,7 @@ def _topk_update_agg(scored, k: int):
 
 
 def stream_ivf_topk(spark: SparkSession, queries_parquet_dir: str,
-                    index_path: str, k: int = 10, n_probe: int = 8,
-                    id_col: str = "vec_id", vec_col: str = "embedding"):
+                    index_path: str, k: int = 10, n_probe: int = 8):
     """Streaming twin of :func:`similarity.ivf_topk_indexed`: query
     vectors arrive as a parquet file stream and each micro-batch
     resolves against the PERSISTED IVF store (write_ivf_index) — the
@@ -138,9 +131,6 @@ def stream_ivf_topk(spark: SparkSession, queries_parquet_dir: str,
     """
     entries, cent = S.read_ivf_index(spark, index_path)
     entries = entries.localCheckpoint(eager=False)
-    qb = S._ivf_probes(_query_stream(spark, queries_parquet_dir, id_col,
-                                     vec_col),
-                       cent, n_probe, "query_id", "q_vec")
-    return _topk_update_agg(
-        S._score_candidates(qb.join(entries, "cell"), id_col, vec_col,
-                            "query_id", "q_vec"), k)
+    qb = S._ivf_probes(_query_stream(spark, queries_parquet_dir), cent,
+                       n_probe)
+    return _topk_update_agg(S._score_candidates(qb.join(entries, "cell")), k)

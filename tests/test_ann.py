@@ -187,10 +187,8 @@ def test_pq_lean_rerank_recall_and_exact_scores(spark):
 
 def test_pq_codebooks_deterministic(spark):
     emb = load_tables(spark, SF)["embeddings"]
-    b1 = similarity._train_pq_codebooks(emb, 8, 16, 64, 100_000, 51,
-                                        "vec_id", "embedding")
-    b2 = similarity._train_pq_codebooks(emb, 8, 16, 64, 100_000, 51,
-                                        "vec_id", "embedding")
+    b1 = similarity._train_pq_codebooks(emb, 8, 16, 100_000, 51)
+    b2 = similarity._train_pq_codebooks(emb, 8, 16, 100_000, 51)
     assert (b1 == b2).all()
 
 

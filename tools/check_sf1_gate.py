@@ -13,8 +13,10 @@ Usage:
   python tools/check_sf1_gate.py --write    # measure and REWRITE BASELINE_SF1.json
   python tools/check_sf1_gate.py <prefix..> # only entries matching a prefix
 
-Don't run concurrently with bench.py or another Spark job — both grab
-local[32] and the point of the sf1 tier is session-stable numbers.
+Don't run concurrently with bench.py or another Spark job — both build
+their session with get_spark, whose local[$SPARK_GRAFT_CPUS or *]
+master takes every core, and the point of the sf1 tier is
+session-stable numbers.
 index_validate is not gated here by design (I/O-dominated scratch
 writes; SCALING.md's r5 validator sweep). dedup_embedding's expectation
 carries the pair-volume adjudication (SCALING.md r10) — its gate
